@@ -386,30 +386,64 @@ _EARTH_R = 6378137.0  # reference src/rtree/distance.rs (WGS84 semi-major)
 
 
 def haversine(lon1, lat1, lon2, lat2):
-    """Great-circle distance in meters (reference src/rtree/distance.rs:84-114)."""
-    lon1, lat1, lon2, lat2 = (np.radians(np.asarray(a, np.float64)) for a in (lon1, lat1, lon2, lat2))
-    dlat = lat2 - lat1
-    dlon = lon2 - lon1
-    h = np.sin(dlat / 2) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2) ** 2
+    """Great-circle distance in meters (reference src/rtree/distance.rs:84-114).
+    Same term order as ``join.haversine_pair_col`` — coordinate
+    differences are taken in degrees — so numpy and Catalyst agree to
+    the last few bits, also for near-coincident points."""
+    lon1, lat1, lon2, lat2 = (np.asarray(a, np.float64) for a in (lon1, lat1, lon2, lat2))
+    h = (
+        np.sin(np.radians(lat2 - lat1) / 2) ** 2
+        + np.cos(np.radians(lat1)) * np.cos(np.radians(lat2)) * np.sin(np.radians(lon2 - lon1) / 2) ** 2
+    )
     return 2.0 * _EARTH_R * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0)))
 
 
-def _clamp_to_box(x, y, boxes):
-    cx = np.clip(x, boxes[:, 0], boxes[:, 2])
-    cy = np.clip(y, boxes[:, 1], boxes[:, 3])
-    return cx, cy
+def haversine_box(x, y, boxes: np.ndarray, far: bool = False) -> np.ndarray:
+    """Smallest (``far=True``: largest) haversine from (x, y) to any
+    point of each lon/lat box; ``x``/``y`` may be (n, 1) columns, which
+    broadcast to (n, len(boxes)). At a fixed latitude the distance grows
+    with the wrapped longitude gap, so the nearest (farthest) point lies
+    on the query's own meridian (its antipodal meridian) when the box
+    spans it, else on a longitude edge. Along a meridian the distance
+    has one minimum, at latitude atan2(sin lat_q, cos lat_q cos dlon),
+    and its maximum opposite that, so over the box's latitude band the
+    extreme is that latitude clamped to the band or a band edge. On a
+    point box every candidate is the point itself, so the bound equals
+    the point distance exactly."""
+    x = np.asarray(x, np.float64)
+    y = np.asarray(y, np.float64)
+    mnx, mny, mxx, mxy = boxes[:, 0], boxes[:, 1], boxes[:, 2], boxes[:, 3]
+    sin_q, cos_q = np.sin(np.radians(y)), np.cos(np.radians(y))
+    own = np.where(x > 0.0, x - 180.0, x + 180.0) if far else x
+    spans = (mnx <= own) & (own <= mxx)
+    pick = np.maximum if far else np.minimum
+    lons = (mnx, mxx, np.where(spans, own, mnx)) if far else (mnx, mxx)
+    best = None
+    for lon in lons:
+        crit = np.degrees(np.arctan2(sin_q, cos_q * np.cos(np.radians(lon - x))))
+        if far:
+            crit = np.where(crit > 0.0, crit - 180.0, crit + 180.0)
+        for lat in (np.clip(crit, mny, mxy), mny, mxy):
+            d = haversine(x, y, lon, lat)
+            best = d if best is None else pick(best, d)
+    if far:
+        return best
+    return np.where(spans, haversine(x, y, x, np.clip(y, mny, mxy)), best)
 
 
 def _metric_block(x: float, y: float, boxes: np.ndarray, metric: str) -> np.ndarray:
     """Distance from query point to each box (0 when inside) — the
     bbox lower bound used for pruning AND the exact leaf distance, since
     leaf boxes are the items (reference src/rtree/trait.rs:570-579 axis
-    distance; distance.rs:100-113 clamp-based haversine)."""
-    cx, cy = _clamp_to_box(x, y, boxes)
+    distance). Haversine boxes use the wrap-aware :func:`haversine_box`:
+    clamping the query into the box in degree space is no lower bound
+    across +-180 or off the box's latitude band."""
     if metric == "euclidean":
+        cx = np.clip(x, boxes[:, 0], boxes[:, 2])
+        cy = np.clip(y, boxes[:, 1], boxes[:, 3])
         return np.hypot(cx - x, cy - y)
     if metric == "haversine":
-        return haversine(x, y, cx, cy)
+        return haversine_box(x, y, boxes)
     raise ValueError(f"unknown metric {metric}")
 
 

@@ -108,53 +108,6 @@ def _side_stats(
     return (r["a"], r["b"], r["c"], r["d"], r["w"] or 0.0, r["h"] or 0.0)
 
 
-def _both_side_stats(
-    left: DataFrame, lcols, right: DataFrame, rcols, need_avg: bool
-) -> tuple[tuple, tuple]:
-    """Per-side stats for BOTH inputs in ONE job: tag each side, union,
-    groupBy the tag — halves the planner's up-front job count vs two
-    sequential ``_side_stats`` aggregates (identical per-side numbers)."""
-
-    def _norm(df, cols, tag):
-        mnx, mny, mxx, mxy = (F.col(c).cast("double") for c in cols)
-        return df.select(
-            mnx.alias("_mnx"),
-            mny.alias("_mny"),
-            mxx.alias("_mxx"),
-            mxy.alias("_mxy"),
-            F.lit(tag).alias("_side"),
-        )
-
-    aggs = [
-        F.min("_mnx").alias("a"),
-        F.min("_mny").alias("b"),
-        F.max("_mxx").alias("c"),
-        F.max("_mxy").alias("d"),
-    ]
-    if need_avg:
-        aggs += [
-            F.avg(F.col("_mxx") - F.col("_mnx")).alias("w"),
-            F.avg(F.col("_mxy") - F.col("_mny")).alias("h"),
-        ]
-    rows = {
-        r["_side"]: r
-        for r in _norm(left, lcols, 0)
-        .unionAll(_norm(right, rcols, 1))
-        .groupBy("_side")
-        .agg(*aggs)
-        .collect()
-    }
-
-    def _tup(r):
-        if r is None:  # empty side: neutral stats (same as _side_stats)
-            return (None, None, None, None, 0.0, 0.0)
-        if not need_avg:
-            return (r["a"], r["b"], r["c"], r["d"], 0.0, 0.0)
-        return (r["a"], r["b"], r["c"], r["d"], r["w"] or 0.0, r["h"] or 0.0)
-
-    return _tup(rows.get(0)), _tup(rows.get(1))
-
-
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's own driver-side size estimate of a frame (no job).
     None when the JVM call fails (estimate unavailable)."""
@@ -235,9 +188,7 @@ def spatial_join(
     if bounds is None or grid_level is None:
         # self-joins compute side stats once; two-sided inputs run one
         # small agg per side (a fused union+groupBy variant was A/B'd
-        # in r7 and lost ~0.1 s warm to extra codegen at bench scale —
-        # _both_side_stats remains available for high-job-latency
-        # clusters)
+        # in r7 and lost ~0.1 s warm to extra codegen at bench scale)
         same_side = left is right and left_cols == right_cols
         ls = _side_stats(left, left_cols, need_avg=grid_level is None)
         rs = ls if same_side else _side_stats(

@@ -242,148 +242,10 @@ def knn_geometry(
     return out.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(int(k))
 
 
+# at most this many lefts (a small left table, or the survivors of a
+# round) are answered by the per-slice index probe of :func:`_knn_probe`:
+# the lefts and their slice lists ride one broadcast
 CERT_UPFRONT_MAX_LEFTS = 65_536
-
-# fragment count for the tail-round salted two-stage top-k: each giant
-# left group is sorted as this many parallel fragments (stage A), then
-# the <= TAIL_SALT * k survivors per left merge in stage B. 64 keeps
-# every fragment sort comfortably sub-second at ~10^6-candidate lefts
-# while the stage-B input stays small (lefts * 64 * k rows max).
-TAIL_SALT = 64
-
-# levels to shift tail-round buckets FINER than the cell >= box
-# quantization (clamped at level 16): box/cell lands in (4, 16], i.e.
-# ~36-324 exploded cells per left — tightly covering the box so dense
-# cells are no longer swept whole. Post-refinement tail radii are small
-# enough that the per-bucket 2M exploded-row estimate cap (which
-# demotes a bucket to a partitioned join) keeps the broadcast bounded
-# even at the 65,536-left tail ceiling.
-TAIL_LVL_EXTRA = 4
-
-# tail ring-refinement fine grid: 2^TAIL_RING_EXTRA x finer cells than
-# the coarse density grid, counted ONLY over the tail neighborhoods
-# (the coarse-cellset semi join), so the near-singleton-group hazard of
-# a global fine grid never applies. Collect cap bounds driver memory.
-TAIL_RING_EXTRA = 4
-TAIL_RING_MAX_CELLS = 2_000_000
-
-# biggest per-left in-box candidate group a single window task sorts
-# comfortably; above it the tail top-k goes salted two-stage
-TAIL_SALT_MIN_GROUP = 65_536
-
-# a round is a TAIL round (driver-side cellset prefilter + fine-grid
-# ring refinement + finer bucket levels + salted two-stage top-k) when
-# this few lefts remain — matches the upfront-seeding bound, so the
-# small-left one-round path always gets its coarse ring radii refined.
-TAIL_MAX_LEFTS = CERT_UPFRONT_MAX_LEFTS
-
-
-def _sparse_ring_refine(
-    fx,
-    fy,
-    fcnt,
-    nc_f: int,
-    cell_f: float,
-    bounds: tuple[float, float, float, float],
-    px,
-    py,
-    r_old,
-    k: int,
-    metric: str,
-    r_floor: float,
-):
-    """Sparse-grid twin of :func:`_ring_certified_radii` for tail
-    survivors: per-left smallest Chebyshev ring j of FINE cells whose
-    box holds >= k counted rights, bounded by the box's farthest-corner
-    distance, returned as ``min(r_old, bound)`` — never looser than the
-    already-certified ``r_old``. The counts (fx, fy, fcnt) need only
-    cover each left's r_old box (the tail cellset region): missing
-    cells UNDERCOUNT, which inflates j and the bound, never breaks it
-    (the box still holds >= k real rights). Coarse-grid ring bounds are
-    the certified-radius overshoot hazard in person — a 0.7-degree cell
-    ring around a void next to a 0.2-degree city cluster certifies at
-    ~1 degree and its ball swallows the whole cluster (measured 137k
-    in-ball candidates per tail left, a 69M-pair window sort at the 32M
-    probe); 16x finer cells certify at ~the true kth-NN scale.
-
-    Returns ``(radii, boxcnt)`` where ``boxcnt[i]`` is an EXACT count
-    of counted rights inside left i's final-radius box (the region
-    covers every r_old box and the final box is a subset, so nothing
-    is missed) — or ``2**62`` where refinement could not fire. The
-    caller uses ``boxcnt.max()`` to decide whether any tail group is
-    big enough to need the salted two-stage top-k."""
-    import numpy as np
-
-    px = np.asarray(px, np.float64)
-    py = np.asarray(py, np.float64)
-    r_old = np.asarray(r_old, np.float64)
-    n = len(px)
-    out = r_old.copy()
-    boxcnt = np.full(n, 2**62, np.int64)
-    if n == 0 or len(fx) == 0:
-        return out, boxcnt
-    lox, loy = bounds[0], bounds[1]
-    order = np.argsort(fx, kind="stable")
-    fx = np.asarray(fx, np.int64)[order]
-    fy = np.asarray(fy, np.int64)[order]
-    fcnt = np.asarray(fcnt, np.int64)[order]
-    cx = np.clip(((px - lox) / cell_f).astype(np.int64), 0, nc_f - 1)
-    cy = np.clip(((py - loy) / cell_f).astype(np.int64), 0, nc_f - 1)
-    # per-left Chebyshev search window: must contain ball(r_old), whose
-    # lat half-extent is r_old degrees (euclidean) or the meridian arc
-    # (haversine) — enough for termination: the window box covers the
-    # ball, which holds >= k (r_old is certified), so cum >= k fires
-    # unless clipping/wrap dropped cells, in which case keep r_old.
-    if metric == "haversine":
-        # lon half-extent exceeds the meridian arc by 1/cos(lat) — the
-        # same correction jb applies below; without it a high-latitude
-        # window misses part of the r_old ball, the refinement silently
-        # no-ops and the boxcnt probe undercounts (ADVICE r6)
-        half_deg = np.degrees(r_old / EARTH_RADIUS_M)
-        half_deg = half_deg / np.maximum(np.cos(np.radians(py)), 1e-6)
-    else:
-        half_deg = r_old
-    jmax = np.ceil(half_deg / cell_f).astype(np.int64) + 1
-    for i in range(n):
-        lo_i = np.searchsorted(fx, cx[i] - jmax[i], side="left")
-        hi_i = np.searchsorted(fx, cx[i] + jmax[i], side="right")
-        if hi_i <= lo_i:
-            continue
-        sel_fy = fy[lo_i:hi_i]
-        m = np.abs(sel_fy - cy[i]) <= jmax[i]
-        if not m.any():
-            continue
-        d = np.maximum(
-            np.abs(fx[lo_i:hi_i][m] - cx[i]), np.abs(sel_fy[m] - cy[i])
-        )
-        c = fcnt[lo_i:hi_i][m]
-        if c.sum() < k:
-            continue
-        ds = np.argsort(d, kind="stable")
-        cum = np.cumsum(c[ds])
-        j = int(d[ds][np.searchsorted(cum, k)])
-        x0 = max(0, int(cx[i]) - j)
-        x1 = min(nc_f - 1, int(cx[i]) + j)
-        y0 = max(0, int(cy[i]) - j)
-        y1 = min(nc_f - 1, int(cy[i]) + j)
-        dx = max(px[i] - (lox + x0 * cell_f), (lox + (x1 + 1) * cell_f) - px[i])
-        dy = max(py[i] - (loy + y0 * cell_f), (loy + (y1 + 1) * cell_f) - py[i])
-        if metric == "haversine":
-            rb = EARTH_RADIUS_M * (np.radians(dy) + np.radians(dx))
-        else:
-            rb = float(np.sqrt(dx * dx + dy * dy))
-        rb *= 1.0 + 1e-9
-        out[i] = min(out[i], max(rb, r_floor))
-        if metric == "haversine":
-            # lon half-extent exceeds the meridian arc by 1/cos(lat);
-            # overcounting only biases the caller toward salting (safe)
-            hd = np.degrees(out[i] / EARTH_RADIUS_M)
-            hd = hd / max(np.cos(np.radians(py[i])), 1e-6)
-        else:
-            hd = out[i]
-        jb = int(np.ceil(hd / cell_f)) + 1
-        boxcnt[i] = int(c[d <= jb].sum())
-    return out, boxcnt
 
 
 def _ring_certified_radii(
@@ -458,6 +320,18 @@ def _ring_certified_radii(
     return np.clip(rb, r_floor, cover_r)
 
 
+def _pair_dist_col(metric: str) -> Column:
+    """Distance between left (px, py) and right (qx, qy) columns — the
+    one expression every knn_join path emits and ranks by."""
+    from geo_index_spark.operators.join import haversine_pair_col
+
+    if metric == "haversine":
+        return haversine_pair_col(F.col("px"), F.col("py"), F.col("qx"), F.col("qy"))
+    dx = F.col("px") - F.col("qx")
+    dy = F.col("py") - F.col("qy")
+    return F.sqrt(dx * dx + dy * dy)
+
+
 def _knn_point_candidates(
     rem: DataFrame,
     rpts: DataFrame,
@@ -479,11 +353,7 @@ def _knn_point_candidates(
     Haversine boxes may wrap into 2 disjoint lon segments; a
     lon-containment residual keeps a pair in its own segment's cells so
     it cannot be emitted once per segment."""
-    from geo_index_spark.operators.join import (
-        _cell_coord,
-        haversine_candidate_boxes,
-        haversine_pair_col,
-    )
+    from geo_index_spark.operators.join import _cell_coord, haversine_candidate_boxes
 
     nc = 1 << level
     lox, loy, hix, hiy = bounds
@@ -549,13 +419,7 @@ def _knn_point_candidates(
     j = (le.hint("SHUFFLE_HASH") if shuffle_hash else le).join(re, "cell", "inner")
     if residual is not None:
         j = j.filter(residual)
-    if metric == "haversine":
-        d = haversine_pair_col(F.col("px"), F.col("py"), F.col("qx"), F.col("qy"))
-    else:
-        dx = F.col("px") - F.col("qx")
-        dy = F.col("py") - F.col("qy")
-        d = F.sqrt(dx * dx + dy * dy)
-    return j.select("left_id", "right_id", d.alias("dist"), "r")
+    return j.select("left_id", "right_id", _pair_dist_col(metric).alias("dist"), "r")
 
 
 def _knn_point_candidates_multi(
@@ -572,10 +436,7 @@ def _knn_point_candidates_multi(
     its OWN quantized level, and the right side explodes each point
     once per PRESENT level (a literal array, so |levels| <= 7 rows per
     point) instead of being scanned once per bucket."""
-    from geo_index_spark.operators.join import (
-        haversine_candidate_boxes,
-        haversine_pair_col,
-    )
+    from geo_index_spark.operators.join import haversine_candidate_boxes
 
     lox, loy, hix, hiy = bounds
     nc_l = F.pow(F.lit(2.0), F.col("_lvl"))  # exact in doubles up to 2^16
@@ -639,13 +500,128 @@ def _knn_point_candidates_multi(
     j = F.broadcast(le).join(re, ["_lvl", "cell"], "inner")
     if residual is not None:
         j = j.filter(residual)
-    if metric == "haversine":
-        d = haversine_pair_col(F.col("px"), F.col("py"), F.col("qx"), F.col("qy"))
-    else:
-        dx = F.col("px") - F.col("qx")
-        dy = F.col("py") - F.col("qy")
-        d = F.sqrt(dx * dx + dy * dy)
-    return j.select("left_id", "right_id", d.alias("dist"), "r")
+    return j.select("left_id", "right_id", _pair_dist_col(metric).alias("dist"), "r")
+
+
+def _knn_probe(
+    lefts: pd.DataFrame,
+    lschema,
+    rpts: DataFrame,
+    n_slices: int,
+    bounds: tuple[float, float, float, float],
+    k: int,
+    metric: str,
+    max_distance: float | None,
+) -> DataFrame:
+    """Exact kNN of a few driver-resident lefts (``lid, px, py``, Spark
+    schema ``lschema``) over ``rpts`` (``rid, qx, qy``) in one pass —
+    geo-index's partition boxes plus a best-first ``neighbors`` per tree
+    (src/rtree/trait.rs:238-302). The rights are Hilbert-range
+    partitioned into ``n_slices`` slices (knn_join passes
+    ``spark.sql.shuffle.partitions``) and checkpointed; the driver
+    collects each slice's box and count and runs the exact partition
+    prune of :func:`~geo_index_spark.operators.localbuild.partition_prune`
+    for every left; the lefts and each slice's left list ride one
+    broadcast.
+    Each slice task builds one Flatbush and returns, per listed left,
+    every right within the slice's kth Flatbush distance grown by the
+    numpy/Catalyst headroom — not a box search, whose box around a far
+    slice's kth distance holds most of the slice — so ties at the kth
+    distance and last-bit differences stay in. The emitted ``dist`` is
+    the Catalyst expression of the candidate rounds (Flatbush ranks by
+    ``np.hypot``, which differs in the last bit), and a ``row_number``
+    per left by (dist, right_id) keeps the top k."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import Window
+    from pyspark.sql.types import StructField, StructType
+
+    from geo_index_spark.localindex.flatbush import Flatbush
+    from geo_index_spark.operators.localbuild import grow, partition_prune
+    from geo_index_spark.operators.partitioning import hilbert_partition
+
+    spark = rpts.sparkSession
+    slices = (
+        hilbert_partition(rpts, n_slices, bounds=bounds, cols=("qx", "qy"))
+        .select("rid", "qx", "qy", F.spark_partition_id().alias("_s"))
+        .localCheckpoint()
+    )
+    stats = (
+        slices.groupBy("_s")
+        .agg(F.min("qx"), F.min("qy"), F.max("qx"), F.max("qy"), F.count(F.lit(1)))
+        .collect()
+    )
+    px = lefts["px"].to_numpy(np.float64)
+    py = lefts["py"].to_numpy(np.float64)
+    sel: dict[int, np.ndarray] = {}
+    if stats and len(px):
+        boxes = np.array([r[1:5] for r in stats], np.float64)
+        counts = np.array([r[5] for r in stats], np.int64)
+        keep = []
+        for i in range(0, len(px), 4096):  # bounds the (lefts, slices) arrays
+            lb, radius = partition_prune(
+                boxes, counts, px[i : i + 4096], py[i : i + 4096], k, metric, max_distance
+            )
+            keep.append(lb <= radius[:, None])
+        keep = np.concatenate(keep)
+        sel = {int(r[0]): np.flatnonzero(keep[:, j]) for j, r in enumerate(stats)}
+    lt = pa.Table.from_pandas(lefts[["lid", "px", "py"]], preserve_index=False)
+    bc = spark.sparkContext.broadcast((lt, sel))
+    cap = None if max_distance is None else float(grow(max_distance))
+    names = ("left_id", "px", "py", "right_id", "qx", "qy")
+    fields = [lschema[c] for c in ("lid", "px", "py")] + [
+        rpts.schema[c] for c in ("rid", "qx", "qy")
+    ]
+
+    def probe(batches):
+        batches = list(batches)
+        if not batches:
+            return
+        lt_, sel_ = bc.value
+        lx = lt_.column("px").to_numpy()
+        ly = lt_.column("py").to_numpy()
+        tbl = pa.Table.from_batches(batches)
+        s_all = tbl.column("_s").to_numpy()
+        for s in np.unique(s_all):
+            part = tbl.filter(pa.array(s_all == s))
+            x = part.column("qx").to_numpy().astype(np.float64)
+            y = part.column("qy").to_numpy().astype(np.float64)
+            fb = Flatbush(np.stack([x, y, x, y], axis=1))
+            li: list[np.ndarray] = []
+            ri: list[np.ndarray] = []
+            for i in sel_.get(int(s), ()):
+                ids, d = fb.neighbors(
+                    lx[i], ly[i], max_results=k + 1, max_distance=cap, metric=metric
+                )
+                if len(ids) > k:
+                    # a (k+1)th right inside the grown kth distance: fetch
+                    # every right within it (ties), else the first k
+                    b = float(grow(d[k - 1]))
+                    ids = ids[:k] if d[k] > b else fb.neighbors(
+                        lx[i], ly[i], max_distance=b, metric=metric
+                    )[0]
+                li.append(np.full(len(ids), i))
+                ri.append(ids)
+            if li:
+                left = lt_.take(np.concatenate(li))
+                right = part.take(np.concatenate(ri))
+                cols = [*left.columns, *(right.column(c) for c in ("rid", "qx", "qy"))]
+                yield pa.RecordBatch.from_arrays(
+                    [c.combine_chunks() for c in cols], names=list(names)
+                )
+
+    pairs = slices.mapInArrow(
+        probe, StructType([StructField(n, f.dataType) for n, f in zip(names, fields)])
+    )
+    scored = pairs.select("left_id", "right_id", _pair_dist_col(metric).alias("dist"))
+    if max_distance is not None:
+        scored = scored.filter(F.col("dist") <= F.lit(float(max_distance)))
+    w = Window.partitionBy("left_id").orderBy(F.col("dist").asc(), F.col("right_id").asc())
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= F.lit(int(k)))
+        .drop("rn")
+    )
 
 
 def knn_join(
@@ -675,8 +651,17 @@ def knn_join(
     runs as a per-query loop over ``neighbors``
     (src/rtree/trait.rs:198-302), re-expressed as a bulk operator.
 
-    Plan — PER-LEFT certified radii, AT MOST TWO ROUNDS at any scale
-    (the Simba/Sedona candidate-join family, pure Catalyst). Each left
+    Two paths, and the choice between them is the partition-or-not
+    cost decision of *To Partition, or Not to Partition* (SIGMOD 2021)
+    made explicit. A SMALL left side (<= ``CERT_UPFRONT_MAX_LEFTS``
+    rows, found by one bounded LIMIT probe before any density work)
+    goes straight to :func:`_knn_probe`: the rights are partitioned and
+    indexed once, each left probes a Flatbush in only the slices the
+    exact partition prune keeps, and a row_number per left takes the
+    top k — one pass, no radius, no density or ring pass. A few lefts
+    cannot amortize a candidate join; many lefts can, so a LARGE left
+    side runs PER-LEFT certified radii, AT MOST TWO ROUNDS (the
+    Simba/Sedona candidate-join family, pure Catalyst). Each left
     carries its own radius column ``r``; a round candidate-joins the
     unsatisfied lefts against right within their +-r boxes
     (point-specialized grid join, :func:`_knn_point_candidates`), takes
@@ -699,11 +684,12 @@ def knn_join(
     * a left whose r reaches the cover radius certifies
       unconditionally.
 
-    When the LEFT side is small (<= ``CERT_UPFRONT_MAX_LEFTS``), the
-    ring bounds are computed driver-side for ALL lefts up front
-    (numpy-vectorized over one bounded collect) and seed round 0
-    directly — the join then converges in ONE round with no density
-    estimate at all. Passing ``bounds`` AND ``right_count`` (both free
+    A round that starts with <= ``CERT_UPFRONT_MAX_LEFTS`` survivors
+    (in practice round 1) runs the same :func:`_knn_probe` instead of
+    a candidate join, over only the rights in the coarse cells the
+    survivors' certified boxes touch (a broadcast semi join on the
+    cached right) — exact in one pass however many rights a survivor's
+    ring-bound ball holds. Passing ``bounds`` AND ``right_count`` (both free
     from table metadata at production scale) skips the up-front
     min/max/count pass over right entirely; ``right_count`` is a grid-
     sizing hint only — correctness never depends on its accuracy. Seeding certified radii up front is deliberately
@@ -774,7 +760,6 @@ def knn_join(
 
     if metric not in ("euclidean", "haversine"):
         raise ValueError(f"metric must be euclidean|haversine, got {metric!r}")
-    R_EARTH = 6378137.0
     # meters per degree at the equator — only a SCALE GUESS for start
     # radii / level choices; certification never depends on it
     DEG_M = 111320.0
@@ -859,7 +844,7 @@ def knn_join(
     # With max_distance, covering the max_d ball is just as final: the
     # dist <= max_d residual makes the candidate set complete, so the
     # cover radius shrinks to max_distance (same unconditional certify).
-    cover_r = math.pi * R_EARTH if metric == "haversine" else ext
+    cover_r = math.pi * EARTH_RADIUS_M if metric == "haversine" else ext
     if max_distance is not None:
         cover_r = min(cover_r, float(max_distance))
     r_floor = cover_r / (1 << 20)
@@ -898,38 +883,19 @@ def knn_join(
         P[1:, 1:] = G.cumsum(axis=0).cumsum(axis=1)
         return P
 
-    _P_cache: list = []  # computed at most once per call
-
-    def _prefix():
-        if not _P_cache:
-            _P_cache.append(_cell_prefix_np())
-        return _P_cache[0]
-
     dense_r = None
     # True whenever every row of `remaining` carries a CERTIFIED-complete
-    # radius (kth-NN <= r guaranteed): the up-front small-left seeding,
-    # and every post-transition round. Density-guess round 0 (and a
-    # user-supplied init_radius round 0) are False.
+    # radius (kth-NN <= r guaranteed): every post-transition round.
+    # Density-guess round 0 (and a user-supplied init_radius round 0)
+    # are False.
     certified_radii = False
-    seed_pdf = None  # driver-resident seed frame (small-left path)
+    # the index probe's arguments after (lefts, their schema, rights)
+    probe_args = (n_shuffle, bounds, k, metric, max_distance)
     if init_radius is not None:
         r0 = F.lit(min(max(float(init_radius), r_floor), cover_r))
         remaining = lpts.select("lid", "px", "py", r0.alias("r"))
         dense_r = float(init_radius)
     else:
-        # per-cell right counts, materialized once (reused by the max
-        # agg AND the neighborhood dilation — one pass over right, and
-        # the table is bounded by 4^12 cells regardless of |right|)
-        C = (
-            rpts.groupBy(
-                _coarse_cell(F.col("qx"), bounds[0]).alias("ccx"),
-                _coarse_cell(F.col("qy"), bounds[1]).alias("ccy"),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint()
-        )
-        C_df = C
-        _dbg("coarse density counts checkpointed")
         # bounded probe instead of a full lpts.count() (ADVICE r5): a
         # LIMIT of threshold+1 rows decides the branch, and when the
         # left IS small the probe already holds every row — reuse it
@@ -937,31 +903,25 @@ def knn_join(
         probe_pdf = lpts.limit(CERT_UPFRONT_MAX_LEFTS + 1).toPandas()
         _dbg("left-size probe collected")
         if len(probe_pdf) <= CERT_UPFRONT_MAX_LEFTS:
-            # small left side: certified-complete ring radii for ALL
-            # lefts up front (one bounded collect + vectorized numpy)
-            # — round 0 certifies everything, the loop runs ONCE, and
-            # the whole density-estimate stage (dilation + fine-count
-            # joins) is skipped. Both metrics. The frame is built below
-            # via _remaining_from_pdf so the quantized level rides
-            # along as a column and bucket stats need no Spark job.
-            P0 = _prefix()
-            pdf = probe_pdf
-            rb0 = _ring_certified_radii(
-                P0,
-                nc_d,
-                cell_d,
-                bounds,
-                pdf["px"].to_numpy(),
-                pdf["py"].to_numpy(),
-                k,
-                metric,
-                cover_r,
-                r_floor,
-            )
-            seed_pdf = pdf.assign(r=rb0)
-            remaining = None
-            certified_radii = True
+            # small left side: one exact index-probe pass — no density
+            # counts, no ring radii, no rounds
+            out = _knn_probe(probe_pdf, lpts.schema, rpts, *probe_args)
+            rpts.unpersist(blocking=False)
+            return out
         else:
+            # per-cell right counts, materialized once (reused by the max
+            # agg AND the neighborhood dilation — one pass over right, and
+            # the table is bounded by 4^12 cells regardless of |right|)
+            C = (
+                rpts.groupBy(
+                    _coarse_cell(F.col("qx"), bounds[0]).alias("ccx"),
+                    _coarse_cell(F.col("qy"), bounds[1]).alias("ccy"),
+                )
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .localCheckpoint()
+            )
+            C_df = C
+            _dbg("coarse density counts checkpointed")
             # ONE tiny job on checkpointed C serves both the max-count
             # (densest-cell radius scale) and the dense-cell count that
             # previously ran as a second job
@@ -1102,8 +1062,6 @@ def knn_join(
             remaining = joined.select("lid", "px", "py", r0.alias("r"))
     # lazy checkpoint: the first bucket-stats job below materializes it,
     # so init costs ONE barrier (checkpoint+stats fused), not two.
-    # (For the driver-resident seed path the checkpoint and the bucket
-    # stats are both handled after the level helpers are defined.)
     # The skinny (lid, px, py, r) frame is coalesced to the scheduler's
     # default parallelism first: the density plan inherits the full
     # shuffle width from its exchanges, and every later consumer
@@ -1112,9 +1070,8 @@ def knn_join(
     # measured ~2 s/round of pure task launch at 256 partitions for a
     # 250k-row frame. defaultParallelism scales with the cluster, so
     # this is not a local-mode constant.
-    if remaining is not None:
-        dp = max(1, lpts.sparkSession.sparkContext.defaultParallelism)
-        remaining = remaining.coalesce(dp).localCheckpoint(eager=False)
+    dp = max(1, lpts.sparkSession.sparkContext.defaultParallelism)
+    remaining = remaining.coalesce(dp).localCheckpoint(eager=False)
 
     # PER-LEFT grid level, every round: one level cannot serve mixed
     # radii (tiny boxes in a coarse cell cross-product the whole cell's
@@ -1130,68 +1087,22 @@ def knn_join(
         F.greatest(
             F.lit(4),
             F.lit(2)
-            * F.floor(F.log2(F.lit(ext_u) / (F.col("r") * 2.0)) / F.lit(2.0)),
+            # try_divide: r = 0 (max_distance=0) reads NULL -> level 4
+            * F.floor(F.log2(F.try_divide(F.lit(ext_u), F.col("r") * 2.0)) / F.lit(2.0)),
         ),
     ).cast("int")
-    # lvl_active: the per-row level the CURRENT round's filters and
-    # joins read. Normally the lvl_col expression; when `remaining` was
-    # just built from a driver-resident pandas frame the level is
-    # materialized as a `_lvl` column instead (numpy twin of lvl_col),
-    # so bucket stats come from the same numpy array with NO Spark job
-    # and the filters can never drift from the stats (any level is
-    # correct — touched cells cover the box at every resolution — so an
-    # ulp difference between numpy log2 and JVM log2 is harmless once
-    # both read the same materialized value).
-    lvl_active = lvl_col
-
-    def _lvl_np(r_arr):
-        import numpy as np
-
-        r_arr = np.asarray(r_arr, np.float64)
-        with np.errstate(divide="ignore"):
-            lv = 2.0 * np.floor(np.log2(ext_u / (r_arr * 2.0)) / 2.0)
-        lv = np.where(np.isfinite(lv), lv, 16.0)
-        return np.clip(lv, 4.0, 16.0).astype("int64")
-
-    def _buckets_np(pdf) -> list[tuple[int, int, float]]:
-        out: dict[int, tuple[int, float]] = {}
-        for lv, r_ in zip(pdf["_lvl"].to_numpy(), pdf["r"].to_numpy()):
-            c, m = out.get(int(lv), (0, 0.0))
-            out[int(lv)] = (c + 1, max(m, float(r_)))
-        return sorted((lv, c, m) for lv, (c, m) in out.items())
-
-    def _remaining_from_pdf(pdf):
-        from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-        pdf = pdf.assign(_lvl=_lvl_np(pdf["r"].to_numpy()))
-        df = lpts.sparkSession.createDataFrame(
-            pdf,
-            schema=StructType(
-                list(lpts.schema.fields)
-                + [
-                    StructField("r", DoubleType(), False),
-                    StructField("_lvl", LongType(), False),
-                ]
-            ),
-        )
-        return df, _buckets_np(pdf)
 
     def _bucket_stats() -> list[tuple[int, int, float]]:
         # one tiny job on the checkpointed tail doubles as the
         # round-end count barrier: n_rem = sum of bucket counts
         return sorted(
             (row["_lvl"], row["cnt"], row["rmx"])
-            for row in remaining.groupBy(lvl_active.alias("_lvl"))
+            for row in remaining.groupBy(lvl_col.alias("_lvl"))
             .agg(F.count(F.lit(1)).alias("cnt"), F.max("r").alias("rmx"))
             .collect()
         )
 
-    if seed_pdf is not None:
-        remaining, buckets = _remaining_from_pdf(seed_pdf)
-        lvl_active = F.col("_lvl")
-        remaining = remaining.localCheckpoint(eager=False)
-    else:
-        buckets = _bucket_stats()
+    buckets = _bucket_stats()
     n_rem = sum(c for _, c, _ in buckets)
     if debug:
         print(
@@ -1215,12 +1126,12 @@ def knn_join(
     rb_udf = None  # lazy: built once, on the first survivor transition
 
     def _ring_rb_udf():
-        # distributed twin of the up-front path: the prefix sum is
-        # broadcast once and each Arrow batch runs the vectorized ring
-        # search — survivor counts can be anything (no driver collect)
+        # the prefix sum is broadcast once and each Arrow batch runs
+        # the vectorized ring search — survivor counts can be anything
+        # (no driver collect)
         from pyspark.sql.types import DoubleType
 
-        bc = rpts.sparkSession.sparkContext.broadcast(_prefix())
+        bc = rpts.sparkSession.sparkContext.broadcast(_cell_prefix_np())
 
         @F.pandas_udf(DoubleType())
         def rb(pxs: pd.Series, pys: pd.Series) -> pd.Series:
@@ -1241,9 +1152,6 @@ def knn_join(
 
         return rb
 
-    tail_region = None  # tracked here so an exception mid-round cannot
-    # leak the persisted tail neighborhood (ADVICE r6) — the finally
-    # block unpersists whatever is still live
     try:
         for round_idx in range(max_rounds):
             if n_rem == 0:
@@ -1255,26 +1163,21 @@ def knn_join(
                     file=sys.stderr,
                     flush=True,
                 )
-            # straggler-tail prefilter: once the tail is tiny, collect
-            # it driver-side and push an isin() over the coarse cells
-            # its boxes touch into the cached right scan — tail rounds
-            # then read ~the straggler neighborhoods instead of
-            # streaming |right| x |levels| exploded rows. Safe because
-            # certification only needs completeness INSIDE each box,
-            # and the coarse cellset covers every box. Haversine builds
-            # its cellset from the wrapped geo_query_window degree
-            # segments — the SAME min-cos identity haversine_box_expand
-            # uses for the candidate boxes, so the cellset covers every
-            # box the candidate join will emit, dateline wrap included
-            # (VERDICT r5 Next #4; euclidean-only before round 6).
-            rpts_src = rpts
-            tail_region = None
-            # salting defaults ON for tail rounds; the fine-grid counts
-            # switch it off when no left's final box can hold a giant
-            # candidate group (stage A is then two wasted shuffles)
-            tail_salt_needed = True
             t_sub = _time.perf_counter()
-            if n_rem <= TAIL_MAX_LEFTS:
+            if certified_radii and n_rem <= CERT_UPFRONT_MAX_LEFTS:
+                # TAIL round: collect the few survivors driver-side and
+                # answer them exactly with the index probe, over only the
+                # rights in the coarse cells their certified boxes touch
+                # (a broadcast semi join on the cached right) — the tail
+                # reads ~the straggler neighborhoods instead of streaming
+                # |right|, and no window ever sorts a ring-bound ball
+                # that holds a whole city. Safe because every true
+                # neighbor lies inside its left's box (r is certified),
+                # and the coarse cellset covers every box. Haversine
+                # builds its cellset from the wrapped geo_query_window
+                # degree segments — the SAME min-cos identity
+                # haversine_box_expand uses — so the cellset covers every
+                # box, dateline wrap included (VERDICT r5 Next #4).
                 from geo_index_spark.operators.search import geo_query_window
 
                 def _tail_cellset(rows) -> set[int] | None:
@@ -1310,7 +1213,14 @@ def knn_join(
                             return None
                     return cs
 
-                def _tail_semi(cs: set[int], src: DataFrame) -> DataFrame:
+                tail_pdf = remaining.select("lid", "px", "py", "r").toPandas()
+                cells = _tail_cellset(zip(tail_pdf["px"], tail_pdf["py"], tail_pdf["r"]))
+                rpts_src = rpts
+                if cells is not None:
+                    _dbg(
+                        f"round {round_idx} tail prefilter: {len(tail_pdf)} lefts -> "
+                        f"{len(cells)}/{nc_d * nc_d} coarse cells"
+                    )
                     # broadcast SEMI JOIN, not isin(): a >1k-element InSet
                     # probes a boxed scala HashSet per row — measured ~10 s
                     # of the tail round's 12 s scan over 32M cached rights.
@@ -1320,136 +1230,15 @@ def knn_join(
                         _coarse_cell(F.col("qx"), bounds[0]) * F.lit(nc_d)
                         + _coarse_cell(F.col("qy"), bounds[1])
                     )
-                    cells_df = src.sparkSession.createDataFrame(
-                        [(int(c),) for c in sorted(cs)], "ccell long"
+                    cells_df = rpts.sparkSession.createDataFrame(
+                        [(int(c),) for c in sorted(cells)], "ccell long"
                     )
-                    return src.join(
+                    rpts_src = rpts.join(
                         F.broadcast(cells_df), ccell == F.col("ccell"), "left_semi"
                     )
-
-                tail_pdf = remaining.select("lid", "px", "py", "r").toPandas()
-                tail_rows = list(zip(tail_pdf["px"], tail_pdf["py"], tail_pdf["r"]))
-                cells = _tail_cellset(tail_rows)
-                if cells is not None:
-                    # persist the neighborhood ONCE: the fine-count job
-                    # below and the candidate join both need the semi-
-                    # filtered rights, and each would otherwise re-scan
-                    # the full |right| cache (a host-floor-bound full
-                    # pass; at 100 TB, a full re-read). The region is
-                    # box-cover-sized — cheap to cache, dropped after
-                    # the round's top job materializes.
-                    tail_region = _tail_semi(cells, rpts).persist()
-                    # FINE-GRID RING REFINEMENT: re-certify every tail
-                    # radius on a 2^TAIL_RING_EXTRA x finer grid counted
-                    # over just this region (one groupBy job on the
-                    # semi-filtered rights; occupied-cell output is tiny
-                    # because the region is). min(r_old, fine bound)
-                    # stays certified; the payoff is quadratic — see
-                    # _sparse_ring_refine.
-                    nc_f2 = nc_d << TAIL_RING_EXTRA
-                    cell_f2 = cell_d / (1 << TAIL_RING_EXTRA)
-
-                    def _fine2(c, lo):
-                        return F.least(
-                            F.lit(nc_f2 - 1),
-                            F.greatest(
-                                F.lit(0), F.floor((c - F.lit(lo)) / F.lit(cell_f2))
-                            ),
-                        ).cast("long")
-
-                    cnts_pdf = (
-                        tail_region.groupBy(
-                            _fine2(F.col("qx"), bounds[0]).alias("fx"),
-                            _fine2(F.col("qy"), bounds[1]).alias("fy"),
-                        )
-                        .agg(F.count(F.lit(1)).alias("fcnt"))
-                        .limit(TAIL_RING_MAX_CELLS + 1)
-                        .toPandas()
-                    )
-                    if len(cnts_pdf) <= TAIL_RING_MAX_CELLS:
-                        r_new, tail_boxcnt = _sparse_ring_refine(
-                            cnts_pdf["fx"].to_numpy(),
-                            cnts_pdf["fy"].to_numpy(),
-                            cnts_pdf["fcnt"].to_numpy(),
-                            nc_f2,
-                            cell_f2,
-                            bounds,
-                            tail_pdf["px"].to_numpy(),
-                            tail_pdf["py"].to_numpy(),
-                            tail_pdf["r"].to_numpy(),
-                            k,
-                            metric,
-                            r_floor,
-                        )
-                        # exact in-box counts: when even the biggest
-                        # final box holds a modest group, the plain
-                        # one-exchange window beats stage A's two extra
-                        # shuffles (each a flat job-launch cost)
-                        tail_salt_needed = bool(
-                            tail_boxcnt.max() > TAIL_SALT_MIN_GROUP
-                        )
-                        if debug and not tail_salt_needed:
-                            print(
-                                f"[knn_join] round {round_idx} salt skipped: "
-                                f"max in-box group {int(tail_boxcnt.max())}",
-                                file=sys.stderr,
-                                flush=True,
-                            )
-                        if (r_new < tail_pdf["r"].to_numpy()).any():
-                            if debug:
-                                print(
-                                    f"[knn_join] round {round_idx} ring refine: "
-                                    f"max r {tail_pdf['r'].max():.4g} -> "
-                                    f"{r_new.max():.4g} over {len(cnts_pdf)} "
-                                    "fine cells",
-                                    file=sys.stderr,
-                                    flush=True,
-                                )
-                            tail_pdf = tail_pdf.assign(r=r_new)
-                            # driver-resident rebuild: materialized _lvl
-                            # column + numpy bucket stats — no Spark job
-                            remaining, buckets = _remaining_from_pdf(tail_pdf)
-                            lvl_active = F.col("_lvl")
-                            tail_rows = list(
-                                zip(tail_pdf["px"], tail_pdf["py"], tail_pdf["r"])
-                            )
-                            cells = _tail_cellset(tail_rows) or cells
-                if cells is not None:
-                    if debug:
-                        print(
-                            f"[knn_join] round {round_idx} tail prefilter: "
-                            f"{len(tail_rows)} lefts -> {len(cells)}/"
-                            f"{nc_d * nc_d} coarse cells",
-                            file=sys.stderr,
-                            flush=True,
-                        )
-                    # post-refinement boxes shrink, so the new cellset is
-                    # a subset of the persisted region's — re-filter the
-                    # CACHE, never re-scan the full right table
-                    rpts_src = _tail_semi(cells, tail_region)
-            # tail rounds: shift every bucket TAIL_LVL_EXTRA levels FINER
-            # (clamped at 16). The cell >= box quantization rule protects
-            # the big rounds' explode counts, but it makes a tail left
-            # cross-product whole coarse cells: a ~1-degree ring-bound
-            # radius lands at level 6 (5.6-degree cells), so each void
-            # left sweeps entire dense-city cells — measured ~260 CPU-s
-            # of pure pair emission for 77k final candidates at the 32M
-            # probe (ALL tasks CPU-bound, zero skew). At <= 5000 lefts,
-            # exploding each box into ~100-300 fine cells is a trivial
-            # broadcast (<= ~1.6M rows) and the emitted pairs collapse to
-            # ~the box contents. Correctness is level-independent:
-            # touched cells cover the box at ANY resolution, which is all
-            # certification needs.
-            lvl_eff = lvl_active
-            buckets_eff = buckets
-            if n_rem <= TAIL_MAX_LEFTS:
-                lvl_eff = F.least(F.lit(16), lvl_active + F.lit(TAIL_LVL_EXTRA))
-                merged: dict[int, tuple[int, float]] = {}
-                for lvl, cnt, rmx in buckets:
-                    l2 = min(16, int(lvl) + TAIL_LVL_EXTRA)
-                    c0, r0_ = merged.get(l2, (0, 0.0))
-                    merged[l2] = (c0 + cnt, max(r0_, float(rmx)))
-                buckets_eff = sorted((l, c, r_) for l, (c, r_) in merged.items())
+                parts.append(_knn_probe(tail_pdf, lpts.schema, rpts_src, *probe_args))
+                n_rem = 0
+                break
             # split buckets: broadcast-eligible ones share ONE multilevel
             # join (a single pass over right keyed on (level, cell));
             # oversized buckets each get a partitioned join. The
@@ -1458,7 +1247,7 @@ def knn_join(
             # level-4 clamp (near-cover radii), where the factor grows.
             small: list[list] = []  # [lvl, cnt, rmx, est. exploded rows]
             big_parts: list[tuple[int, float]] = []  # (lvl, est)
-            for lvl, cnt, rmx in buckets_eff:
+            for lvl, cnt, rmx in buckets:
                 cell_u = ext_u / (1 << int(lvl))
                 explode_factor = (2.0 * float(rmx) / cell_u + 2.0) ** 2
                 if cnt <= bcast_lefts and cnt * explode_factor <= 2_000_000:
@@ -1504,21 +1293,21 @@ def knn_join(
                 lvl_w, _, _, est_w = small.pop(worst)
                 big_parts.append((lvl_w, est_w))
                 small_rows -= est_w
-            lvl_mapped = lvl_eff
+            lvl_mapped = lvl_col
             if lvl_remap:
                 lvl_mapped = F.coalesce(
                     *[
-                        F.when(lvl_eff == F.lit(int(s_)), F.lit(int(d_)))
+                        F.when(lvl_col == F.lit(int(s_)), F.lit(int(d_)))
                         for s_, d_ in lvl_remap.items()
                     ],
-                    lvl_eff,
+                    lvl_col,
                 )
             small_lvls = [lvl for lvl, *_ in small]
             cand = None
             if small_lvls:
                 sub = remaining.filter(lvl_mapped.isin([int(l) for l in small_lvls]))
                 cand = _knn_point_candidates_multi(
-                    sub, rpts_src, bounds, small_lvls, metric, lvl_mapped
+                    sub, rpts, bounds, small_lvls, metric, lvl_mapped
                 )
             for lvl, est in big_parts:
                 sub = remaining.filter(lvl_mapped == F.lit(int(lvl)))
@@ -1531,7 +1320,7 @@ def knn_join(
                 # spill-safe sort-merge join
                 c = _knn_point_candidates(
                     sub,
-                    rpts_src,
+                    rpts,
                     bounds,
                     int(lvl),
                     metric,
@@ -1550,8 +1339,8 @@ def knn_join(
             # either way — the only change is that c==k-but-dk>r lefts
             # now read c < k and take the ring bound instead of dk (both
             # are valid certified radii; the handful of such lefts —
-            # n_rem-sized — is absorbed by the tail round's own prefilter
-            # and salted two-stage window). Payoff measured at 32M: the
+            # n_rem-sized — is absorbed by the tail round's index
+            # probe). Payoff measured at 32M: the
             # round-0 window input drops from 163M candidate rows (~326
             # per left — box cells hold ~10x the ball) to ~the in-ball
             # counts, cutting the round-0 window sort from ~8 s to ~2 s.
@@ -1561,34 +1350,6 @@ def knn_join(
             scored = scored.filter(
                 (F.col("r") >= F.lit(cover_r)) | (F.col("dist") <= F.col("r"))
             )
-            if n_rem <= TAIL_MAX_LEFTS and tail_salt_needed:
-                # tail rounds: SALTED TWO-STAGE top-k. A tail left's ball
-                # can genuinely hold ~10^5-10^6 rights (ring-bound radii
-                # reach into dense cells), and one-exchange-per-left still
-                # sorts each left's candidates in ONE task — measured as a
-                # ~18-20 s serial straggler at BOTH local[8] and local[32]
-                # (the dominant fixed cost of the 32M whole-op scaling
-                # probe). Stage A windows over (left_id, salt) — a
-                # deterministic hash of right_id — so every giant group is
-                # sorted as TAIL_SALT parallel fragments of which only the
-                # per-fragment top-k survive; stage B re-windows the
-                # <= n_rem * TAIL_SALT * k survivors. Correctness: the
-                # global top-k is a subset of the fragment top-ks, and the
-                # certification count is unchanged — stage B's c =
-                # min(k, survivors) and survivors >= k iff the true
-                # candidate count >= k (sum of min(k, c_i) >= k whenever
-                # sum(c_i) >= k); dk = kth of the true top-k either way.
-                w_frag = Window.partitionBy("left_id", "_salt").orderBy(
-                    F.col("dist").asc(), F.col("right_id").asc()
-                )
-                scored = (
-                    scored.withColumn(
-                        "_salt", F.pmod(F.xxhash64("right_id"), F.lit(TAIL_SALT))
-                    )
-                    .withColumn("_frn", F.row_number().over(w_frag))
-                    .filter(F.col("_frn") <= F.lit(int(k)))
-                    .drop("_salt", "_frn")
-                )
             # one window shuffle does top-k AND certification: rn for
             # the top-k cut, then count/kth-dist over the same
             # partitioning (no extra exchange), certify row-local
@@ -1609,22 +1370,7 @@ def knn_join(
                     flush=True,
                 )
                 t_sub = _time.perf_counter()
-                if os.environ.get("GEO_KNN_DEBUG") == "2":
-                    # level-2 diagnostic: materialize the candidate set to
-                    # split "join+filter" from "window" time (re-runs the
-                    # join, so level-2 debug reps are NOT bench numbers)
-                    n_cand = scored.count()
-                    print(
-                        f"[knn_join]   round {round_idx} candidates: {n_cand} "
-                        f"(count job {_time.perf_counter() - t_sub:.1f}s)",
-                        file=sys.stderr,
-                        flush=True,
-                    )
-                    t_sub = _time.perf_counter()
             top = top.localCheckpoint()  # the round's ONE heavy job
-            if tail_region is not None:
-                tail_region.unpersist(blocking=False)
-                tail_region = None
             if debug:
                 print(
                     f"[knn_join]   round {round_idx} top job: "
@@ -1635,10 +1381,10 @@ def knn_join(
                 t_sub = _time.perf_counter()
             parts.append(top.filter(certified).select("left_id", "right_id", "dist"))
             done = top.filter(certified).select("left_id")
-            if n_rem <= 2_000_000:
-                # the certified-id list is bounded by the round's live
-                # lefts — broadcast it so the anti join below probes a
-                # hash relation instead of exchanging BOTH remaining and
+            if n_rem * k <= 2_000_000:
+                # the certified-id list holds up to k rows per live
+                # left — broadcast it while n_rem * k stays small, so
+                # the anti join below probes a hash relation instead of exchanging BOTH remaining and
                 # done across the full shuffle width (two 256-task
                 # exchanges measured ~2.7 s of the 16M round-0
                 # transition for ~250k-row inputs)
@@ -1682,7 +1428,6 @@ def knn_join(
                 .localCheckpoint(eager=False)
             )
             certified_radii = True  # every transition radius is certified
-            lvl_active = lvl_col  # rebuilt frame has no _lvl column
             buckets = _bucket_stats()
             n_rem = sum(c for _, c, _ in buckets)
             if debug:
@@ -1702,8 +1447,6 @@ def knn_join(
             raise RuntimeError("knn_join did not converge within max_rounds")
     finally:
         rpts.unpersist(blocking=False)
-        if tail_region is not None:
-            tail_region.unpersist(blocking=False)
     if not parts:  # empty left table: no rounds ran
         return _empty_result()
     out = parts[0]

@@ -24,7 +24,12 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from geo_index_spark.localindex.flatbush import DEFAULT_NODE_SIZE, Flatbush
+from geo_index_spark.localindex.flatbush import (
+    DEFAULT_NODE_SIZE,
+    Flatbush,
+    _metric_block,
+    haversine_box,
+)
 from geo_index_spark.localindex.kdbush import KDBush
 from geo_index_spark.operators.partitioning import hilbert_partition
 
@@ -34,21 +39,61 @@ INDEX_SCHEMA = (
 )
 
 
-def _lb_col(qx: float, qy: float, metric: str):
-    """Lower-bound distance from the query point to a partition bbox as
-    a Catalyst expression (clamp + metric; reference
-    src/rtree/distance.rs:100-113)."""
+def _lb_col(qx: float, qy: float):
+    """Euclidean lower-bound distance from the query point to a
+    partition bbox as a Catalyst expression (clamp, then distance)."""
     from pyspark.sql import functions as F
-
-    from geo_index_spark.operators.knn import haversine_dist_col
 
     cx = F.greatest(F.col("minx"), F.least(F.col("maxx"), F.lit(float(qx))))
     cy = F.greatest(F.col("miny"), F.least(F.col("maxy"), F.lit(float(qy))))
+    dx = cx - F.lit(float(qx))
+    dy = cy - F.lit(float(qy))
+    return F.sqrt(dx * dx + dy * dy)
+
+
+def grow(d):
+    """``d`` widened by a relative 1e-9: the headroom between a numpy
+    distance and the Catalyst expression for the same pair, which can
+    differ in the last bits. Used wherever a numpy distance bounds a
+    set that Catalyst distances then rank."""
+    return np.asarray(d, np.float64) * (1.0 + 1e-9)
+
+
+def partition_prune(
+    boxes: np.ndarray,
+    counts: np.ndarray,
+    qx,
+    qy,
+    k: int,
+    metric: str,
+    max_distance: float | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The exact kNN partition prune, vectorized over queries: per
+    query, sort the partitions by lower-bound distance to their box,
+    take them until the cumulative item count reaches k, and bound the
+    kth neighbor by the largest farthest-point distance among those
+    taken; a partition whose lower bound exceeds that radius cannot
+    hold a top-k answer. Returns ``(lb, radius)``: the (n, p) lower
+    bounds and the (n,) radii, capped by ``max_distance``; keep
+    partition j for query i when ``lb[i, j] <= radius[i]``."""
+    qx = np.asarray(qx, np.float64).reshape(-1, 1)
+    qy = np.asarray(qy, np.float64).reshape(-1, 1)
+    lb = _metric_block(qx, qy, boxes, metric)
     if metric == "euclidean":
-        dx = cx - F.lit(float(qx))
-        dy = cy - F.lit(float(qy))
-        return F.sqrt(dx * dx + dy * dy)
-    return haversine_dist_col(cx, cy, qx, qy)
+        # farthest point of a box = its farthest corner
+        fx = np.maximum(np.abs(boxes[:, 0] - qx), np.abs(boxes[:, 2] - qx))
+        fy = np.maximum(np.abs(boxes[:, 1] - qy), np.abs(boxes[:, 3] - qy))
+        ub = np.hypot(fx, fy)
+    else:
+        ub = haversine_box(qx, qy, boxes, far=True)
+    order = np.argsort(lb, axis=1, kind="stable")
+    cum = np.cumsum(counts[order], axis=1)
+    need = np.minimum((cum < k).sum(axis=1), len(counts) - 1)
+    ub_run = np.maximum.accumulate(np.take_along_axis(ub, order, axis=1), axis=1)
+    radius = grow(ub_run[np.arange(len(need)), need])
+    if max_distance is not None:
+        radius = np.minimum(radius, grow(max_distance))
+    return lb, radius
 
 
 def build_partition_indexes(
@@ -181,7 +226,7 @@ def within_partition_indexes(
     ``within`` has different semantics (use knn/box operators)."""
     from pyspark.sql import functions as F
 
-    pruned = index_df.filter(_lb_col(qx, qy, "euclidean") <= F.lit(float(r)))
+    pruned = index_df.filter(_lb_col(qx, qy) <= F.lit(float(r)))
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -324,46 +369,30 @@ def knn_partition_indexes(
     so this is a driver-side collect of partition boxes only."""
     from pyspark.sql import functions as F
 
+    radius = np.inf if max_distance is None else float(grow(max_distance))
     if prune:
         rows = index_df.select(
             "num_items", "minx", "miny", "maxx", "maxy"
         ).collect()
         if rows:
-            from geo_index_spark.localindex.flatbush import _metric_block, haversine
-
             b = np.array([[r.minx, r.miny, r.maxx, r.maxy] for r in rows])
             cnt = np.array([r.num_items for r in rows])
-            lb = _metric_block(qx, qy, b, metric)
-            # upper bound per partition = distance to farthest corner
-            cxs = np.where(np.abs(b[:, 0] - qx) > np.abs(b[:, 2] - qx), b[:, 0], b[:, 2])
-            cys = np.where(np.abs(b[:, 1] - qy) > np.abs(b[:, 3] - qy), b[:, 1], b[:, 3])
-            if metric == "euclidean":
-                ub = np.hypot(cxs - qx, cys - qy)
-            else:
-                ub = haversine(qx, qy, cxs, cys)
-            order = np.argsort(lb, kind="stable")
-            cum = np.cumsum(cnt[order])
-            need = int(np.searchsorted(cum, k) + 1)
-            need = min(need, len(order))
-            radius = float(ub[order[:need]].max())
-            if max_distance is not None:
-                radius = min(radius, float(max_distance))
-            index_df = index_df.filter(
-                # re-derive the lower bound as a Catalyst predicate:
-                # clamp(q) to box then distance <= radius
-                _lb_col(qx, qy, metric) <= F.lit(radius)
-            )
-    elif max_distance is not None:
-        index_df = index_df.filter(
-            _lb_col(qx, qy, metric) <= F.lit(float(max_distance))
-        )
+            radius = float(partition_prune(b, cnt, qx, qy, k, metric, max_distance)[1][0])
+    if metric == "euclidean" and np.isfinite(radius):
+        # the prune as a Catalyst predicate, so pruned blobs never leave
+        # the scan; haversine partitions are pruned in the probe below
+        index_df = index_df.filter(_lb_col(qx, qy) <= F.lit(radius))
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             d = batch.to_pydict()
             all_ids: list[np.ndarray] = []
             all_d: list[np.ndarray] = []
-            for tree, ids in zip(d["tree"], d["ids"]):
+            boxes = np.column_stack([d[c] for c in ("minx", "miny", "maxx", "maxy")])
+            keep = _metric_block(qx, qy, boxes, metric) <= radius
+            for tree, ids, kept in zip(d["tree"], d["ids"], keep):
+                if not kept:
+                    continue
                 fb = Flatbush.from_bytes(tree)
                 lids, ldist = fb.neighbors(
                     qx, qy, max_results=k, max_distance=max_distance, metric=metric

@@ -335,11 +335,9 @@ def lsh_cosine_near_dup_pairs_fast(
         sess_width = int(sess.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         sess_width = 200
-    est = None
-    try:
-        est = int(emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        pass
+    from geo_index_spark.operators.join import _plan_size_bytes
+
+    est = _plan_size_bytes(emb)
     if est is not None and est > 0:
         n_ref = max(dp, min(sess_width, (est * n_bands) // (32 << 20) + 1))
     else:

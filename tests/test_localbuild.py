@@ -252,3 +252,29 @@ def test_within_geo_blob_rejects_box_blobs(spark):
     idx = build_partition_indexes(boxes, 1)
     with pytest.raises(Exception, match="point-mode"):
         within_geo_partition_indexes(idx, 11.0, 11.0, 500_000.0).collect()
+
+
+def test_indexed_knn_haversine_dateline_prune(spark):
+    """Haversine knn_partition_indexes on a +-180 cluster split into
+    several partitions: the partition prune uses the wrap-aware box
+    bound, so a query on one side of the line still reaches the
+    partitions on the other side, and pruned == unpruned == brute
+    force (ids exact, distances to 1e-6 m)."""
+    from geo_index_spark.localindex.flatbush import haversine
+
+    rng = np.random.default_rng(31)
+    lon = np.concatenate([rng.uniform(178.0, 180.0, 120), rng.uniform(-180.0, -178.0, 120)])
+    lat = rng.uniform(60.0, 80.0, 240)
+    pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(np.column_stack([lon, lat]))]
+    idx = build_partition_indexes(
+        spark.createDataFrame(pts, "row_id long, x double, y double"), 6, cols=("x", "y")
+    ).cache()
+    for qx, qy, k in [(179.99, 70.0, 8), (-179.99, 61.0, 5), (180.0, 80.0, 12)]:
+        d = haversine(qx, qy, lon, lat)
+        want_ids = list(np.lexsort((np.arange(len(d)), d))[:k])
+        for prune in (True, False):
+            got = knn_partition_indexes(idx, qx, qy, k, metric="haversine", prune=prune).collect()
+            assert [r.row_id for r in got] == want_ids, (qx, qy, prune)
+            assert np.allclose([r.dist for r in got], d[want_ids], rtol=0, atol=1e-6)
+        assert any(lon[i] < 0 for i in want_ids) and any(lon[i] > 0 for i in want_ids)
+    idx.unpersist()

@@ -151,6 +151,66 @@ def test_haversine_zero_and_known():
     assert abs(q - np.pi / 2 * 6378137.0) < 1.0
 
 
+@pytest.mark.parametrize(
+    "region",
+    [
+        # (name, lon sampler, lat range, queries)
+        ("antimeridian", "dateline", (-60.0, 60.0), 200),
+        ("above_60n", "global", (60.0, 90.0), 300),
+        ("global", "global", (-90.0, 90.0), 300),
+    ],
+    ids=lambda r: r[0],
+)
+def test_neighbors_haversine_sweep(region):
+    """Best-first haversine kNN must equal brute force near +-180, near
+    the pole and globally: the node bound has to be a true lower bound
+    of the great-circle distance, which clamping the query into the box
+    in degree space is not (it missed neighbors across the line and off
+    a box's latitude band)."""
+    _, lons, (lat_lo, lat_hi), n_q = region
+    rng = np.random.default_rng([23, n_q, int(lat_lo) + 90])
+    n, k = 2000, 5
+
+    def lon(m):
+        if lons == "global":
+            return rng.uniform(-180.0, 180.0, m)
+        east = rng.random(m) < 0.5
+        return np.where(east, rng.uniform(177.0, 180.0, m), rng.uniform(-180.0, -177.0, m))
+
+    x, y = lon(n), rng.uniform(lat_lo, lat_hi, n)
+    fb = Flatbush(np.stack([x, y, x, y], axis=1))
+    qx, qy = lon(n_q), rng.uniform(lat_lo, lat_hi, n_q)
+    for i in range(n_q):
+        d = haversine(qx[i], qy[i], x, y)
+        want = np.lexsort((np.arange(n), d))[:k]
+        ids, got_d = fb.neighbors(qx[i], qy[i], max_results=k, metric="haversine")
+        assert list(ids) == list(want), (qx[i], qy[i])
+        assert np.array_equal(got_d, d[want])
+
+
+def test_haversine_box_bounds_points_of_the_box():
+    """The wrap-aware box bound is exact: never above the distance to
+    any point of the box (nor the far bound below it), and equal to the
+    point distance on point boxes."""
+    from geo_index_spark.localindex.flatbush import haversine_box
+
+    rng = np.random.default_rng(29)
+    for _ in range(200):
+        lo, hi = np.sort(rng.uniform(-180.0, 180.0, 2))
+        la, lb = np.sort(rng.uniform(-90.0, 90.0, 2))
+        box = np.array([[lo, la, hi, lb]])
+        q = (rng.choice([-180.0, 180.0, rng.uniform(-180, 180)]), rng.choice([-90.0, 90.0, rng.uniform(-90, 90)]))
+        px = np.concatenate([rng.uniform(lo, hi, 2000), [lo, lo, hi, hi]])
+        py = np.concatenate([rng.uniform(la, lb, 2000), [la, lb, la, lb]])
+        d = haversine(q[0], q[1], px, py)
+        assert haversine_box(q[0], q[1], box)[0] <= d.min()
+        assert haversine_box(q[0], q[1], box, far=True)[0] >= d.max()
+    pts = rng.uniform((-180.0, -90.0), (180.0, 90.0), (500, 2))
+    q = (179.5, 88.0)
+    got = haversine_box(q[0], q[1], np.hstack([pts, pts]))
+    assert np.array_equal(got, haversine(q[0], q[1], pts[:, 0], pts[:, 1]))
+
+
 @pytest.mark.parametrize("n", [0, 1, 4, 8, 16, 20, 40, 80, 300])
 def test_str_sort_every_item_finds_itself(n):
     # B3 sweep, same property as hilbert (reference src/rtree/builder.rs:270-301)

@@ -809,6 +809,103 @@ def test_haversine_nan_latitude_raises(spark):
     assert got == {(0, 0)}
 
 
+def _spy_knn_probe(monkeypatch):
+    """Record every call of knn_join's index-probe executor as
+    (lefts pandas frame, rights DataFrame); the call still runs."""
+    import importlib
+
+    K = importlib.import_module("geo_index_spark.operators.knn")
+    calls = []
+    real = K._knn_probe
+
+    def spy(lefts, lschema, rpts, *args):
+        calls.append((lefts, rpts))
+        return real(lefts, lschema, rpts, *args)
+
+    monkeypatch.setattr(K, "_knn_probe", spy)
+    return calls
+
+
+def _brute_knn_join(lpts, rpts, k, metric="euclidean", max_d=None):
+    """(left_id, right_id, dist rounded to 1e-6) of the k nearest rights
+    per left by (dist, right_id), with knn_join's distance expression."""
+    lid, lx, ly = (np.array(c)[:, None] for c in zip(*lpts))
+    rid, rx, ry = (np.array(c)[None, :] for c in zip(*rpts))
+    if metric == "euclidean":
+        dx, dy = lx - rx, ly - ry
+        d = np.sqrt(dx * dx + dy * dy)
+    else:
+        h = np.sin(np.radians(ry - ly) / 2) ** 2 + np.cos(np.radians(ly)) * np.cos(
+            np.radians(ry)
+        ) * np.sin(np.radians(rx - lx) / 2) ** 2
+        d = 2.0 * 6378137.0 * np.arcsin(np.sqrt(np.minimum(h, 1.0)))
+    out = []
+    for i in range(d.shape[0]):
+        order = np.lexsort((rid[0], d[i]))
+        if max_d is not None:
+            order = order[d[i][order] <= max_d]
+        out.extend((int(lid[i, 0]), int(rid[0, j]), round(float(d[i, j]), 6)) for j in order[:k])
+    return sorted(out)
+
+
+def _knn_edge_cases():
+    """(name, lefts, rights, k, metric, max_distance) inputs that stress
+    the index probe: ties at the kth distance, k > |right|, a zero
+    max_distance, and haversine lefts on the antimeridian and poles."""
+    lattice = [(i, float(x), float(y)) for i, (x, y) in enumerate((x, y) for x in range(8) for y in range(8))]
+    dup = [(100 + i, x, y) for i, (_, x, y) in enumerate(lattice[::5])] + [
+        (200 + i, x, y) for i, (_, x, y) in enumerate(lattice[::5])
+    ]
+    ties_l = [(0, 0.5, 0.5), (1, 3.0, 4.0), (2, 6.5, 2.5), (3, 0.0, 0.0), (4, 10.0, -3.0)]
+    rng = np.random.default_rng(61)
+    geo_r = [
+        (i, float(x), float(y))
+        for i, (x, y) in enumerate(
+            np.column_stack([rng.uniform(-180, 180, 300), rng.uniform(-90, 90, 300)])
+        )
+    ] + [(300, 180.0, 10.0), (301, -180.0, 10.5), (302, 179.9, 89.9), (303, -179.9, -89.99)]
+    geo_l = [(0, 180.0, 10.0), (1, -180.0, -20.0), (2, 30.0, 90.0), (3, -60.0, -90.0), (4, 180.0, 90.0), (5, -180.0, 0.0)]
+    return [
+        ("ties", ties_l, lattice + dup, 3, "euclidean", None),
+        ("k_gt_right", ties_l, lattice[:4], 6, "euclidean", None),
+        ("max_distance_0", ties_l, lattice + dup, 3, "euclidean", 0.0),
+        ("haversine_poles_antimeridian", geo_l, geo_r, 4, "haversine", None),
+    ]
+
+
+@pytest.mark.parametrize("case", _knn_edge_cases(), ids=lambda c: c[0])
+def test_knn_join_probe_edge_cases_both_callers(spark, monkeypatch, case):
+    """Each edge case through both callers of the index probe: a plain
+    small-left call (the probe answers every left directly), and a tail
+    forced by a tiny init_radius (round 0 certifies nobody, round 1
+    probes the survivors with their certified radii). A zero
+    max_distance is the cover radius itself, so there every left
+    certifies in round 0 and the tail never reaches the probe."""
+    from geo_index_spark.operators.knn import knn_join
+
+    name, lpts, rpts, k, metric, max_d = case
+    ldf = spark.createDataFrame(lpts, "row_id long, x double, y double")
+    rdf = spark.createDataFrame(rpts, "row_id long, x double, y double")
+    want = _brute_knn_join(lpts, rpts, k, metric, max_d)
+    calls = _spy_knn_probe(monkeypatch)
+    for init_radius in (None, 1e-9):
+        calls.clear()
+        got = sorted(
+            (r.left_id, r.right_id, round(r.dist, 6))
+            for r in knn_join(
+                ldf, rdf, k, metric=metric, max_distance=max_d, init_radius=init_radius
+            ).collect()
+        )
+        assert got == want, (name, init_radius)
+        routed = [("r" in lefts.columns, len(lefts)) for lefts, _ in calls]
+        if init_radius is None:
+            assert routed == [(False, len(lpts))], name
+        elif max_d == 0.0:
+            assert routed == [], name
+        else:
+            assert len(routed) == 1 and routed[0][0], (name, routed)
+
+
 def test_knn_join_skewed_density_parity(spark):
     """Round-4 density-aware init_radius: a dense blob next to a sparse
     spread (the city-skew shape that blew up the uniform estimate at
@@ -867,12 +964,10 @@ def test_knn_join_disjoint_supports(spark):
 
 
 def test_knn_join_tail_certified_single_round(spark):
-    """Round-4 session-3 tail certification: for a small euclidean join
-    the coarse-cell prefix sums set every left's radius to a
-    certified-complete bound (smallest Chebyshev cell ring with >= k
-    rights), so the join must converge in ONE round — max_rounds=1 pins
-    that no doubling round survives. Covers the plain case, inclusive
-    max_distance capping, and fewer-than-k rights (full-cover certify)."""
+    """A small euclidean join is answered in one pass by the index
+    probe — max_rounds=1 pins that no candidate round is needed. Covers
+    the plain case, inclusive max_distance capping, and fewer-than-k
+    rights (every right of the table per left)."""
     import numpy as np
     from geo_index_spark.operators.knn import knn_join
 
@@ -917,19 +1012,19 @@ def test_knn_join_tail_certified_single_round(spark):
     assert got_tiny == brute_tiny
 
 
-def test_knn_join_haversine_tail_prefilter_dateline(spark, monkeypatch, capfd):
-    """Haversine straggler-tail rounds now push the coarse-cell isin()
-    prefilter into the cached right scan, with the cellset built from
-    the WRAPPED geo_query_window degree segments (VERDICT r5 Next #4 —
-    euclidean-only before round 6). init_radius=1 m forces every left
-    to fail round 0, so round 1 is a genuine tail round on certified
-    radii; the fixture straddles +-180, so a clamped (unwrapped)
+def test_knn_join_haversine_tail_prefilter_dateline(spark, monkeypatch):
+    """Haversine straggler-tail rounds narrow the cached right scan to
+    the coarse cells of the survivors' boxes, with the cellset built
+    from the WRAPPED geo_query_window degree segments (VERDICT r5 Next
+    #4). init_radius=1 m forces every left to fail round 0, so round 1
+    is a genuine tail round on certified radii, answered by the index
+    probe; the fixture straddles +-180, so a clamped (unwrapped)
     cellset would drop the across-the-line neighbors and break
-    exactness. GEO_KNN_DEBUG must show the prefilter engaging with a
-    neighborhood-sized cellset (well under the full grid)."""
-    import re
-
+    exactness. The probe must read the right through the cellset
+    filter (at this fixture's 4x4 coarse grid the ring-bound boxes
+    cover the globe, so the filter keeps every cell here)."""
     import numpy as np
+
     from geo_index_spark.operators.knn import knn_join
 
     rng = np.random.default_rng(9)
@@ -951,18 +1046,16 @@ def test_knn_join_haversine_tail_prefilter_dateline(spark, monkeypatch, capfd):
     ]
     ldf = spark.createDataFrame(lpts, "row_id long, x double, y double")
 
-    monkeypatch.setenv("GEO_KNN_DEBUG", "1")
+    calls = _spy_knn_probe(monkeypatch)
     got = sorted(
         (r.left_id, r.right_id, round(r.dist, 6))
         for r in knn_join(
             ldf, rdf, 4, metric="haversine", init_radius=1.0
         ).collect()
     )
-    err = capfd.readouterr().err
-    hits = re.findall(r"tail prefilter: \d+ lefts -> (\d+)/(\d+) coarse cells", err)
-    assert hits, f"haversine tail prefilter never engaged:\n{err}"
-    # the certified-radius tail round must read a neighborhood, not the grid
-    assert any(int(c) < int(total) for c, total in hits)
+    # one tail probe, on certified radii, over the cellset-filtered right
+    assert [("r" in lefts.columns, len(lefts)) for lefts, _ in calls] == [(True, 12)]
+    assert "LeftSemi" in calls[0][1]._jdf.queryExecution().optimizedPlan().toString()
 
     R = 6378137.0
 
@@ -985,12 +1078,11 @@ def test_knn_join_haversine_tail_prefilter_dateline(spark, monkeypatch, capfd):
 
 
 def test_knn_join_certified_upfront_one_round_16m_shape(spark):
-    """Round-5 rework: certified ring radii seed round 0 for EVERY left
-    (not just the <= 5,000 tail), so a mid-size join in the 16M bench's
-    shape — skewed city clusters + uniform spread + deep voids — must
-    converge in ONE round. n_left exceeds the old 5,000 tail threshold
-    to prove it's the new up-front path. Euclidean AND haversine (the
-    haversine bound is the meridian+parallel corner path)."""
+    """A mid-size left side (above the old 5,000-left tail threshold,
+    below CERT_UPFRONT_MAX_LEFTS) in the 16M bench's shape — skewed city
+    clusters + uniform spread + deep voids — goes to the index probe in
+    one pass: max_rounds=1. Euclidean AND haversine (wrap-aware
+    Flatbush box bound)."""
     import numpy as np
     from geo_index_spark.operators.knn import knn_join
 
@@ -1139,81 +1231,6 @@ def test_knn_join_empty_sides(spark):
         out = knn_join(ldf, rdf, 3)
         assert [f.name for f in out.schema.fields] == ["left_id", "right_id", "dist"]
         assert out.count() == 0
-
-
-def test_sparse_ring_refine_kernel():
-    """Numpy unit contract for the tail fine-grid refinement (round 6):
-    the returned radius is (a) never looser than r_old, (b) a TRUE
-    kth-NN upper bound whenever the counted grid covers the r_old box,
-    and boxcnt is the exact number of counted points inside the final
-    radius box. Random clustered-plus-void layouts, both metrics."""
-    import numpy as np
-
-    from geo_index_spark.operators.knn import EARTH_RADIUS_M, _sparse_ring_refine
-
-    rng = np.random.default_rng(17)
-    bounds = (-10.0, -10.0, 10.0, 10.0)
-    nc_f, k = 64, 3
-    cell_f = (bounds[2] - bounds[0]) / nc_f
-    # clustered rights + sprinkle, inside bounds
-    pts = np.vstack(
-        [
-            rng.normal((3.0, 3.0), 0.3, (400, 2)),
-            rng.normal((-6.0, 5.0), 0.5, (200, 2)),
-            rng.uniform(-9.9, 9.9, (60, 2)),
-        ]
-    )
-    pts = pts[(np.abs(pts[:, 0]) < 10) & (np.abs(pts[:, 1]) < 10)]
-    fx = np.clip(((pts[:, 0] - bounds[0]) / cell_f).astype(np.int64), 0, nc_f - 1)
-    fy = np.clip(((pts[:, 1] - bounds[1]) / cell_f).astype(np.int64), 0, nc_f - 1)
-    key = fx * nc_f + fy
-    uk, cnt = np.unique(key, return_counts=True)
-    gfx, gfy, gcnt = uk // nc_f, uk % nc_f, cnt
-
-    for metric in ("euclidean", "haversine"):
-        # lefts: one inside each cluster, one void corner, one centre
-        px = np.array([3.0, -6.0, -9.0, 0.5])
-        py = np.array([3.0, 5.0, -9.0, 0.5])
-        if metric == "haversine":
-            # loose certified start: meridian arc of 8 degrees
-            r_old = np.full(4, EARTH_RADIUS_M * np.radians(8.0))
-        else:
-            r_old = np.full(4, 8.0)
-        out, boxcnt = _sparse_ring_refine(
-            gfx, gfy, gcnt, nc_f, cell_f, bounds, px, py, r_old, k, metric, 1e-9
-        )
-        assert (out <= r_old + 1e-12).all()
-        for i in range(4):
-            if metric == "haversine":
-                lat1, lon1 = np.radians(py[i]), np.radians(px[i])
-                lat2, lon2 = np.radians(pts[:, 1]), np.radians(pts[:, 0])
-                h = (
-                    np.sin((lat2 - lat1) / 2) ** 2
-                    + np.cos(lat1) * np.cos(lat2) * np.sin((lon2 - lon1) / 2) ** 2
-                )
-                d = 2 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.minimum(1.0, h)))
-            else:
-                d = np.hypot(pts[:, 0] - px[i], pts[:, 1] - py[i])
-            kth = np.sort(d)[k - 1]
-            # (b): refined radius still covers the true kth-NN
-            assert out[i] >= kth - 1e-9, (metric, i, out[i], kth)
-            # (c): boxcnt is exact for the final box (counted grid covers
-            # the whole domain here). Recompute the box the kernel used.
-            if boxcnt[i] < 2**62:
-                if metric == "haversine":
-                    hd = np.degrees(out[i] / EARTH_RADIUS_M)
-                    hd = hd / max(np.cos(np.radians(py[i])), 1e-6)
-                else:
-                    hd = out[i]
-                jb = int(np.ceil(hd / cell_f)) + 1
-                cx = int(np.clip((px[i] - bounds[0]) / cell_f, 0, nc_f - 1))
-                cy = int(np.clip((py[i] - bounds[1]) / cell_f, 0, nc_f - 1))
-                cheb = np.maximum(np.abs(gfx - cx), np.abs(gfy - cy))
-                assert boxcnt[i] == int(gcnt[cheb <= jb].sum())
-        # at least the cluster lefts must have shrunk materially and
-        # produced finite box counts
-        assert (out[:2] < 0.8 * r_old[:2]).all()
-        assert (boxcnt[:2] < 2**62).all()
 
 
 def test_knn_join_right_count_hint(spark):
