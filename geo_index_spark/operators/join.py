@@ -117,6 +117,15 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
+def _shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions``; 200 (Spark's default) when the
+    conf is not a number ("auto" on some platforms)."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return 200
+
+
 def _auto_broadcast_threshold(spark) -> int:
     try:
         raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold")).lower()
@@ -222,12 +231,7 @@ def spatial_join(
         thr = _auto_broadcast_threshold(left.sparkSession)
         lsz = _plan_size_bytes(left)
         rsz = lsz if right is left else _plan_size_bytes(right)
-        try:
-            n_part = int(
-                left.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            n_part = 200
+        n_part = _shuffle_partitions(left.sparkSession)
         if (
             lsz is not None
             and rsz is not None

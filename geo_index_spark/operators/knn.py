@@ -18,6 +18,11 @@ scan into a pushed-down bbox filter first.
 
 from __future__ import annotations
 
+import logging
+import time
+from typing import NamedTuple
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -32,15 +37,11 @@ def euclidean_dist_col(x: Column, y: Column, qx: float, qy: float) -> Column:
 
 
 def haversine_dist_col(lon: Column, lat: Column, qlon: float, qlat: float) -> Column:
-    """Great-circle meters, same formula as reference
-    src/rtree/distance.rs:84-114 — all JVM built-ins."""
-    lat1 = F.radians(F.lit(float(qlat)))
-    lat2 = F.radians(lat)
-    dlat = F.radians(lat - F.lit(float(qlat)))
-    dlon = F.radians(lon - F.lit(float(qlon)))
-    h = F.pow(F.sin(dlat / 2), 2) + F.cos(lat1) * F.cos(lat2) * F.pow(F.sin(dlon / 2), 2)
-    h = F.least(h, F.lit(1.0))
-    return F.lit(2.0 * EARTH_RADIUS_M) * F.asin(F.sqrt(h))
+    """Great-circle meters to a literal query point, same formula as
+    reference src/rtree/distance.rs:84-114 — all JVM built-ins."""
+    from geo_index_spark.operators.join import haversine_pair_col
+
+    return haversine_pair_col(F.lit(float(qlon)), F.lit(float(qlat)), lon, lat)
 
 
 def box_distance_col(
@@ -102,8 +103,6 @@ def point_to_geom_np(px, py, vertices: list[list[float]], geom_type: str):
     :func:`geom_distance_col`; also the >32-edge Arrow fast path).
     Polyline: min point-to-segment distance. Polygon: 0 inside
     (even-odd ray cast), else min distance to the ring."""
-    import numpy as np
-
     px = np.asarray(px, np.float64)[:, None]
     py = np.asarray(py, np.float64)[:, None]
     e = np.array(_geom_edges(vertices, geom_type), dtype=np.float64)
@@ -247,6 +246,101 @@ def knn_geometry(
 # the lefts and their slice lists ride one broadcast
 CERT_UPFRONT_MAX_LEFTS = 65_536
 
+# caps of the big-left round plan (:func:`_plan_buckets`): a level
+# bucket broadcasts its exploded lefts only with <= BCAST_MAX_LEFTS
+# lefts and <= BCAST_BUCKET_MAX_ROWS estimated exploded rows, and the
+# whole broadcast stays <= BCAST_MAX_ROWS. The partitioned join builds
+# its exploded lefts into an unspillable SHUFFLE_HASH relation only up
+# to SHJ_MAX_ROWS_PER_PARTITION rows per shuffle partition (~2.5 MB,
+# the budget the round-7 spatial_join A/B put on unspillable builds;
+# ADVICE r6), else the spill-safe sort-merge join runs.
+BCAST_MAX_LEFTS = 200_000
+BCAST_BUCKET_MAX_ROWS = 2_000_000
+BCAST_MAX_ROWS = 4_000_000
+SHJ_MAX_ROWS_PER_PARTITION = 50_000
+
+_log = logging.getLogger(__name__)
+
+
+def _record(decision: str, t0: float, **inputs) -> None:
+    """One INFO record (``knn_decision``, ``knn_inputs``) per knn_join
+    scale decision, its inputs plus ``elapsed_s`` since the call's ``t0``."""
+    inputs["elapsed_s"] = round(time.perf_counter() - t0, 3)
+    extra = {"knn_decision": decision, "knn_inputs": inputs}
+    _log.info("knn_join %s %s", decision, inputs, extra=extra)
+
+
+class BucketPlan(NamedTuple):
+    """One big-left round's candidate joins (:func:`_plan_buckets`)."""
+
+    bcast_levels: list[int]  # one broadcast join keyed on (level, cell)
+    remap: dict[int, int]  # bucket level -> finer broadcast level it folds into
+    part_levels: list[int]  # one partitioned join over these levels
+    shuffle_hash: bool  # hint of the partitioned join; False = sort-merge
+    bcast_rows: float  # estimated exploded rows of each join
+    part_rows: float
+
+
+def _plan_buckets(
+    buckets: list[tuple[int, int, float]], ext_u: float, n_shuffle: int
+) -> BucketPlan:
+    """Pure plan of one big-left round from its ``(level, lefts, max r)``
+    buckets: which levels broadcast their exploded lefts in ONE
+    multilevel join (right is scanned, not re-shuffled) and which run
+    ONE partitioned join — the partition-or-not decision. A left at
+    level l explodes into the cells its +-r box touches, at most
+    (2 r / cell + 2)^2 of them (``ext_u`` is the domain extent in r's
+    units); quantization keeps that <= ~3x3 except at the level-4 clamp
+    (near-cover radii), where the factor grows."""
+
+    def rows(cnt: int, rmx: float, lvl: int) -> float:
+        return cnt * (2.0 * rmx / (ext_u / (1 << lvl)) + 2.0) ** 2
+
+    small: list[list] = []  # [lvl, cnt, rmx, est. exploded rows]
+    part: list[tuple[int, float]] = []  # (lvl, est)
+    for lvl, cnt, rmx in sorted(buckets):
+        est = rows(cnt, float(rmx), int(lvl))
+        if cnt <= BCAST_MAX_LEFTS and est <= BCAST_BUCKET_MAX_ROWS:
+            small.append([int(lvl), cnt, float(rmx), est])
+        else:
+            part.append((int(lvl), est))
+    # LEVEL MERGE (round 7): the multilevel join explodes EVERY right
+    # point once per present level, so each level is a probe pass over
+    # right. Fold a coarser broadcast bucket into the next finer one when
+    # ITS lefts re-estimated at the finer level fit BCAST_BUCKET_MAX_ROWS
+    # (finer cells still cover the box). A heuristic, not a cap: the
+    # merged bucket may exceed both per-bucket caps (16M bench shape:
+    # level 16 holds 200,038 lefts / ~2.10M rows; gating on the combined
+    # estimate splits it into 14 and 16, one more pass over right).
+    remap: dict[int, int] = {}
+    i = 0
+    while i < len(small) - 1:
+        lvl_s, cnt_s, rmx_s, _ = small[i]
+        lvl_t, cnt_t, rmx_t, est_t = small[i + 1]
+        est_s = rows(cnt_s, rmx_s, lvl_t)
+        if est_s <= BCAST_BUCKET_MAX_ROWS:
+            remap = {s: (lvl_t if d == lvl_s else d) for s, d in remap.items()}
+            remap[lvl_s] = lvl_t
+            small[i + 1] = [lvl_t, cnt_s + cnt_t, max(rmx_s, rmx_t), est_t + est_s]
+            small.pop(i)
+        else:
+            i += 1
+    # the bound that holds: the whole broadcast <= BCAST_MAX_ROWS, a
+    # lone bucket included — demote the largest estimate until it does,
+    # keeping the broadcast savings for the rest (ADVICE r4, r7)
+    while sum(b[3] for b in small) > BCAST_MAX_ROWS:
+        lvl_w, _, _, est_w = small.pop(max(range(len(small)), key=lambda j: small[j][3]))
+        part.append((lvl_w, est_w))
+    part_rows = sum(est for _, est in part)
+    return BucketPlan(
+        bcast_levels=[b[0] for b in small],
+        remap=remap,
+        part_levels=sorted(lvl for lvl, _ in part),
+        shuffle_hash=part_rows <= SHJ_MAX_ROWS_PER_PARTITION * n_shuffle,
+        bcast_rows=sum(b[3] for b in small),
+        part_rows=part_rows,
+    )
+
 
 def _ring_certified_radii(
     P,
@@ -275,8 +369,6 @@ def _ring_certified_radii(
     ``cover_r`` (the unconditional-certify radius). Requires every
     right within ``bounds`` — the same contract cover-radius
     certification already relies on."""
-    import numpy as np
-
     px = np.asarray(px, np.float64)
     py = np.asarray(py, np.float64)
     n = len(px)
@@ -320,6 +412,19 @@ def _ring_certified_radii(
     return np.clip(rb, r_floor, cover_r)
 
 
+def _box_cells(boxes, lox: float, loy: float, cell: float, nc: int):
+    """Sorted ids ``cx * nc + cy`` of the cells of the nc x nc grid at
+    (lox, loy) with edge ``cell`` that the (minx, miny, maxx, maxy) rows
+    of ``boxes`` touch, clamped to the grid: +-1 at each box's corners
+    on a 2-D difference grid, then a prefix sum — O(boxes + grid),
+    however many cells one box spans."""
+    ij = np.clip(((boxes - [lox, loy, lox, loy]) / cell).astype(np.int64), 0, nc - 1)
+    D = np.zeros((nc + 1, nc + 1), np.int32)
+    for xi, yi, sign in ((0, 1, 1), (2, 1, -1), (0, 3, -1), (2, 3, 1)):
+        np.add.at(D, (ij[:, xi] + (xi == 2), ij[:, yi] + (yi == 3)), sign)
+    return np.flatnonzero(D.cumsum(axis=0).cumsum(axis=1)[:nc, :nc])
+
+
 def _pair_dist_col(metric: str) -> Column:
     """Distance between left (px, py) and right (qx, qy) columns — the
     one expression every knn_join path emits and ranks by."""
@@ -332,50 +437,68 @@ def _pair_dist_col(metric: str) -> Column:
     return F.sqrt(dx * dx + dy * dy)
 
 
-def _knn_point_candidates(
+def _knn_candidates(
     rem: DataFrame,
     rpts: DataFrame,
     bounds: tuple[float, float, float, float],
-    level: int,
+    levels: list[int],
+    lvl_col: Column,
     metric: str,
-    shuffle_hash: bool = True,
+    hint: str | None,
 ) -> DataFrame:
     """Candidate (left_id, right_id, dist, r) pairs for one knn_join
     round: every right point lying in a grid cell touched by the left's
-    per-row radius box. Point-specialized: the right side ships only
-    (id, x, y, cell) — 1 cell per point, no box columns — roughly
-    halving the shuffled bytes of the join's big side vs the generic
-    box-box :func:`~geo_index_spark.operators.join.spatial_join`, and
-    pair uniqueness is structural (a point is in exactly one cell) so
-    no reference-cell dedup predicate is needed. Candidates are a
+    per-row radius box at the left's own level ``lvl_col`` (one of
+    ``levels``). Keyed on (level, cell): each left explodes into its
+    box's cells, each right point once per level (<= 7 rows), so one
+    pass over right serves every level; with ONE level both sides use
+    the literal level and the key is the cell alone. ``hint`` is the
+    left side's join hint: "broadcast", "SHUFFLE_HASH" or None.
+
+    Point-specialized: the right side ships only (id, x, y, cell) — no
+    box columns — roughly halving the shuffled bytes of the join's big
+    side vs the generic box-box
+    :func:`~geo_index_spark.operators.join.spatial_join`, and pair
+    uniqueness is structural (a point is in exactly one cell per level)
+    so no reference-cell dedup predicate is needed. Candidates are a
     SUPERSET of the box (whole touched cells) — harmless, the top-k
     window keeps the closest and certification only needs completeness.
     Haversine boxes may wrap into 2 disjoint lon segments; a
     lon-containment residual keeps a pair in its own segment's cells so
     it cannot be emitted once per segment."""
-    from geo_index_spark.operators.join import _cell_coord, haversine_candidate_boxes
+    from geo_index_spark.operators.join import haversine_candidate_boxes
 
-    nc = 1 << level
     lox, loy, hix, hiy = bounds
-    inv_wx = nc / (hix - lox) if hix > lox else 0.0
-    inv_wy = nc / (hiy - loy) if hiy > loy else 0.0
+    one = len(levels) == 1
+    keep = ("r",) if one else ("r", "_lvl")
+    if one:  # integer cells: a double level adds per-row casts and a not-null filter
+        nc = F.lit(1 << int(levels[0]))
+    else:
+        rem = rem.withColumn("_lvl", lvl_col)
+        nc = F.pow(F.lit(2.0), F.col("_lvl"))  # exact in doubles up to 2^16
+    inv_x = nc * F.lit(1.0 / (hix - lox)) if hix > lox else F.lit(0.0)
+    inv_y = nc * F.lit(1.0 / (hiy - loy)) if hiy > loy else F.lit(0.0)
+
+    def _cc(v, lo, inv):  # grid cell of v at the row's level, clamped
+        g = F.floor((v - F.lit(lo)) * inv)
+        return F.greatest(F.lit(0), F.least(nc - 1, g)).cast("long")
 
     residual = None
     if metric == "haversine":
         lb = haversine_candidate_boxes(
-            rem, F.col("r"), id_col="lid", lon_col="px", lat_col="py", keep=("r",)
+            rem, F.col("r"), id_col="lid", lon_col="px", lat_col="py", keep=keep
         )
         le = lb.select(
             F.col("row_id").alias("left_id"),
             "px",
             "py",
-            "r",
+            *keep,
             "minx",
             "maxx",
-            _cell_coord(F.col("minx"), lox, inv_wx, nc).alias("cx0"),
-            _cell_coord(F.col("maxx"), lox, inv_wx, nc).alias("cx1"),
-            _cell_coord(F.col("miny"), loy, inv_wy, nc).alias("cy0"),
-            _cell_coord(F.col("maxy"), loy, inv_wy, nc).alias("cy1"),
+            _cc(F.col("minx"), lox, inv_x).alias("cx0"),
+            _cc(F.col("maxx"), lox, inv_x).alias("cx1"),
+            _cc(F.col("miny"), loy, inv_y).alias("cy0"),
+            _cc(F.col("maxy"), loy, inv_y).alias("cy1"),
         )
         # segment-containment residual (lon only — the lat band is the
         # same for both wrap segments, so lon alone kills cross-segment
@@ -386,98 +509,7 @@ def _knn_point_candidates(
             F.col("lid").alias("left_id"),
             "px",
             "py",
-            "r",
-            _cell_coord(F.col("px") - F.col("r"), lox, inv_wx, nc).alias("cx0"),
-            _cell_coord(F.col("px") + F.col("r"), lox, inv_wx, nc).alias("cx1"),
-            _cell_coord(F.col("py") - F.col("r"), loy, inv_wy, nc).alias("cy0"),
-            _cell_coord(F.col("py") + F.col("r"), loy, inv_wy, nc).alias("cy1"),
-        )
-    le = (
-        le.select("*", F.explode(F.sequence(F.col("cx0"), F.col("cx1"))).alias("cx"))
-        .select("*", F.explode(F.sequence(F.col("cy0"), F.col("cy1"))).alias("cy"))
-        .withColumn("cell", F.col("cx") * F.lit(nc) + F.col("cy"))
-        .drop("cx0", "cx1", "cy0", "cy1", "cx", "cy")
-    )
-    re = rpts.select(
-        F.col("rid").alias("right_id"),
-        "qx",
-        "qy",
-        (
-            _cell_coord(F.col("qx"), lox, inv_wx, nc) * F.lit(nc)
-            + _cell_coord(F.col("qy"), loy, inv_wy, nc)
-        ).alias("cell"),
-    )
-    # SHUFFLE_HASH on the exploded-lefts side: the partitioned-bucket
-    # join's build side is the exploded lefts (~9 cells/left), far
-    # smaller than the right table per partition — a sort-merge join
-    # would SORT all of right by cell, the single most expensive part of
-    # the round-0 job (measured ~1/3 of the 32M top job). The hint is
-    # per-join, so no session-wide preferSortMergeJoin change leaks to
-    # other operators. ``shuffle_hash=False`` (caller estimated the
-    # exploded lefts too big for an unspillable per-partition hash
-    # relation, ADVICE r6) falls back to the planner's sort-merge.
-    j = (le.hint("SHUFFLE_HASH") if shuffle_hash else le).join(re, "cell", "inner")
-    if residual is not None:
-        j = j.filter(residual)
-    return j.select("left_id", "right_id", _pair_dist_col(metric).alias("dist"), "r")
-
-
-def _knn_point_candidates_multi(
-    rem: DataFrame,
-    rpts: DataFrame,
-    bounds: tuple[float, float, float, float],
-    levels: list[int],
-    metric: str,
-    lvl_col: Column,
-) -> DataFrame:
-    """Multilevel variant of :func:`_knn_point_candidates` for the
-    all-broadcast case: every level bucket joins in ONE pass by keying
-    on (level, cell) — the broadcast side holds each left exploded at
-    its OWN quantized level, and the right side explodes each point
-    once per PRESENT level (a literal array, so |levels| <= 7 rows per
-    point) instead of being scanned once per bucket."""
-    from geo_index_spark.operators.join import haversine_candidate_boxes
-
-    lox, loy, hix, hiy = bounds
-    nc_l = F.pow(F.lit(2.0), F.col("_lvl"))  # exact in doubles up to 2^16
-    inv_x = nc_l * F.lit(1.0 / (hix - lox)) if hix > lox else F.lit(0.0)
-    inv_y = nc_l * F.lit(1.0 / (hiy - loy)) if hiy > loy else F.lit(0.0)
-
-    def _cc(v, lo, inv):
-        g = F.floor((v - F.lit(lo)) * inv)
-        return F.greatest(F.lit(0), F.least(nc_l - 1, g)).cast("long")
-
-    residual = None
-    if metric == "haversine":
-        lb = haversine_candidate_boxes(
-            rem.withColumn("_lvl", lvl_col),
-            F.col("r"),
-            id_col="lid",
-            lon_col="px",
-            lat_col="py",
-            keep=("r", "_lvl"),
-        )
-        le = lb.select(
-            F.col("row_id").alias("left_id"),
-            "px",
-            "py",
-            "r",
-            "_lvl",
-            "minx",
-            "maxx",
-            _cc(F.col("minx"), lox, inv_x).alias("cx0"),
-            _cc(F.col("maxx"), lox, inv_x).alias("cx1"),
-            _cc(F.col("miny"), loy, inv_y).alias("cy0"),
-            _cc(F.col("maxy"), loy, inv_y).alias("cy1"),
-        )
-        residual = (F.col("qx") >= F.col("minx")) & (F.col("qx") <= F.col("maxx"))
-    else:
-        le = rem.withColumn("_lvl", lvl_col).select(
-            F.col("lid").alias("left_id"),
-            "px",
-            "py",
-            "r",
-            "_lvl",
+            *keep,
             _cc(F.col("px") - F.col("r"), lox, inv_x).alias("cx0"),
             _cc(F.col("px") + F.col("r"), lox, inv_x).alias("cx1"),
             _cc(F.col("py") - F.col("r"), loy, inv_y).alias("cy0"),
@@ -486,18 +518,26 @@ def _knn_point_candidates_multi(
     le = (
         le.select("*", F.explode(F.sequence(F.col("cx0"), F.col("cx1"))).alias("cx"))
         .select("*", F.explode(F.sequence(F.col("cy0"), F.col("cy1"))).alias("cy"))
-        .withColumn("cell", F.col("cx") * nc_l.cast("long") + F.col("cy"))
+        .withColumn("cell", F.col("cx") * nc.cast("long") + F.col("cy"))
         .drop("cx0", "cx1", "cy0", "cy1", "cx", "cy")
     )
     re = rpts.select(
         F.col("rid").alias("right_id"),
         "qx",
         "qy",
-        F.explode(F.array(*[F.lit(int(l)) for l in levels])).alias("_lvl"),
+        *([] if one else [F.explode(F.array(*[F.lit(int(v)) for v in levels])).alias("_lvl")]),
     ).withColumn(
-        "cell", _cc(F.col("qx"), lox, inv_x) * nc_l.cast("long") + _cc(F.col("qy"), loy, inv_y)
+        "cell", _cc(F.col("qx"), lox, inv_x) * nc.cast("long") + _cc(F.col("qy"), loy, inv_y)
     )
-    j = F.broadcast(le).join(re, ["_lvl", "cell"], "inner")
+    # SHUFFLE_HASH on the exploded-lefts side: the partitioned join's
+    # build side is the exploded lefts (~9 cells/left), far smaller than
+    # the right table per partition — a sort-merge join would SORT all
+    # of right by cell, the single most expensive part of the round-0
+    # job (measured ~1/3 of the 32M top job). The hint is per-join, so
+    # no session-wide preferSortMergeJoin change leaks to other
+    # operators; the planner withholds it when the exploded lefts are
+    # too big for an unspillable per-partition hash relation (ADVICE r6).
+    j = (le.hint(hint) if hint else le).join(re, ["cell"] if one else ["_lvl", "cell"], "inner")
     if residual is not None:
         j = j.filter(residual)
     return j.select("left_id", "right_id", _pair_dist_col(metric).alias("dist"), "r")
@@ -531,7 +571,6 @@ def _knn_probe(
     the Catalyst expression of the candidate rounds (Flatbush ranks by
     ``np.hypot``, which differs in the last bit), and a ``row_number``
     per left by (dist, right_id) keeps the top k."""
-    import numpy as np
     import pyarrow as pa
     from pyspark.sql import Window
     from pyspark.sql.types import StructField, StructType
@@ -664,7 +703,7 @@ def knn_join(
     Simba/Sedona candidate-join family, pure Catalyst). Each left
     carries its own radius column ``r``; a round candidate-joins the
     unsatisfied lefts against right within their +-r boxes
-    (point-specialized grid join, :func:`_knn_point_candidates`), takes
+    (point-specialized grid join, :func:`_knn_candidates`), takes
     per-left top-k by window, and CERTIFIES a left exact when it has k
     candidates with kth distance <= its r — no right outside the box
     can beat them. Survivors do NOT double-and-retry (round 4's x4/x8
@@ -720,14 +759,16 @@ def knn_join(
     edge >= the left's box, even levels, <= 7 buckets) — one level
     cannot serve mixed radii: tiny boxes joined at a coarse level
     cross-product whole dense cells, big boxes at a fine level explode
-    to thousands of cells. One candidate join runs per occupied
-    bucket; minority buckets broadcast their (exploded) lefts so right
-    is scanned, not re-shuffled — in the common case that is ONE
-    partitioned join (rights shuffle once) plus cheap scans. Once the
-    whole tail is < ~200k lefts every bucket broadcasts. The skinny
-    right projection is persisted MEMORY_AND_DISK up front, so the
-    bounds pass, both density counts, and every broadcast-bucket scan
-    read one materialization.
+    to thousands of cells. The pure :func:`_plan_buckets` splits the
+    buckets between AT MOST TWO candidate joins keyed on (level, cell):
+    one broadcasts the exploded lefts of the buckets under its caps
+    (coarser levels folded into finer ones) so right is scanned, not
+    re-shuffled; one partitioned join takes the rest. The skinny right
+    projection is persisted MEMORY_AND_DISK up front, so the bounds
+    pass, both density counts, and every broadcast scan read one
+    materialization. Each scale decision — the density grid, every
+    round's plan, the survivors, the tail cellset — is one INFO record
+    on this module's logger (:func:`_record`).
 
     ``metric="haversine"``: radius in METERS over (lon, lat) degrees;
     candidate boxes use the provably-containing degree expansion of
@@ -739,25 +780,12 @@ def knn_join(
     radius (pi*R -> dlat = dlon = 180) genuinely covers the domain.
     Out-of-range latitudes raise (row-level check in the expansion)."""
     import math
-    import os
-    import sys
-    import time as _time
 
     from pyspark.sql import Window
 
-    from geo_index_spark.operators.join import choose_grid_level
+    from geo_index_spark.operators.join import _shuffle_partitions, choose_grid_level
 
-    debug = bool(os.environ.get("GEO_KNN_DEBUG"))
-    t_init = _time.perf_counter()
-
-    def _dbg(msg: str) -> None:
-        if debug:
-            print(
-                f"[knn_join]   init+{_time.perf_counter() - t_init:.1f}s {msg}",
-                file=sys.stderr,
-                flush=True,
-            )
-
+    t0 = time.perf_counter()
     if metric not in ("euclidean", "haversine"):
         raise ValueError(f"metric must be euclidean|haversine, got {metric!r}")
     # meters per degree at the equator — only a SCALE GUESS for start
@@ -778,10 +806,7 @@ def knn_join(
     rpts = right.select(
         F.col(right_id).alias("rid"), F.col(rx).alias("qx"), F.col(ry).alias("qy")
     ).persist(_SL.MEMORY_AND_DISK)
-    try:
-        n_shuffle = int(lpts.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n_shuffle = 200  # conf may be "auto" on some platforms
+    n_shuffle = _shuffle_partitions(lpts.sparkSession)
 
     def _empty_result() -> DataFrame:
         rpts.unpersist(blocking=False)
@@ -854,11 +879,20 @@ def knn_join(
     nc_d = 1 << gd
     cell_d = ext / nc_d
 
-    def _coarse_cell(c, lo):
-        return F.least(
-            F.lit(nc_d - 1),
-            F.greatest(F.lit(0), F.floor((c - F.lit(lo)) / F.lit(cell_d))),
+    def _grid_cell(nc, cell):
+        # clamped cell index of coordinate c on an nc-cell axis from lo
+        return lambda c, lo: F.least(
+            F.lit(nc - 1),
+            F.greatest(F.lit(0), F.floor((c - F.lit(lo)) / F.lit(cell))),
         ).cast("long")
+
+    _coarse_cell = _grid_cell(nc_d, cell_d)
+
+    def _coarse_counts() -> DataFrame:  # (ccx, ccy, cnt) per occupied cell
+        return rpts.groupBy(
+            _coarse_cell(F.col("qx"), bounds[0]).alias("ccx"),
+            _coarse_cell(F.col("qy"), bounds[1]).alias("ccy"),
+        ).agg(F.count(F.lit(1)).alias("cnt"))
 
     C_df = None  # coarse per-cell counts, when materialized below
 
@@ -868,14 +902,7 @@ def knn_join(
         # one tiny count job on the cached skinny right projection. The
         # array is BOUNDED by the gd <= 12 cap ((4097)^2 int64 =
         # 134 MB worst, ~8 MB at the 64M shape) independent of |right|.
-        import numpy as np
-
-        src = C_df
-        if src is None:
-            src = rpts.groupBy(
-                _coarse_cell(F.col("qx"), bounds[0]).alias("ccx"),
-                _coarse_cell(F.col("qy"), bounds[1]).alias("ccy"),
-            ).agg(F.count(F.lit(1)).alias("cnt"))
+        src = C_df if C_df is not None else _coarse_counts()
         G = np.zeros((nc_d, nc_d), dtype=np.int64)
         pdf = src.toPandas()  # Arrow path: ~1M cells at gd=10 in <1 s
         G[pdf["ccx"].to_numpy(), pdf["ccy"].to_numpy()] = pdf["cnt"].to_numpy()
@@ -883,7 +910,6 @@ def knn_join(
         P[1:, 1:] = G.cumsum(axis=0).cumsum(axis=1)
         return P
 
-    dense_r = None
     # True whenever every row of `remaining` carries a CERTIFIED-complete
     # radius (kth-NN <= r guaranteed): every post-transition round.
     # Density-guess round 0 (and a user-supplied init_radius round 0)
@@ -894,14 +920,12 @@ def knn_join(
     if init_radius is not None:
         r0 = F.lit(min(max(float(init_radius), r_floor), cover_r))
         remaining = lpts.select("lid", "px", "py", r0.alias("r"))
-        dense_r = float(init_radius)
     else:
         # bounded probe instead of a full lpts.count() (ADVICE r5): a
         # LIMIT of threshold+1 rows decides the branch, and when the
         # left IS small the probe already holds every row — reuse it
         # and skip the second collect entirely.
         probe_pdf = lpts.limit(CERT_UPFRONT_MAX_LEFTS + 1).toPandas()
-        _dbg("left-size probe collected")
         if len(probe_pdf) <= CERT_UPFRONT_MAX_LEFTS:
             # small left side: one exact index-probe pass — no density
             # counts, no ring radii, no rounds
@@ -912,16 +936,7 @@ def knn_join(
             # per-cell right counts, materialized once (reused by the max
             # agg AND the neighborhood dilation — one pass over right, and
             # the table is bounded by 4^12 cells regardless of |right|)
-            C = (
-                rpts.groupBy(
-                    _coarse_cell(F.col("qx"), bounds[0]).alias("ccx"),
-                    _coarse_cell(F.col("qy"), bounds[1]).alias("ccy"),
-                )
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .localCheckpoint()
-            )
-            C_df = C
-            _dbg("coarse density counts checkpointed")
+            C = C_df = _coarse_counts().localCheckpoint()
             # ONE tiny job on checkpointed C serves both the max-count
             # (densest-cell radius scale) and the dense-cell count that
             # previously ran as a second job
@@ -931,7 +946,6 @@ def knn_join(
             ).first()
             mx = crow["mx"] or 1
             n_dense = int(crow["nd"] or 0)
-            _dbg("density-grid stats aggregated")
             dense_r = cell_d * math.sqrt(float(k) / max(float(mx), 1.0)) * unit
             # 3x3-neighborhood sum: dilate C by the 9 offsets, re-aggregate,
             # then each left looks up its OWN cell — lefts stay un-exploded
@@ -967,12 +981,7 @@ def knn_join(
             f_level = choose_grid_level(bounds, 2 * dense_r / unit, 2 * dense_r / unit)
             nc_f = 1 << f_level
             cell_f = ext / nc_f
-
-            def _fine_cell(c, lo):
-                return F.least(
-                    F.lit(nc_f - 1),
-                    F.greatest(F.lit(0), F.floor((c - F.lit(lo)) / F.lit(cell_f))),
-                ).cast("long")
+            _fine_cell = _grid_cell(nc_f, cell_f)
 
             # only DENSE coarse cells feed the fine count: elsewhere the
             # fine grid (sized for the densest region) holds ~0-1 points
@@ -999,6 +1008,18 @@ def knn_join(
             cf_rate = 0.125 if n_right >= 4_000_000 else 1.0
             cf_src = rpts if cf_rate >= 1.0 else rpts.sample(
                 fraction=cf_rate, seed=7
+            )
+            _record(
+                "density_grid",
+                t0,
+                n_right=n_right,
+                level=gd,
+                cell=cell_d,
+                max_cell_rights=mx,
+                dense_cells=n_dense,
+                dense_r=dense_r,
+                fine_level=f_level,
+                fine_sample=cf_rate,
             )
             if n_dense:  # no dense cells -> skip the fine pass entirely
                 Cf = (
@@ -1077,10 +1098,8 @@ def knn_join(
     # radii (tiny boxes in a coarse cell cross-product the whole cell's
     # cluster; big boxes at a fine level explode to thousands of
     # cells). Quantize each left's level (cell edge >= its box, even
-    # levels only -> <= 7 buckets), run one candidate join per OCCUPIED
-    # bucket, union. In practice one bucket is big (partitioned join —
-    # rights shuffle once) and the rest broadcast their lefts, so right
-    # is scanned, not re-shuffled, for every minority scale.
+    # levels only -> <= 7 buckets); _plan_buckets splits the buckets
+    # between one broadcast and one partitioned candidate join.
     ext_u = ext * unit
     lvl_col = F.least(
         F.lit(16),
@@ -1104,24 +1123,12 @@ def knn_join(
 
     buckets = _bucket_stats()
     n_rem = sum(c for _, c, _ in buckets)
-    if debug:
-        print(
-            f"[knn_join] init: {_time.perf_counter() - t_init:.1f}s "
-            f"n_right={n_right} gd={gd} cell_d={cell_d:.6g} "
-            f"dense_r={dense_r} n_rem={n_rem}",
-            file=sys.stderr,
-            flush=True,
-        )
 
     parts: list[DataFrame] = []
     w_ord = Window.partitionBy("left_id").orderBy(
         F.col("dist").asc(), F.col("right_id").asc()
     )
     w_all = Window.partitionBy("left_id")
-    # once the uncertified tail is small, BROADCAST it: the candidate
-    # join then streams the right table instead of re-shuffling it —
-    # the late (sparse-void) rounds cost O(|R|) scan, not O(|R|) shuffle
-    bcast_lefts = 200_000
 
     rb_udf = None  # lazy: built once, on the first survivor transition
 
@@ -1156,14 +1163,6 @@ def knn_join(
         for round_idx in range(max_rounds):
             if n_rem == 0:
                 break
-            t_round = _time.perf_counter()
-            if debug:
-                print(
-                    f"[knn_join] round {round_idx} level buckets: {buckets}",
-                    file=sys.stderr,
-                    flush=True,
-                )
-            t_sub = _time.perf_counter()
             if certified_radii and n_rem <= CERT_UPFRONT_MAX_LEFTS:
                 # TAIL round: collect the few survivors driver-side and
                 # answer them exactly with the index probe, over only the
@@ -1180,47 +1179,32 @@ def knn_join(
                 # box, dateline wrap included (VERDICT r5 Next #4).
                 from geo_index_spark.operators.search import geo_query_window
 
-                def _tail_cellset(rows) -> set[int] | None:
-                    # coarse cells touched by the (px, py, r) boxes, or
-                    # None when the set is too big to ship as a filter
-                    cs: set[int] = set()
-                    for t in rows:
-                        if metric == "euclidean":
-                            boxes = [
-                                (t[0] - t[2], t[1] - t[2], t[0] + t[2], t[1] + t[2])
-                            ]
-                        else:
-                            dlat, segs = geo_query_window(t[0], t[1], t[2])
-                            boxes = [
-                                (lo, t[1] - dlat, hi, t[1] + dlat) for lo, hi in segs
-                            ]
-                        for mnx, mny, mxx, mxy in boxes:
-                            x0 = max(0, min(nc_d - 1, int((mnx - bounds[0]) / cell_d)))
-                            x1 = max(0, min(nc_d - 1, int((mxx - bounds[0]) / cell_d)))
-                            y0 = max(0, min(nc_d - 1, int((mny - bounds[1]) / cell_d)))
-                            y1 = max(0, min(nc_d - 1, int((mxy - bounds[1]) / cell_d)))
-                            if (x1 - x0 + 1) * (y1 - y0 + 1) > 60_000:
-                                # one near-cover-radius left alone blows
-                                # the cap — abort before sweeping up to
-                                # nc_d^2 Python loop steps (ADVICE r6)
-                                return None
-                            for cx_ in range(x0, x1 + 1):
-                                if len(cs) > 60_000:
-                                    return None
-                                for cy_ in range(y0, y1 + 1):
-                                    cs.add(cx_ * nc_d + cy_)
-                        if len(cs) > 60_000:
-                            return None
-                    return cs
-
                 tail_pdf = remaining.select("lid", "px", "py", "r").toPandas()
-                cells = _tail_cellset(zip(tail_pdf["px"], tail_pdf["py"], tail_pdf["r"]))
+                px, py, r = (tail_pdf[c].to_numpy(np.float64) for c in ("px", "py", "r"))
+                if metric == "euclidean":
+                    boxes = np.column_stack([px - r, py - r, px + r, py + r])
+                else:
+                    boxes = np.array(
+                        [
+                            (lo, y - dlat, hi, y + dlat)
+                            for x, y, rr in zip(px, py, r)
+                            for dlat, segs in [geo_query_window(x, y, rr)]
+                            for lo, hi in segs
+                        ]
+                    )
+                cells = _box_cells(boxes, bounds[0], bounds[1], cell_d, nc_d)
+                if len(cells) > 60_000:
+                    cells = None  # too big to ship as a filter: read all rights
+                _record(
+                    "tail_cellset",
+                    t0,
+                    round=round_idx,
+                    lefts=len(tail_pdf),
+                    cells=None if cells is None else len(cells),
+                    grid_cells=nc_d * nc_d,
+                )
                 rpts_src = rpts
                 if cells is not None:
-                    _dbg(
-                        f"round {round_idx} tail prefilter: {len(tail_pdf)} lefts -> "
-                        f"{len(cells)}/{nc_d * nc_d} coarse cells"
-                    )
                     # broadcast SEMI JOIN, not isin(): a >1k-element InSet
                     # probes a boxed scala HashSet per row — measured ~10 s
                     # of the tail round's 12 s scan over 32M cached rights.
@@ -1231,7 +1215,7 @@ def knn_join(
                         + _coarse_cell(F.col("qy"), bounds[1])
                     )
                     cells_df = rpts.sparkSession.createDataFrame(
-                        [(int(c),) for c in sorted(cells)], "ccell long"
+                        [(int(c),) for c in cells], "ccell long"
                     )
                     rpts_src = rpts.join(
                         F.broadcast(cells_df), ccell == F.col("ccell"), "left_semi"
@@ -1239,94 +1223,33 @@ def knn_join(
                 parts.append(_knn_probe(tail_pdf, lpts.schema, rpts_src, *probe_args))
                 n_rem = 0
                 break
-            # split buckets: broadcast-eligible ones share ONE multilevel
-            # join (a single pass over right keyed on (level, cell));
-            # oversized buckets each get a partitioned join. The
-            # broadcast decision sizes the EXPLODED row count —
-            # quantization keeps boxes <= ~3x3 cells except at the
-            # level-4 clamp (near-cover radii), where the factor grows.
-            small: list[list] = []  # [lvl, cnt, rmx, est. exploded rows]
-            big_parts: list[tuple[int, float]] = []  # (lvl, est)
-            for lvl, cnt, rmx in buckets:
-                cell_u = ext_u / (1 << int(lvl))
-                explode_factor = (2.0 * float(rmx) / cell_u + 2.0) ** 2
-                if cnt <= bcast_lefts and cnt * explode_factor <= 2_000_000:
-                    small.append([int(lvl), cnt, float(rmx), cnt * explode_factor])
-                else:
-                    big_parts.append((int(lvl), cnt * explode_factor))
-            # LEVEL MERGE (round 7): the multilevel broadcast join
-            # explodes EVERY right point once per present level, so each
-            # extra level is a full extra probe pass over right. Fold a
-            # coarser broadcast bucket into the next finer one whenever
-            # its re-estimated exploded rows stay under the same 2M cap
-            # — finer cells still cover the box (any level is correct),
-            # the only cost is more broadcast rows. The 16M bench shape
-            # went from 4 present levels to 2, halving the probe rows.
-            small.sort()
-            lvl_remap: dict[int, int] = {}
-            i = 0
-            while i < len(small) - 1:
-                lvl_s, cnt_s, rmx_s, _ = small[i]
-                lvl_t, cnt_t, rmx_t, est_t = small[i + 1]
-                cell_t = ext_u / (1 << int(lvl_t))
-                ef_t = (2.0 * float(rmx_s) / cell_t + 2.0) ** 2
-                if cnt_s * ef_t <= 2_000_000:
-                    for s_, d_ in list(lvl_remap.items()):
-                        if d_ == lvl_s:
-                            lvl_remap[s_] = lvl_t
-                    lvl_remap[lvl_s] = lvl_t
-                    small[i + 1] = [
-                        lvl_t,
-                        cnt_s + cnt_t,
-                        max(rmx_s, rmx_t),
-                        est_t + cnt_s * ef_t,
-                    ]
-                    small.pop(i)
-                else:
-                    i += 1
-            small_rows = sum(e for _, _, _, e in small)
-            while small_rows > 4_000_000 and len(small) > 1:
-                # combined broadcast too big — demote the bucket with
-                # the largest estimated exploded row count, keeping the
-                # broadcast savings for the rest (ADVICE r4)
-                worst = max(range(len(small)), key=lambda i: small[i][3])
-                lvl_w, _, _, est_w = small.pop(worst)
-                big_parts.append((lvl_w, est_w))
-                small_rows -= est_w
+            plan = _plan_buckets(buckets, ext_u, n_shuffle)
+            _record("round_plan", t0, round=round_idx, buckets=buckets, **plan._asdict())
             lvl_mapped = lvl_col
-            if lvl_remap:
+            if plan.remap:
                 lvl_mapped = F.coalesce(
                     *[
                         F.when(lvl_col == F.lit(int(s_)), F.lit(int(d_)))
-                        for s_, d_ in lvl_remap.items()
+                        for s_, d_ in plan.remap.items()
                     ],
                     lvl_col,
                 )
-            small_lvls = [lvl for lvl, *_ in small]
             cand = None
-            if small_lvls:
-                sub = remaining.filter(lvl_mapped.isin([int(l) for l in small_lvls]))
-                cand = _knn_point_candidates_multi(
-                    sub, rpts, bounds, small_lvls, metric, lvl_mapped
-                )
-            for lvl, est in big_parts:
-                sub = remaining.filter(lvl_mapped == F.lit(int(lvl)))
-                # SHUFFLE_HASH builds the exploded lefts into an
-                # unspillable per-partition hash relation — gate it on
-                # the estimated exploded rows per shuffle partition
-                # (~50k rows / ~2.5 MB per partition, the budget the
-                # round-7 spatial_join A/B put on unspillable builds;
-                # ADVICE r6); oversized buckets fall back to the
-                # spill-safe sort-merge join
-                c = _knn_point_candidates(
-                    sub,
-                    rpts,
-                    bounds,
-                    int(lvl),
-                    metric,
-                    shuffle_hash=est <= 50_000 * n_shuffle,
-                )
-                cand = c if cand is None else cand.unionAll(c)
+            for lvls, hint in (
+                (plan.bcast_levels, "broadcast"),
+                (plan.part_levels, "SHUFFLE_HASH" if plan.shuffle_hash else None),
+            ):
+                if lvls:
+                    c = _knn_candidates(
+                        remaining.filter(lvl_mapped.isin(lvls)),
+                        rpts,
+                        bounds,
+                        lvls,
+                        lvl_mapped,
+                        metric,
+                        hint,
+                    )
+                    cand = c if cand is None else cand.unionAll(c)
             scored = cand
             if max_distance is not None:
                 scored = scored.filter(F.col("dist") <= F.lit(float(max_distance)))
@@ -1362,23 +1285,9 @@ def knn_join(
             certified = (
                 (F.col("c") == F.lit(int(k))) & (F.col("dk") <= F.col("r"))
             ) | (F.col("r") >= F.lit(cover_r))
-            if debug:
-                print(
-                    f"[knn_join]   round {round_idx} prep: "
-                    f"{_time.perf_counter() - t_sub:.1f}s",
-                    file=sys.stderr,
-                    flush=True,
-                )
-                t_sub = _time.perf_counter()
+            t_top = time.perf_counter()
             top = top.localCheckpoint()  # the round's ONE heavy job
-            if debug:
-                print(
-                    f"[knn_join]   round {round_idx} top job: "
-                    f"{_time.perf_counter() - t_sub:.1f}s",
-                    file=sys.stderr,
-                    flush=True,
-                )
-                t_sub = _time.perf_counter()
+            top_s = time.perf_counter() - t_top
             parts.append(top.filter(certified).select("left_id", "right_id", "dist"))
             done = top.filter(certified).select("left_id")
             if n_rem * k <= 2_000_000:
@@ -1430,19 +1339,9 @@ def knn_join(
             certified_radii = True  # every transition radius is certified
             buckets = _bucket_stats()
             n_rem = sum(c for _, c, _ in buckets)
-            if debug:
-                print(
-                    f"[knn_join]   round {round_idx} transition: "
-                    f"{_time.perf_counter() - t_sub:.1f}s",
-                    file=sys.stderr,
-                    flush=True,
-                )
-                print(
-                    f"[knn_join] round {round_idx}: {_time.perf_counter() - t_round:.1f}s"
-                    f" -> n_rem={n_rem}",
-                    file=sys.stderr,
-                    flush=True,
-                )
+            _record(
+                "survivors", t0, round=round_idx, survivors=n_rem, top_job_s=round(top_s, 3)
+            )
         if n_rem:
             raise RuntimeError("knn_join did not converge within max_rounds")
     finally:

@@ -331,12 +331,9 @@ def lsh_cosine_near_dup_pairs_fast(
     # cluster), ceiling = the session shuffle width.
     sess = emb.sparkSession
     dp = max(1, sess.sparkContext.defaultParallelism)
-    try:
-        sess_width = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        sess_width = 200
-    from geo_index_spark.operators.join import _plan_size_bytes
+    from geo_index_spark.operators.join import _plan_size_bytes, _shuffle_partitions
 
+    sess_width = _shuffle_partitions(sess)
     est = _plan_size_bytes(emb)
     if est is not None and est > 0:
         n_ref = max(dp, min(sess_width, (est * n_bands) // (32 << 20) + 1))

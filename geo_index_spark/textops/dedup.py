@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from geo_index_spark.operators.join import _shuffle_partitions
 from geo_index_spark.textops.hashes import P, h32_col, h32_sql, hp_sql, seeds
 
 # ---------------------------------------------------------------------------
@@ -171,7 +172,7 @@ def minhash_near_dup_pairs(
     if num_hashes % band_rows:
         raise ValueError("num_hashes must be a multiple of band_rows")
     spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    par = _shuffle_partitions(spark)
     # repartition BEFORE the shingle explode: a single-file doc table
     # otherwise runs the whole md5 stage on one core.
     # ONE md5 per shingle: the MinHash base hash (first 8 hex chars) and
@@ -595,7 +596,7 @@ def minhash_near_dup_pairs_fast(
     if num_hashes % band_rows:
         raise ValueError("num_hashes must be a multiple of band_rows")
     spark = docs.sparkSession
-    par = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    par = _shuffle_partitions(spark)
     sh = (
         shingles(docs.repartition(par), id_col, text_col, n)
         .select("id", F.pmod(F.xxhash64("s"), F.lit(P)).alias("h"))

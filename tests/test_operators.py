@@ -1131,15 +1131,19 @@ def test_knn_join_certified_upfront_one_round_16m_shape(spark):
         assert got == brute(metric), metric
 
 
-def test_knn_join_two_phase_certified_max_two_rounds(spark):
+def test_knn_join_two_phase_certified_max_two_rounds(spark, monkeypatch, caplog):
     """Round-5 rework, big-left path (forced by dropping the up-front
     threshold): round 0 runs density radii, every survivor then gets a
     CERTIFIED radius — kth-candidate distance when k candidates exist,
     prefix-sum ring bound for voids — so round 1 certifies everyone.
     max_rounds=2 pins that no third round can exist, on the adversarial
     shapes: skewed density, disjoint supports (all-void round 0),
-    max_distance starvation, haversine incl. dateline wrap."""
+    max_distance starvation, haversine incl. dateline wrap. Every shape
+    runs through both candidate strategies — the broadcast multilevel
+    join, and the partitioned join (forced by a zero broadcast-lefts
+    cap) — and the round-plan records show which one ran."""
     import importlib
+    import logging
 
     import numpy as np
 
@@ -1162,60 +1166,188 @@ def test_knn_join_two_phase_certified_max_two_rounds(spark):
             out.extend((lid, rid, d) for d, rid in ds[:k])
         return sorted(out)
 
-    old = K.CERT_UPFRONT_MAX_LEFTS
-    K.CERT_UPFRONT_MAX_LEFTS = 0  # force the two-phase (big-left) path
-    try:
-        got = sorted(
+    # disjoint supports: EVERY left fails round 0 with zero candidates
+    far_lpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(
+        np.column_stack([rng.uniform(0, 4, 25), rng.uniform(0, 4, 25)])
+    )]
+    far_l = spark.createDataFrame(far_lpts, "row_id long, x double, y double")
+    far_r = spark.createDataFrame(rpts[300:], "row_id long, x double, y double")
+    # haversine incl. dateline wrap: same two-round guarantee
+    lon = np.concatenate([rng.uniform(178.5, 180.0, 40), rng.uniform(-180.0, -178.5, 40)])
+    lat = rng.uniform(50.0, 60.0, 80)
+    gpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(np.column_stack([lon, lat]))]
+    gdf = spark.createDataFrame(gpts, "row_id long, x double, y double")
+    R = 6378137.0
+
+    def hav(lon1, lat1, lon2, lat2):
+        h = (np.sin(np.radians(lat2 - lat1) / 2) ** 2
+             + np.cos(np.radians(lat1)) * np.cos(np.radians(lat2))
+             * np.sin(np.radians(lon2 - lon1) / 2) ** 2)
+        return 2.0 * R * np.arcsin(np.sqrt(min(1.0, h)))
+
+    brute_h = []
+    for i, lx_, ly_ in gpts:
+        ds = sorted((float(hav(lx_, ly_, rx_, ry_)), j) for j, rx_, ry_ in gpts)
+        brute_h.extend((i, j, round(d, 6)) for d, j in ds[:3])
+
+    def run(l_df, r_df, k, **kw):
+        return sorted(
             (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(ldf, rdf, 3, max_rounds=2).collect()
+            for r in K.knn_join(l_df, r_df, k, max_rounds=2, **kw).collect()
         )
-        assert got == brute_euc(lpts, rpts, 3)
+
+    monkeypatch.setattr(K, "CERT_UPFRONT_MAX_LEFTS", 0)  # force the big-left path
+    caplog.set_level(logging.INFO, logger=K.__name__)
+    for strategy, bcast_max in (("broadcast", K.BCAST_MAX_LEFTS), ("partitioned", 0)):
+        monkeypatch.setattr(K, "BCAST_MAX_LEFTS", bcast_max)
+        caplog.clear()
+        assert run(ldf, rdf, 3) == brute_euc(lpts, rpts, 3), strategy
         # max_distance starvation: survivors with < k in-range candidates
-        got_md = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(ldf, rdf, 3, max_rounds=2, max_distance=6.0).collect()
-        )
-        assert got_md == brute_euc(lpts, rpts, 3, max_d=6.0)
-        # disjoint supports: EVERY left fails round 0 with zero candidates
-        far_l = spark.createDataFrame(
-            [(i, float(x), float(y)) for i, (x, y) in enumerate(
-                np.column_stack([rng.uniform(0, 4, 25), rng.uniform(0, 4, 25)])
-            )],
-            "row_id long, x double, y double",
-        )
-        far_r = spark.createDataFrame(rpts[300:], "row_id long, x double, y double")
-        got_far = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(far_l, far_r, 4, max_rounds=2).collect()
-        )
-        assert got_far == brute_euc(
-            [(r.row_id, r.x, r.y) for r in far_l.collect()], rpts[300:], 4
-        )
-        # haversine incl. dateline wrap: same two-round guarantee
-        lon = np.concatenate([rng.uniform(178.5, 180.0, 40), rng.uniform(-180.0, -178.5, 40)])
-        lat = rng.uniform(50.0, 60.0, 80)
-        gpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(np.column_stack([lon, lat]))]
-        gdf = spark.createDataFrame(gpts, "row_id long, x double, y double")
-        R = 6378137.0
-
-        def hav(lon1, lat1, lon2, lat2):
-            h = (np.sin(np.radians(lat2 - lat1) / 2) ** 2
-                 + np.cos(np.radians(lat1)) * np.cos(np.radians(lat2))
-                 * np.sin(np.radians(lon2 - lon1) / 2) ** 2)
-            return 2.0 * R * np.arcsin(np.sqrt(min(1.0, h)))
-
-        got_h = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(gdf, gdf, 3, metric="haversine", max_rounds=2).collect()
-        )
-        brute_h = []
-        for i, lx_, ly_ in gpts:
-            ds = sorted((float(hav(lx_, ly_, rx_, ry_)), j) for j, rx_, ry_ in gpts)
-            brute_h.extend((i, j, round(d, 6)) for d, j in ds[:3])
-        assert got_h == sorted(brute_h)
+        assert run(ldf, rdf, 3, max_distance=6.0) == brute_euc(
+            lpts, rpts, 3, max_d=6.0
+        ), strategy
+        assert run(far_l, far_r, 4) == brute_euc(far_lpts, rpts[300:], 4), strategy
+        got_h = run(gdf, gdf, 3, metric="haversine")
+        assert got_h == sorted(brute_h), strategy
         assert any((gpts[a][1] > 0) != (gpts[b][1] > 0) for a, b, _ in got_h)
-    finally:
-        K.CERT_UPFRONT_MAX_LEFTS = old
+
+        plans = [r.knn_inputs for r in caplog.records if getattr(r, "knn_decision", "") == "round_plan"]
+        first = plans[0]  # round 0 of the first call: every left, bucketed by level
+        assert first["round"] == 0 and sum(c for _, c, _ in first["buckets"]) == len(lpts)
+        assert "elapsed_s" in first and first["remap"].keys() <= {lvl for lvl, *_ in first["buckets"]}
+        if strategy == "broadcast":
+            assert all(p["bcast_levels"] and not p["part_levels"] for p in plans)
+        else:
+            assert all(p["part_levels"] and not p["bcast_levels"] for p in plans)
+            assert all(p["shuffle_hash"] for p in plans)  # a few exploded rows
+
+
+def test_knn_candidates_levels_and_hints(spark):
+    """The one candidate builder: for lefts at several grid levels (one
+    join keyed on (level, cell)) and at one literal level (keyed on the
+    cell), under each join hint, the candidates hold every right within
+    each left's radius exactly once — euclidean and haversine across
+    the dateline — and the hint picks the physical join."""
+    import importlib
+
+    K = importlib.import_module("geo_index_spark.operators.knn")
+    from geo_index_spark.operators.join import haversine_pair_col
+
+    rng = np.random.default_rng(61)
+    cases = {
+        "euclidean": ((0.0, 0.0, 100.0, 100.0), rng.uniform(0, 100, (400, 2)), (0.5, 3.0, 20.0)),
+        "haversine": (
+            (-180.0, -90.0, 180.0, 90.0),
+            np.column_stack([rng.uniform(171, 183, 400), rng.uniform(40, 50, 400)]),
+            (2_000.0, 30_000.0, 300_000.0),
+        ),
+    }
+    for metric, (bounds, pts, radii) in cases.items():
+        pts[:, 0] = np.where(pts[:, 0] > 180, pts[:, 0] - 360, pts[:, 0])  # wrap at +-180
+        rights = [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)]
+        # 30 lefts on right points, radii cycling over three grid levels
+        lefts = [
+            (i, x, y, radii[i % 3], (10, 8, 4)[i % 3]) for i, (_, x, y) in enumerate(rights[:30])
+        ]
+        rpts = spark.createDataFrame(rights, "rid long, qx double, qy double")
+        rem = spark.createDataFrame(lefts, "lid long, px double, py double, r double, lvl int")
+        ldf = rem.withColumnRenamed("lid", "left_id")
+        d = haversine_pair_col if metric == "haversine" else (
+            lambda lx, ly, rx, ry: F.sqrt((lx - rx) * (lx - rx) + (ly - ry) * (ly - ry))
+        )
+        exact = {
+            (r.left_id, r.rid)
+            for r in ldf.crossJoin(rpts)
+            .filter(d(F.col("px"), F.col("py"), F.col("qx"), F.col("qy")) <= F.col("r"))
+            .collect()
+        }
+        for hint, op in (
+            ("broadcast", "BroadcastHashJoin"),
+            ("SHUFFLE_HASH", "ShuffledHashJoin"),
+            (None, "SortMergeJoin"),
+        ):
+            for levels, sub in (([4, 8, 10], rem), ([8], rem.filter(F.col("lvl") == 8))):
+                cand = K._knn_candidates(sub, rpts, bounds, levels, F.col("lvl"), metric, hint)
+                rows = cand.filter(F.col("dist") <= F.col("r")).collect()
+                pairs = [(r.left_id, r.right_id) for r in rows]
+                want = {p for p in exact if p[0] % 3 == 1} if len(levels) == 1 else exact
+                assert len(pairs) == len(set(pairs)) and set(pairs) == want, (metric, hint, levels)
+                if metric == "euclidean":  # candidates come from cells at the left's OWN level
+                    for c in cand.select("left_id", "right_id").collect():
+                        _, x, y, r, lvl = lefts[c.left_id]
+                        _, qx, qy = rights[c.right_id]
+                        edge = 100.0 / (1 << lvl)
+                        assert abs(qx - x) <= r + edge and abs(qy - y) <= r + edge, (c, lvl)
+            if metric == "haversine":  # some pair crosses the dateline
+                assert any((rights[a][1] > 0) != (rights[b][1] > 0) for a, b in exact)
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+            try:
+                plan = cand._jdf.queryExecution().executedPlan().toString()
+            finally:
+                spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+            assert op in plan, (hint, plan)
+            # one literal level keeps integer cell arithmetic (no per-row casts)
+            assert metric != "euclidean" or " as double" not in plan, plan
+
+
+def test_box_cells_matches_loop():
+    """Spark-free: the tail cellset's difference-grid union equals the
+    per-cell loop it replaced (truncate, clamp to the grid, add every
+    cell of every box) on boxes inside, across and outside the grid."""
+    import importlib
+
+    K = importlib.import_module("geo_index_spark.operators.knn")
+    rng = np.random.default_rng(67)
+    lo = rng.uniform(-30, 110, (300, 2))
+    boxes = np.column_stack([lo, lo + rng.exponential(4.0, (300, 2))])
+    for nc, cell in ((16, 100 / 16), (64, 100 / 64)):
+        ref = set()
+        for mnx, mny, mxx, mxy in boxes:
+            x0, x1, y0, y1 = (
+                max(0, min(nc - 1, int((v - 0.0) / cell))) for v in (mnx, mxx, mny, mxy)
+            )
+            ref |= {cx * nc + cy for cx in range(x0, x1 + 1) for cy in range(y0, y1 + 1)}
+        got = K._box_cells(boxes, 0.0, 0.0, cell, nc)
+        assert got.tolist() == sorted(ref), nc
+
+
+def test_plan_buckets_bench_shapes(monkeypatch):
+    """Spark-free: the big-left round-0 plan at the two measured 16M
+    bench shapes (level buckets (level, lefts, max r) read off the run,
+    ext 360, 32 shuffle partitions), and the whole-broadcast bound on a
+    lone bucket."""
+    import importlib
+
+    K = importlib.import_module("geo_index_spark.operators.knn")
+
+    # 16M rights / 250k lefts (bench.py knn_join_synth): the level merge
+    # folds five buckets into two broadcast levels, nothing partitioned
+    p = K._plan_buckets(
+        [(8, 49960, 0.35320), (10, 2, 0.04948), (12, 32, 0.02876),
+         (14, 2025, 0.010757), (16, 197981, 0.0027466)],
+        360.0,
+        32,
+    )
+    assert p.bcast_levels == [10, 16] and p.remap == {8: 10, 12: 16, 14: 16}
+    assert p.part_levels == [] and p.bcast_rows <= K.BCAST_MAX_ROWS
+    # 16M / 500k: level 16 (396,079 lefts) is over the broadcast-lefts cap
+    # and its ~3.56M exploded rows over 50k x 32 -> sort-merge, not SHJ
+    p = K._plan_buckets(
+        [(8, 99809, 0.41106), (10, 4, 0.04951), (12, 53, 0.04101),
+         (14, 4055, 0.010757), (16, 396079, 0.0027466)],
+        360.0,
+        32,
+    )
+    assert p.bcast_levels == [10, 14] and p.remap == {8: 10, 12: 14}
+    assert p.part_levels == [16] and not p.shuffle_hash
+    assert p.part_rows > K.SHJ_MAX_ROWS_PER_PARTITION * 32
+    # a lone broadcast-eligible bucket over the whole-broadcast cap is
+    # demoted too (the cap lowered so one bucket under the per-bucket
+    # caps exceeds it)
+    monkeypatch.setattr(K, "BCAST_MAX_ROWS", 1_000_000)
+    p = K._plan_buckets([(16, 150_000, 0.0027466)], 360.0, 32)
+    assert p.bcast_levels == [] and p.part_levels == [16] and p.bcast_rows == 0
+    assert 1_000_000 < p.part_rows <= K.BCAST_BUCKET_MAX_ROWS and p.shuffle_hash
 
 
 def test_knn_join_empty_sides(spark):
