@@ -237,7 +237,7 @@ def spatial_join(
             and rsz is not None
             and lsz > thr
             and rsz > thr
-            and rsz <= SHUFFLE_HASH_BUILD_BUDGET * n_part
+            and rsz * salt <= SHUFFLE_HASH_BUILD_BUDGET * n_part
         ):
             # neither raw side can broadcast, so the planner would fall
             # back to sorting both exploded sides; build hash maps from
@@ -245,11 +245,12 @@ def spatial_join(
             # Scale guard: the shuffled-hash build side is an
             # UNSPILLABLE per-partition hash relation — only hint while
             # the estimated build bytes per shuffle partition stay
-            # small. Interleaved min-of-4 A/B on the synth self-join
-            # (clean windows): 16M rows (1.5 MB/partition) SHJ 3.34 s
-            # vs SMJ 3.78 s; 32M (3 MB) SMJ 7.9 vs SHJ 8.8; 64M (6 MB)
-            # SMJ 19.1 vs SHJ 26.4 with heavy GC variance — past the
-            # budget, sort-merge spills gracefully and wins.
+            # small; salt > 1 replicates the right side salt times, so
+            # the build is rsz * salt. Interleaved min-of-4 A/B on the
+            # synth self-join (clean windows): 16M rows (1.5 MB/partition)
+            # SHJ 3.34 s vs SMJ 3.78 s; 32M (3 MB) SMJ 7.9 vs SHJ 8.8; 64M
+            # (6 MB) SMJ 19.1 vs SHJ 26.4 with heavy GC variance — past
+            # the budget, sort-merge spills gracefully and wins.
             re = re.hint("SHUFFLE_HASH")
 
     le = le.withColumnRenamed("cx", "l_cx").withColumnRenamed("cy", "l_cy")

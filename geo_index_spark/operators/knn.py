@@ -241,12 +241,12 @@ def knn_geometry(
     return out.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(int(k))
 
 
-# at most this many lefts (a small left table, or the survivors of a
-# round) are answered by the per-slice index probe of :func:`_knn_probe`:
-# the lefts and their slice lists ride one broadcast
+# a left table of at most this many rows goes straight to the
+# per-slice index probe of :func:`_knn_probe`, and the probe broadcasts
+# its lefts (with their slice lists) in chunks of at most this many
 CERT_UPFRONT_MAX_LEFTS = 65_536
 
-# caps of the big-left round plan (:func:`_plan_buckets`): a level
+# caps of the big-left density round's plan (:func:`_plan_buckets`): a level
 # bucket broadcasts its exploded lefts only with <= BCAST_MAX_LEFTS
 # lefts and <= BCAST_BUCKET_MAX_ROWS estimated exploded rows, and the
 # whole broadcast stays <= BCAST_MAX_ROWS. The partitioned join builds
@@ -271,7 +271,7 @@ def _record(decision: str, t0: float, **inputs) -> None:
 
 
 class BucketPlan(NamedTuple):
-    """One big-left round's candidate joins (:func:`_plan_buckets`)."""
+    """The big-left density round's candidate joins (:func:`_plan_buckets`)."""
 
     bcast_levels: list[int]  # one broadcast join keyed on (level, cell)
     remap: dict[int, int]  # bucket level -> finer broadcast level it folds into
@@ -284,7 +284,7 @@ class BucketPlan(NamedTuple):
 def _plan_buckets(
     buckets: list[tuple[int, int, float]], ext_u: float, n_shuffle: int
 ) -> BucketPlan:
-    """Pure plan of one big-left round from its ``(level, lefts, max r)``
+    """Pure plan of the big-left density round from its ``(level, lefts, max r)``
     buckets: which levels broadcast their exploded lefts in ONE
     multilevel join (right is scanned, not re-shuffled) and which run
     ONE partitioned join — the partition-or-not decision. A left at
@@ -372,17 +372,20 @@ def _ring_certified_radii(
     px = np.asarray(px, np.float64)
     py = np.asarray(py, np.float64)
     n = len(px)
-    if n == 0:
-        return np.empty(0, np.float64)
     lox, loy = bounds[0], bounds[1]
     cx = np.clip(((px - lox) / cell_d).astype(np.int64), 0, nc_d - 1)
     cy = np.clip(((py - loy) / cell_d).astype(np.int64), 0, nc_d - 1)
 
+    def ring(j):  # grid-clamped cell range (x0, x1, y0, y1) of ring j
+        return (
+            np.maximum(0, cx - j),
+            np.minimum(nc_d - 1, cx + j),
+            np.maximum(0, cy - j),
+            np.minimum(nc_d - 1, cy + j),
+        )
+
     def boxsum(j):
-        x0 = np.maximum(0, cx - j)
-        x1 = np.minimum(nc_d - 1, cx + j)
-        y0 = np.maximum(0, cy - j)
-        y1 = np.minimum(nc_d - 1, cy + j)
+        x0, x1, y0, y1 = ring(j)
         return P[x1 + 1, y1 + 1] - P[x0, y1 + 1] - P[x1 + 1, y0] + P[x0, y0]
 
     hi = np.full(n, nc_d - 1, dtype=np.int64)
@@ -396,13 +399,9 @@ def _ring_certified_radii(
         ge = boxsum(mid) >= k
         hi = np.where(active & ge, mid, hi)
         lo = np.where(active & ~ge, mid + 1, lo)
-    j = lo
-    x0 = np.maximum(0, cx - j)
-    x1 = np.minimum(nc_d - 1, cx + j)
-    y0 = np.maximum(0, cy - j)
-    y1 = np.minimum(nc_d - 1, cy + j)
+    x0, x1, y0, y1 = ring(lo)
     dx = np.maximum(px - (lox + x0 * cell_d), (lox + (x1 + 1) * cell_d) - px)
-    dy = np.maximum(py - (bounds[1] + y0 * cell_d), (bounds[1] + (y1 + 1) * cell_d) - py)
+    dy = np.maximum(py - (loy + y0 * cell_d), (loy + (y1 + 1) * cell_d) - py)
     if metric == "haversine":
         rb = EARTH_RADIUS_M * (np.radians(dy) + np.radians(dx))
     else:
@@ -446,10 +445,10 @@ def _knn_candidates(
     metric: str,
     hint: str | None,
 ) -> DataFrame:
-    """Candidate (left_id, right_id, dist, r) pairs for one knn_join
-    round: every right point lying in a grid cell touched by the left's
-    per-row radius box at the left's own level ``lvl_col`` (one of
-    ``levels``). Keyed on (level, cell): each left explodes into its
+    """Candidate (left_id, right_id, dist, r) pairs for knn_join's
+    density round: every right point lying in a grid cell touched by
+    the left's per-row radius box at the left's own level ``lvl_col``
+    (one of ``levels``). Keyed on (level, cell): each left explodes into its
     box's cells, each right point once per level (<= 7 rows), so one
     pass over right serves every level; with ONE level both sides use
     the literal level and the key is the cell alone. ``hint`` is the
@@ -471,11 +470,13 @@ def _knn_candidates(
     lox, loy, hix, hiy = bounds
     one = len(levels) == 1
     keep = ("r",) if one else ("r", "_lvl")
-    if one:  # integer cells: a double level adds per-row casts and a not-null filter
+    # integer cells: a double 2^level adds per-row long/double casts of
+    # the cell and a not-null filter that re-evaluates it on the right scan
+    if one:
         nc = F.lit(1 << int(levels[0]))
     else:
         rem = rem.withColumn("_lvl", lvl_col)
-        nc = F.pow(F.lit(2.0), F.col("_lvl"))  # exact in doubles up to 2^16
+        nc = F.call_function("shiftleft", F.lit(1).cast("long"), F.col("_lvl"))
     inv_x = nc * F.lit(1.0 / (hix - lox)) if hix > lox else F.lit(0.0)
     inv_y = nc * F.lit(1.0 / (hiy - loy)) if hiy > loy else F.lit(0.0)
 
@@ -552,25 +553,29 @@ def _knn_probe(
     k: int,
     metric: str,
     max_distance: float | None,
+    t0: float,
 ) -> DataFrame:
-    """Exact kNN of a few driver-resident lefts (``lid, px, py``, Spark
-    schema ``lschema``) over ``rpts`` (``rid, qx, qy``) in one pass —
+    """Exact kNN of driver-resident lefts (``lid, px, py``, Spark schema
+    ``lschema``) over ``rpts`` (``rid, qx, qy``), one pass per chunk —
     geo-index's partition boxes plus a best-first ``neighbors`` per tree
     (src/rtree/trait.rs:238-302). The rights are Hilbert-range
     partitioned into ``n_slices`` slices (knn_join passes
     ``spark.sql.shuffle.partitions``) and checkpointed; the driver
     collects each slice's box and count and runs the exact partition
     prune of :func:`~geo_index_spark.operators.localbuild.partition_prune`
-    for every left; the lefts and each slice's left list ride one
-    broadcast.
+    for every left. The lefts ride broadcasts of at most
+    ``CERT_UPFRONT_MAX_LEFTS`` lefts each, with each slice's left list;
+    every chunk is one ``mapInArrow`` over the same slices.
     Each slice task builds one Flatbush and returns, per listed left,
     every right within the slice's kth Flatbush distance grown by the
     numpy/Catalyst headroom — not a box search, whose box around a far
     slice's kth distance holds most of the slice — so ties at the kth
     distance and last-bit differences stay in. The emitted ``dist`` is
-    the Catalyst expression of the candidate rounds (Flatbush ranks by
-    ``np.hypot``, which differs in the last bit), and a ``row_number``
-    per left by (dist, right_id) keeps the top k."""
+    the Catalyst expression of the candidate join (Flatbush ranks by
+    ``np.hypot``, which differs in the last bit), and one ``row_number``
+    per left by (dist, right_id) over every chunk keeps the top k. One
+    ``probe`` record (:func:`_record`, since ``t0``) gives the lefts,
+    chunks, slices, rights indexed and mean slices kept per left."""
     import pyarrow as pa
     from pyspark.sql import Window
     from pyspark.sql.types import StructField, StructType
@@ -590,67 +595,86 @@ def _knn_probe(
         .agg(F.min("qx"), F.min("qy"), F.max("qx"), F.max("qy"), F.count(F.lit(1)))
         .collect()
     )
+    boxes = np.array([r[1:5] for r in stats], np.float64)
+    counts = np.array([r[5] for r in stats], np.int64)
     px = lefts["px"].to_numpy(np.float64)
     py = lefts["py"].to_numpy(np.float64)
-    sel: dict[int, np.ndarray] = {}
-    if stats and len(px):
-        boxes = np.array([r[1:5] for r in stats], np.float64)
-        counts = np.array([r[5] for r in stats], np.int64)
-        keep = []
-        for i in range(0, len(px), 4096):  # bounds the (lefts, slices) arrays
-            lb, radius = partition_prune(
-                boxes, counts, px[i : i + 4096], py[i : i + 4096], k, metric, max_distance
-            )
-            keep.append(lb <= radius[:, None])
-        keep = np.concatenate(keep)
-        sel = {int(r[0]): np.flatnonzero(keep[:, j]) for j, r in enumerate(stats)}
     lt = pa.Table.from_pandas(lefts[["lid", "px", "py"]], preserve_index=False)
-    bc = spark.sparkContext.broadcast((lt, sel))
     cap = None if max_distance is None else float(grow(max_distance))
     names = ("left_id", "px", "py", "right_id", "qx", "qy")
     fields = [lschema[c] for c in ("lid", "px", "py")] + [
         rpts.schema[c] for c in ("rid", "qx", "qy")
     ]
+    schema = StructType([StructField(n, f.dataType) for n, f in zip(names, fields)])
 
-    def probe(batches):
-        batches = list(batches)
-        if not batches:
-            return
-        lt_, sel_ = bc.value
-        lx = lt_.column("px").to_numpy()
-        ly = lt_.column("py").to_numpy()
-        tbl = pa.Table.from_batches(batches)
-        s_all = tbl.column("_s").to_numpy()
-        for s in np.unique(s_all):
-            part = tbl.filter(pa.array(s_all == s))
-            x = part.column("qx").to_numpy().astype(np.float64)
-            y = part.column("qy").to_numpy().astype(np.float64)
-            fb = Flatbush(np.stack([x, y, x, y], axis=1))
-            li: list[np.ndarray] = []
-            ri: list[np.ndarray] = []
-            for i in sel_.get(int(s), ()):
-                ids, d = fb.neighbors(
-                    lx[i], ly[i], max_results=k + 1, max_distance=cap, metric=metric
-                )
-                if len(ids) > k:
-                    # a (k+1)th right inside the grown kth distance: fetch
-                    # every right within it (ties), else the first k
-                    b = float(grow(d[k - 1]))
-                    ids = ids[:k] if d[k] > b else fb.neighbors(
-                        lx[i], ly[i], max_distance=b, metric=metric
-                    )[0]
-                li.append(np.full(len(ids), i))
-                ri.append(ids)
-            if li:
-                left = lt_.take(np.concatenate(li))
-                right = part.take(np.concatenate(ri))
-                cols = [*left.columns, *(right.column(c) for c in ("rid", "qx", "qy"))]
-                yield pa.RecordBatch.from_arrays(
-                    [c.combine_chunks() for c in cols], names=list(names)
-                )
+    def probe_fn(bc):  # binds each chunk's broadcast: the plans run after the loop
+        def probe(batches):
+            batches = list(batches)
+            if not batches:
+                return
+            lt_, sel_ = bc.value
+            lx = lt_.column("px").to_numpy()
+            ly = lt_.column("py").to_numpy()
+            tbl = pa.Table.from_batches(batches)
+            s_all = tbl.column("_s").to_numpy()
+            for s in np.unique(s_all):
+                part = tbl.filter(pa.array(s_all == s))
+                x = part.column("qx").to_numpy().astype(np.float64)
+                y = part.column("qy").to_numpy().astype(np.float64)
+                fb = Flatbush(np.stack([x, y, x, y], axis=1))
+                li: list[np.ndarray] = []
+                ri: list[np.ndarray] = []
+                for i in sel_.get(int(s), ()):
+                    ids, d = fb.neighbors(
+                        lx[i], ly[i], max_results=k + 1, max_distance=cap, metric=metric
+                    )
+                    if len(ids) > k:
+                        # a (k+1)th right inside the grown kth distance: fetch
+                        # every right within it (ties), else the first k
+                        b = float(grow(d[k - 1]))
+                        ids = ids[:k] if d[k] > b else fb.neighbors(
+                            lx[i], ly[i], max_distance=b, metric=metric
+                        )[0]
+                    li.append(np.full(len(ids), i))
+                    ri.append(ids)
+                if li:
+                    left = lt_.take(np.concatenate(li))
+                    right = part.take(np.concatenate(ri))
+                    cols = [*left.columns, *(right.column(c) for c in ("rid", "qx", "qy"))]
+                    yield pa.RecordBatch.from_arrays(
+                        [c.combine_chunks() for c in cols], names=list(names)
+                    )
 
-    pairs = slices.mapInArrow(
-        probe, StructType([StructField(n, f.dataType) for n, f in zip(names, fields)])
+        return probe
+
+    pairs = None
+    n_kept = 0
+    starts = range(0, max(len(px), 1), CERT_UPFRONT_MAX_LEFTS)
+    for c0 in starts:
+        cx = px[c0 : c0 + CERT_UPFRONT_MAX_LEFTS]
+        cy = py[c0 : c0 + CERT_UPFRONT_MAX_LEFTS]
+        sel: dict[int, np.ndarray] = {}
+        if stats and len(cx):
+            keep = []
+            for i in range(0, len(cx), 4096):  # bounds the (lefts, slices) arrays
+                lb, radius = partition_prune(
+                    boxes, counts, cx[i : i + 4096], cy[i : i + 4096], k, metric, max_distance
+                )
+                keep.append(lb <= radius[:, None])
+            keep = np.concatenate(keep)
+            n_kept += int(keep.sum())
+            sel = {int(r[0]): np.flatnonzero(keep[:, j]) for j, r in enumerate(stats)}
+        bc = spark.sparkContext.broadcast((lt.slice(c0, CERT_UPFRONT_MAX_LEFTS), sel))
+        chunk = slices.mapInArrow(probe_fn(bc), schema)
+        pairs = chunk if pairs is None else pairs.unionAll(chunk)
+    _record(
+        "probe",
+        t0,
+        lefts=len(px),
+        chunks=len(starts),
+        slices=len(stats),
+        rights_indexed=int(counts.sum()),
+        mean_slices_per_left=round(n_kept / max(len(px), 1), 3),
     )
     scored = pairs.select("left_id", "right_id", _pair_dist_col(metric).alias("dist"))
     if max_distance is not None:
@@ -673,7 +697,6 @@ def knn_join(
     right_cols: tuple[str, str] = ("x", "y"),
     bounds: tuple[float, float, float, float] | None = None,
     init_radius: float | None = None,
-    max_rounds: int = 16,
     metric: str = "euclidean",
     max_distance: float | None = None,
     right_count: int | None = None,
@@ -690,74 +713,59 @@ def knn_join(
     runs as a per-query loop over ``neighbors``
     (src/rtree/trait.rs:198-302), re-expressed as a bulk operator.
 
-    Two paths, and the choice between them is the partition-or-not
-    cost decision of *To Partition, or Not to Partition* (SIGMOD 2021)
-    made explicit. A SMALL left side (<= ``CERT_UPFRONT_MAX_LEFTS``
-    rows, found by one bounded LIMIT probe before any density work)
-    goes straight to :func:`_knn_probe`: the rights are partitioned and
-    indexed once, each left probes a Flatbush in only the slices the
-    exact partition prune keeps, and a row_number per left takes the
-    top k — one pass, no radius, no density or ring pass. A few lefts
-    cannot amortize a candidate join; many lefts can, so a LARGE left
-    side runs PER-LEFT certified radii, AT MOST TWO ROUNDS (the
-    Simba/Sedona candidate-join family, pure Catalyst). Each left
-    carries its own radius column ``r``; a round candidate-joins the
-    unsatisfied lefts against right within their +-r boxes
-    (point-specialized grid join, :func:`_knn_candidates`), takes
-    per-left top-k by window, and CERTIFIES a left exact when it has k
-    candidates with kth distance <= its r — no right outside the box
-    can beat them. Survivors do NOT double-and-retry (round 4's x4/x8
-    escalation, whose straggler rounds were pure fixed overhead): every
-    survivor's next radius is CERTIFIED-COMPLETE up front, so round 1
-    certifies everyone by construction —
+    Every left is answered by one of two executors, and the choice is
+    the partition-or-not cost decision of *To Partition, or Not to
+    Partition* (SIGMOD 2021) made explicit: a few lefts cannot amortize
+    a candidate join, many lefts can. :func:`_knn_probe` partitions and
+    indexes the rights once; each left probes a Flatbush in only the
+    slices the exact partition prune keeps, and a row_number per left
+    takes the top k — exact in one pass, no radius needed. A SMALL left
+    side (<= ``CERT_UPFRONT_MAX_LEFTS`` rows, found by one bounded LIMIT
+    probe before any density work) goes straight to it.
 
-    * every survivor takes the ring-count bound of
-      :func:`_ring_certified_radii` — the smallest coarse cell ring
-      holding >= k rights, a true kth-NN upper bound — evaluated as a
-      vectorized pandas_udf over the broadcast (nc_d+1)^2 prefix sum,
-      no driver collect of lefts. (A ``dist <= r`` prefilter runs
-      before every round's window — candidates beyond r cannot beat a
-      certified kth and only bloat the sort — so a survivor provably
-      saw < k candidates and the round-5 kth-candidate-``dk``
-      transition branch is vacuous; round 6 removed it.)
-    * a left whose r reaches the cover radius certifies
-      unconditionally.
-
-    A round that starts with <= ``CERT_UPFRONT_MAX_LEFTS`` survivors
-    (in practice round 1) runs the same :func:`_knn_probe` instead of
-    a candidate join, over only the rights in the coarse cells the
-    survivors' certified boxes touch (a broadcast semi join on the
-    cached right) — exact in one pass however many rights a survivor's
-    ring-bound ball holds. Passing ``bounds`` AND ``right_count`` (both free
-    from table metadata at production scale) skips the up-front
-    min/max/count pass over right entirely; ``right_count`` is a grid-
-    sizing hint only — correctness never depends on its accuracy. Seeding certified radii up front is deliberately
-    NOT done for large left tables: the ring bound's resolution is the
-    coarse grid (~64 rights/cell), so in uniform regions it overshoots
-    the density estimate by ~sqrt(cell^2 * 2 / (pi k / rho)) — measured
-    ~20x the candidate pairs at 64M/1M-left scale — while the density
-    estimate certifies ~99% of lefts in round 0 at ~12-36 candidates
-    each and the certified round-1 radii mop up the rest in one tight
-    pass. A grid fine enough (~k rights/cell) to make up-front seeding
-    cheap would itself cost a near-singleton-group count shuffle (~13M
-    groups at 64M — the round-3 measured pre-loop pathology).
+    A LARGE left side runs two fixed steps. (1) One density round, the
+    Simba/Sedona candidate join in pure Catalyst: each left carries its
+    own radius column ``r``, is candidate-joined against right within
+    its +-r box (point-specialized grid join, :func:`_knn_candidates`),
+    takes per-left top-k by window, and is CERTIFIED exact when it has
+    k candidates with kth distance <= its r — no right outside the box
+    can beat them — or when its r reaches the cover radius. (2) Every
+    uncertified left, whatever their count, is collected to the driver
+    and answered by :func:`_knn_probe`, over only the rights in the
+    coarse cells that the survivors' certified boxes touch (a broadcast
+    semi join on the cached right). A survivor's box radius is the
+    ring-count bound of :func:`_ring_certified_radii` — the smallest
+    coarse cell ring holding >= k rights, a true kth-NN upper bound —
+    computed by one numpy call over the coarse prefix sum. The probe
+    broadcasts the survivors in chunks of ``CERT_UPFRONT_MAX_LEFTS``.
+    Passing ``bounds`` AND ``right_count`` (both free from table
+    metadata at production scale) skips the up-front min/max/count pass
+    over right entirely; ``right_count`` is a grid-sizing hint only —
+    correctness never depends on its accuracy. Ring radii are
+    deliberately NOT the big left side's start radii: the ring bound's
+    resolution is the coarse grid (~64 rights/cell), so in uniform
+    regions it overshoots the density estimate by ~sqrt(cell^2 * 2 /
+    (pi k / rho)) — measured ~20x the candidate pairs at 64M/1M-left
+    scale — while the density estimate certifies ~99% of lefts at
+    ~12-36 candidates each. A grid fine enough (~k rights/cell) to make
+    ring radii tight would itself cost a near-singleton-group count
+    shuffle (~13M groups at 64M — the round-3 measured pre-loop
+    pathology).
 
     The start radius is PER-LEFT density-adaptive, from two grid
     counts over right: a coarse grid (~64 rows/cell) dilated to a
-    3x3-neighborhood sum S (r0 = cell_edge * min(1, sqrt(3k / S))),
+    3x3-neighborhood sum S (r0 = cell_edge * min(1, sqrt(9k / S))),
     refined by the left's own FINE-cell count when that cell holds
     >= 9k points (r0 = fine_edge * sqrt(3k / count) — the fine
     level is sized for the densest region, so sub-coarse-cell clusters
     read their TRUE density instead of a diluted average; measured
-    ~20x radius overshoot -> ~400x candidate blow-up without it). The
-    round-3 global densest-cell start made SPARSE-area lefts begin at
-    the city NN scale and double ~a dozen times, each round a driver
-    barrier plus a full pass over right; per-left density radii plus
-    the certified transition pin that at <= 2 rounds.
+    ~20x radius overshoot -> ~400x candidate blow-up without it). A
+    global densest-cell start radius would make SPARSE-area lefts begin
+    at the city NN scale.
 
-    Every round buckets lefts by a QUANTIZED per-left grid level (cell
-    edge >= the left's box, even levels, <= 7 buckets) — one level
-    cannot serve mixed radii: tiny boxes joined at a coarse level
+    The density round buckets lefts by a QUANTIZED per-left grid level
+    (cell edge >= the left's box, even levels, <= 7 buckets) — one
+    level cannot serve mixed radii: tiny boxes joined at a coarse level
     cross-product whole dense cells, big boxes at a fine level explode
     to thousands of cells. The pure :func:`_plan_buckets` splits the
     buckets between AT MOST TWO candidate joins keyed on (level, cell):
@@ -766,9 +774,9 @@ def knn_join(
     re-shuffled; one partitioned join takes the rest. The skinny right
     projection is persisted MEMORY_AND_DISK up front, so the bounds
     pass, both density counts, and every broadcast scan read one
-    materialization. Each scale decision — the density grid, every
-    round's plan, the survivors, the tail cellset — is one INFO record
-    on this module's logger (:func:`_record`).
+    materialization. Each scale decision — the density grid, the round
+    plan, the survivors, the tail cellset, the probe — is one INFO
+    record on this module's logger (:func:`_record`).
 
     ``metric="haversine"``: radius in METERS over (lon, lat) degrees;
     candidate boxes use the provably-containing degree expansion of
@@ -840,7 +848,7 @@ def knn_join(
         # correctness never depends on it — an overstated count just
         # picks a finer grid, an understated one a coarser grid, and an
         # actually-empty right converges to zero rows through the
-        # normal cover-radius round.
+        # density round and the probe.
         n_right = int(right_count)
     else:
         ragg = rpts.agg(
@@ -903,20 +911,13 @@ def knn_join(
         # array is BOUNDED by the gd <= 12 cap ((4097)^2 int64 =
         # 134 MB worst, ~8 MB at the 64M shape) independent of |right|.
         src = C_df if C_df is not None else _coarse_counts()
-        G = np.zeros((nc_d, nc_d), dtype=np.int64)
         pdf = src.toPandas()  # Arrow path: ~1M cells at gd=10 in <1 s
-        G[pdf["ccx"].to_numpy(), pdf["ccy"].to_numpy()] = pdf["cnt"].to_numpy()
         P = np.zeros((nc_d + 1, nc_d + 1), dtype=np.int64)
-        P[1:, 1:] = G.cumsum(axis=0).cumsum(axis=1)
-        return P
+        P[pdf["ccx"].to_numpy() + 1, pdf["ccy"].to_numpy() + 1] = pdf["cnt"].to_numpy()
+        return P.cumsum(axis=0).cumsum(axis=1)
 
-    # True whenever every row of `remaining` carries a CERTIFIED-complete
-    # radius (kth-NN <= r guaranteed): every post-transition round.
-    # Density-guess round 0 (and a user-supplied init_radius round 0)
-    # are False.
-    certified_radii = False
     # the index probe's arguments after (lefts, their schema, rights)
-    probe_args = (n_shuffle, bounds, k, metric, max_distance)
+    probe_args = (n_shuffle, bounds, k, metric, max_distance, t0)
     if init_radius is not None:
         r0 = F.lit(min(max(float(init_radius), r_floor), cover_r))
         remaining = lpts.select("lid", "px", "py", r0.alias("r"))
@@ -990,8 +991,8 @@ def knn_join(
             # as the dominant pre-loop cost and a poorly-scaling one). A
             # coarse cell averaging 64 rows by construction, 512+ marks a
             # genuine cluster; the mildly-dense cells this skips lose only
-            # a mildly-diluted coarse estimate (one extra round for a small
-            # cohort at worst).
+            # a mildly-diluted coarse estimate (a few more survivors for
+            # the probe at worst).
             dense_cells = C.filter(F.col("cnt") >= 512).select("ccx", "ccy")
             if n_dense <= 500_000:
                 dense_cells = F.broadcast(dense_cells)
@@ -1074,32 +1075,32 @@ def knn_join(
             # trust the fine cell only from 9k points up: cells in the
             # 3k..9k band are mostly cluster EDGES, where the cell's count
             # is real but the left's k-th neighbor lies outside the cluster
-            # — the tiny fine radius then fails 2 extra rounds (measured)
+            # — the tiny fine radius then fails the density round (measured)
             r0_fine = F.lit(cell_f) * F.sqrt(three_k / sf)
             r0 = F.when(
                 sf >= F.lit(9.0 * float(k)), F.least(r0_fine, r0_coarse)
             ).otherwise(r0_coarse)
             r0 = F.least(F.greatest(r0 * F.lit(unit), F.lit(r_floor)), F.lit(cover_r))
             remaining = joined.select("lid", "px", "py", r0.alias("r"))
-    # lazy checkpoint: the first bucket-stats job below materializes it,
-    # so init costs ONE barrier (checkpoint+stats fused), not two.
+    # lazy checkpoint: the bucket-stats job below materializes it, so
+    # init costs ONE barrier (checkpoint+stats fused), not two.
     # The skinny (lid, px, py, r) frame is coalesced to the scheduler's
     # default parallelism first: the density plan inherits the full
     # shuffle width from its exchanges, and every later consumer
-    # (bucket stats, transition anti join + ring udf, tail collects)
+    # (bucket stats, the candidate join, the survivors' anti join)
     # would otherwise launch that many near-empty tasks per job —
-    # measured ~2 s/round of pure task launch at 256 partitions for a
+    # measured ~2 s per job of pure task launch at 256 partitions for a
     # 250k-row frame. defaultParallelism scales with the cluster, so
     # this is not a local-mode constant.
     dp = max(1, lpts.sparkSession.sparkContext.defaultParallelism)
     remaining = remaining.coalesce(dp).localCheckpoint(eager=False)
 
-    # PER-LEFT grid level, every round: one level cannot serve mixed
-    # radii (tiny boxes in a coarse cell cross-product the whole cell's
-    # cluster; big boxes at a fine level explode to thousands of
-    # cells). Quantize each left's level (cell edge >= its box, even
-    # levels only -> <= 7 buckets); _plan_buckets splits the buckets
-    # between one broadcast and one partitioned candidate join.
+    # PER-LEFT grid level: one level cannot serve mixed radii (tiny
+    # boxes in a coarse cell cross-product the whole cell's cluster; big
+    # boxes at a fine level explode to thousands of cells). Quantize
+    # each left's level (cell edge >= its box, even levels only -> <= 7
+    # buckets); _plan_buckets splits the buckets between one broadcast
+    # and one partitioned candidate join.
     ext_u = ext * unit
     lvl_col = F.least(
         F.lit(16),
@@ -1110,247 +1111,149 @@ def knn_join(
             * F.floor(F.log2(F.try_divide(F.lit(ext_u), F.col("r") * 2.0)) / F.lit(2.0)),
         ),
     ).cast("int")
-
-    def _bucket_stats() -> list[tuple[int, int, float]]:
-        # one tiny job on the checkpointed tail doubles as the
-        # round-end count barrier: n_rem = sum of bucket counts
-        return sorted(
-            (row["_lvl"], row["cnt"], row["rmx"])
-            for row in remaining.groupBy(lvl_col.alias("_lvl"))
-            .agg(F.count(F.lit(1)).alias("cnt"), F.max("r").alias("rmx"))
-            .collect()
-        )
-
-    buckets = _bucket_stats()
-    n_rem = sum(c for _, c, _ in buckets)
-
-    parts: list[DataFrame] = []
-    w_ord = Window.partitionBy("left_id").orderBy(
-        F.col("dist").asc(), F.col("right_id").asc()
+    buckets = sorted(
+        (row["_lvl"], row["cnt"], row["rmx"])
+        for row in remaining.groupBy(lvl_col.alias("_lvl"))
+        .agg(F.count(F.lit(1)).alias("cnt"), F.max("r").alias("rmx"))
+        .collect()
     )
-    w_all = Window.partitionBy("left_id")
-
-    rb_udf = None  # lazy: built once, on the first survivor transition
-
-    def _ring_rb_udf():
-        # the prefix sum is broadcast once and each Arrow batch runs
-        # the vectorized ring search — survivor counts can be anything
-        # (no driver collect)
-        from pyspark.sql.types import DoubleType
-
-        bc = rpts.sparkSession.sparkContext.broadcast(_cell_prefix_np())
-
-        @F.pandas_udf(DoubleType())
-        def rb(pxs: pd.Series, pys: pd.Series) -> pd.Series:
-            return pd.Series(
-                _ring_certified_radii(
-                    bc.value,
-                    nc_d,
-                    cell_d,
-                    bounds,
-                    pxs.to_numpy(),
-                    pys.to_numpy(),
-                    k,
-                    metric,
-                    cover_r,
-                    r_floor,
-                )
-            )
-
-        return rb
+    if not buckets:  # empty left table
+        return _empty_result()
 
     try:
-        for round_idx in range(max_rounds):
-            if n_rem == 0:
-                break
-            if certified_radii and n_rem <= CERT_UPFRONT_MAX_LEFTS:
-                # TAIL round: collect the few survivors driver-side and
-                # answer them exactly with the index probe, over only the
-                # rights in the coarse cells their certified boxes touch
-                # (a broadcast semi join on the cached right) — the tail
-                # reads ~the straggler neighborhoods instead of streaming
-                # |right|, and no window ever sorts a ring-bound ball
-                # that holds a whole city. Safe because every true
-                # neighbor lies inside its left's box (r is certified),
-                # and the coarse cellset covers every box. Haversine
-                # builds its cellset from the wrapped geo_query_window
-                # degree segments — the SAME min-cos identity
-                # haversine_box_expand uses — so the cellset covers every
-                # box, dateline wrap included (VERDICT r5 Next #4).
-                from geo_index_spark.operators.search import geo_query_window
+        plan = _plan_buckets(buckets, ext_u, n_shuffle)
+        _record("round_plan", t0, buckets=buckets, **plan._asdict())
+        lvl_mapped = lvl_col
+        if plan.remap:
+            lvl_mapped = F.coalesce(
+                *[
+                    F.when(lvl_col == F.lit(int(s_)), F.lit(int(d_)))
+                    for s_, d_ in plan.remap.items()
+                ],
+                lvl_col,
+            )
+        cand = None
+        for lvls, hint in (
+            (plan.bcast_levels, "broadcast"),
+            (plan.part_levels, "SHUFFLE_HASH" if plan.shuffle_hash else None),
+        ):
+            if lvls:
+                c = _knn_candidates(
+                    remaining.filter(lvl_mapped.isin(lvls)),
+                    rpts,
+                    bounds,
+                    lvls,
+                    lvl_mapped,
+                    metric,
+                    hint,
+                )
+                cand = c if cand is None else cand.unionAll(c)
+        scored = cand
+        if max_distance is not None:
+            scored = scored.filter(F.col("dist") <= F.lit(float(max_distance)))
+        # dist <= r prefilter: a left that certifies has dk <= r, so its
+        # top-k all survive and c == k still fires; a left that does not
+        # goes to the probe either way. The window input shrinks from
+        # every candidate of the box cells (~10x the ball) to ~the
+        # in-ball counts — measured at 32M: 163M -> ~the ball's rows, the
+        # window sort ~8 s -> ~2 s. Full-cover lefts are exempt: their
+        # true kth-NN may exceed r = cover_r (e.g. the domain diagonal),
+        # and their box already holds everything.
+        scored = scored.filter(
+            (F.col("r") >= F.lit(cover_r)) | (F.col("dist") <= F.col("r"))
+        )
+        # one window shuffle does top-k AND certification: rn for the
+        # top-k cut, then count/kth-dist over the same partitioning (no
+        # extra exchange), certify row-local
+        w_ord = Window.partitionBy("left_id").orderBy(
+            F.col("dist").asc(), F.col("right_id").asc()
+        )
+        w_all = Window.partitionBy("left_id")
+        top = (
+            scored.withColumn("rn", F.row_number().over(w_ord))
+            .filter(F.col("rn") <= F.lit(int(k)))
+            .withColumn("c", F.count(F.lit(1)).over(w_all))
+            .withColumn("dk", F.max("dist").over(w_all))
+        )
+        certified = (
+            (F.col("c") == F.lit(int(k))) & (F.col("dk") <= F.col("r"))
+        ) | (F.col("r") >= F.lit(cover_r))
+        t_top = time.perf_counter()
+        top = top.localCheckpoint()  # the ONE heavy job
+        top_s = time.perf_counter() - t_top
+        out = top.filter(certified).select("left_id", "right_id", "dist")
+        done = top.filter(certified).select("left_id")
+        if sum(c for _, c, _ in buckets) * k <= 2_000_000:
+            # the certified-id list holds up to k rows per left —
+            # broadcast it while lefts * k stays small, so the anti join
+            # below probes a hash relation instead of exchanging BOTH
+            # sides across the full shuffle width (two 256-task
+            # exchanges measured ~2.7 s at 16M for ~250k-row inputs)
+            done = F.broadcast(done)
+        # full-cover lefts certify even with < k (or zero) candidates —
+        # the r < cover filter drops them whether or not they produced
+        # rows; everyone else that certified leaves via the anti join.
+        # The survivors saw < k candidates within r (the prefilter makes
+        # c == k imply dk <= r) and go to the exact probe.
+        tail = (
+            remaining.filter(F.col("r") < F.lit(cover_r))
+            .join(done, F.col("lid") == F.col("left_id"), "left_anti")
+            .select("lid", "px", "py")
+            .toPandas()
+        )
+        _record("survivors", t0, survivors=len(tail), top_job_s=round(top_s, 3))
+        if len(tail):
+            # the probe reads only the rights in the coarse cells that
+            # the survivors' CERTIFIED boxes touch (a broadcast semi join
+            # on the cached right), so it indexes ~the survivors'
+            # neighborhoods instead of all of right. Each radius is the
+            # prefix-sum ring bound of _ring_certified_radii — the
+            # smallest coarse cell ring holding >= k rights, a true
+            # kth-NN upper bound — so every true neighbor lies inside its
+            # left's box, and the cellset covers every box. Haversine
+            # builds its cellset from the wrapped geo_query_window degree
+            # segments — the SAME min-cos identity haversine_box_expand
+            # uses — so the cellset covers every box, dateline wrap
+            # included (VERDICT r5 Next #4).
+            from geo_index_spark.operators.search import geo_query_window
 
-                tail_pdf = remaining.select("lid", "px", "py", "r").toPandas()
-                px, py, r = (tail_pdf[c].to_numpy(np.float64) for c in ("px", "py", "r"))
-                if metric == "euclidean":
-                    boxes = np.column_stack([px - r, py - r, px + r, py + r])
-                else:
-                    boxes = np.array(
-                        [
-                            (lo, y - dlat, hi, y + dlat)
-                            for x, y, rr in zip(px, py, r)
-                            for dlat, segs in [geo_query_window(x, y, rr)]
-                            for lo, hi in segs
-                        ]
-                    )
-                cells = _box_cells(boxes, bounds[0], bounds[1], cell_d, nc_d)
-                if len(cells) > 60_000:
-                    cells = None  # too big to ship as a filter: read all rights
-                _record(
-                    "tail_cellset",
-                    t0,
-                    round=round_idx,
-                    lefts=len(tail_pdf),
-                    cells=None if cells is None else len(cells),
-                    grid_cells=nc_d * nc_d,
-                )
-                rpts_src = rpts
-                if cells is not None:
-                    # broadcast SEMI JOIN, not isin(): a >1k-element InSet
-                    # probes a boxed scala HashSet per row — measured ~10 s
-                    # of the tail round's 12 s scan over 32M cached rights.
-                    # BroadcastHashJoin probes a native long-keyed relation
-                    # inside whole-stage codegen instead.
-                    ccell = (
-                        _coarse_cell(F.col("qx"), bounds[0]) * F.lit(nc_d)
-                        + _coarse_cell(F.col("qy"), bounds[1])
-                    )
-                    cells_df = rpts.sparkSession.createDataFrame(
-                        [(int(c),) for c in cells], "ccell long"
-                    )
-                    rpts_src = rpts.join(
-                        F.broadcast(cells_df), ccell == F.col("ccell"), "left_semi"
-                    )
-                parts.append(_knn_probe(tail_pdf, lpts.schema, rpts_src, *probe_args))
-                n_rem = 0
-                break
-            plan = _plan_buckets(buckets, ext_u, n_shuffle)
-            _record("round_plan", t0, round=round_idx, buckets=buckets, **plan._asdict())
-            lvl_mapped = lvl_col
-            if plan.remap:
-                lvl_mapped = F.coalesce(
-                    *[
-                        F.when(lvl_col == F.lit(int(s_)), F.lit(int(d_)))
-                        for s_, d_ in plan.remap.items()
-                    ],
-                    lvl_col,
-                )
-            cand = None
-            for lvls, hint in (
-                (plan.bcast_levels, "broadcast"),
-                (plan.part_levels, "SHUFFLE_HASH" if plan.shuffle_hash else None),
-            ):
-                if lvls:
-                    c = _knn_candidates(
-                        remaining.filter(lvl_mapped.isin(lvls)),
-                        rpts,
-                        bounds,
-                        lvls,
-                        lvl_mapped,
-                        metric,
-                        hint,
-                    )
-                    cand = c if cand is None else cand.unionAll(c)
-            scored = cand
-            if max_distance is not None:
-                scored = scored.filter(F.col("dist") <= F.lit(float(max_distance)))
-            # dist <= r prefilter, EVERY round (round 6: was certified
-            # rounds only). Certified radii guarantee kth-NN <= r, so the
-            # true top-k all survive and c == k still fires. For DENSITY-
-            # GUESS rounds the filter is also safe: a left that certifies
-            # has dk <= r (its top-k all survive, c == k unchanged); a
-            # left that doesn't gets its next radius from the transition
-            # either way — the only change is that c==k-but-dk>r lefts
-            # now read c < k and take the ring bound instead of dk (both
-            # are valid certified radii; the handful of such lefts —
-            # n_rem-sized — is absorbed by the tail round's index
-            # probe). Payoff measured at 32M: the
-            # round-0 window input drops from 163M candidate rows (~326
-            # per left — box cells hold ~10x the ball) to ~the in-ball
-            # counts, cutting the round-0 window sort from ~8 s to ~2 s.
-            # Full-cover lefts are exempt: their true kth-NN may exceed
-            # r = cover_r (e.g. the domain diagonal), and their box
-            # already holds everything.
-            scored = scored.filter(
-                (F.col("r") >= F.lit(cover_r)) | (F.col("dist") <= F.col("r"))
+            px, py = (tail[c].to_numpy(np.float64) for c in ("px", "py"))
+            tail["r"] = r = _ring_certified_radii(
+                _cell_prefix_np(), nc_d, cell_d, bounds, px, py, k, metric, cover_r, r_floor
             )
-            # one window shuffle does top-k AND certification: rn for
-            # the top-k cut, then count/kth-dist over the same
-            # partitioning (no extra exchange), certify row-local
-            top = (
-                scored.withColumn("rn", F.row_number().over(w_ord))
-                .filter(F.col("rn") <= F.lit(int(k)))
-                .withColumn("c", F.count(F.lit(1)).over(w_all))
-                .withColumn("dk", F.max("dist").over(w_all))
-            )
-            certified = (
-                (F.col("c") == F.lit(int(k))) & (F.col("dk") <= F.col("r"))
-            ) | (F.col("r") >= F.lit(cover_r))
-            t_top = time.perf_counter()
-            top = top.localCheckpoint()  # the round's ONE heavy job
-            top_s = time.perf_counter() - t_top
-            parts.append(top.filter(certified).select("left_id", "right_id", "dist"))
-            done = top.filter(certified).select("left_id")
-            if n_rem * k <= 2_000_000:
-                # the certified-id list holds up to k rows per live
-                # left — broadcast it while n_rem * k stays small, so
-                # the anti join below probes a hash relation instead of exchanging BOTH remaining and
-                # done across the full shuffle width (two 256-task
-                # exchanges measured ~2.7 s of the 16M round-0
-                # transition for ~250k-row inputs)
-                done = F.broadcast(done)
-            # full-cover lefts certify even with < k (or zero) candidates
-            # — the r < cover filter drops them whether or not they
-            # produced rows; everyone else leaves via the anti join.
-            # Survivors get CERTIFIED radii, so the next round is the
-            # last: the prefix-sum ring bound — the smallest coarse-cell
-            # ring holding >= k rights (a true kth-NN upper bound). The
-            # dist <= r prefilter above makes c == k imply dk <= r, so
-            # an uncertified survivor ALWAYS has c < k and the old
-            # kth-candidate (dk) transition branch is provably empty —
-            # dropped in round 6 (one groupBy + join per round saved).
-            # No doubling, no straggler rounds: <= 2 rounds total.
-            if certified_radii:
-                # a certified round cannot leave survivors — this
-                # transition plan only runs as the round-end emptiness
-                # verification. Skip the ring-bound pandas_udf stage
-                # (broadcast + Arrow worker spin-up for zero rows): if a
-                # float-edge survivor ever did appear, cover_r certifies
-                # it unconditionally next round.
-                ring_fallback = F.lit(float(cover_r))
+            if metric == "euclidean":
+                boxes = np.column_stack([px - r, py - r, px + r, py + r])
             else:
-                if rb_udf is None:
-                    rb_udf = _ring_rb_udf()
-                ring_fallback = rb_udf(F.col("px"), F.col("py"))
-            remaining = (
-                remaining.filter(F.col("r") < F.lit(cover_r))
-                .join(done, F.col("lid") == F.col("left_id"), "left_anti")
-                .withColumn(
-                    "r",
-                    F.least(
-                        F.greatest(ring_fallback, F.lit(r_floor)),
-                        F.lit(cover_r),
-                    ),
+                boxes = np.array(
+                    [
+                        (lo, y - dlat, hi, y + dlat)
+                        for x, y, rr in zip(px, py, r)
+                        for dlat, segs in [geo_query_window(x, y, rr)]
+                        for lo, hi in segs
+                    ]
                 )
-                .select("lid", "px", "py", "r")
-                # lazy: materialized by the bucket-stats job right below
-                # — transition + round-end count share ONE barrier
-                .localCheckpoint(eager=False)
-            )
-            certified_radii = True  # every transition radius is certified
-            buckets = _bucket_stats()
-            n_rem = sum(c for _, c, _ in buckets)
-            _record(
-                "survivors", t0, round=round_idx, survivors=n_rem, top_job_s=round(top_s, 3)
-            )
-        if n_rem:
-            raise RuntimeError("knn_join did not converge within max_rounds")
+            cells = _box_cells(boxes, bounds[0], bounds[1], cell_d, nc_d)
+            _record("tail_cellset", t0, lefts=len(tail), cells=len(cells), grid_cells=nc_d * nc_d)
+            rpts_src = rpts
+            if len(cells) <= 60_000:  # else too big to ship as a filter: read all rights
+                # broadcast SEMI JOIN, not isin(): a >1k-element InSet
+                # probes a boxed scala HashSet per row — measured ~10 s
+                # of the tail's 12 s scan over 32M cached rights.
+                # BroadcastHashJoin probes a native long-keyed relation
+                # inside whole-stage codegen instead.
+                ccell = (
+                    _coarse_cell(F.col("qx"), bounds[0]) * F.lit(nc_d)
+                    + _coarse_cell(F.col("qy"), bounds[1])
+                )
+                cells_df = rpts.sparkSession.createDataFrame(
+                    [(int(c),) for c in cells], "ccell long"
+                )
+                rpts_src = rpts.join(
+                    F.broadcast(cells_df), ccell == F.col("ccell"), "left_semi"
+                )
+            out = out.unionAll(_knn_probe(tail, lpts.schema, rpts_src, *probe_args))
     finally:
         rpts.unpersist(blocking=False)
-    if not parts:  # empty left table: no rounds ran
-        return _empty_result()
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
     return out
 
 

@@ -183,6 +183,10 @@ def minhash_near_dup_pairs(
     # shingle twice (round-6 plan: a second full md5 pass fed `keyed`).
     # The cache also drops the shingle STRING — (id, h, k) is ~1/3 the
     # bytes of (id, s, h) and no downstream consumer needs `s`.
+    # Intersections use the 60-bit md5-prefix key: long compares ~10x
+    # faster than strings; collision odds ~|vocab|^2 / 2^61 — negligible,
+    # and equal for Spark and the SQL oracle since both compare exact
+    # sets up to that hash.
     sh = (
         shingles(docs.repartition(par), id_col, text_col, n)
         .select("id", F.md5(F.col("s")).alias("_md"))
@@ -193,6 +197,26 @@ def minhash_near_dup_pairs(
         )
         .cache()
     )
+    return _minhash_pairs(
+        sh, "k", num_hashes, band_rows, par, tau_num, tau_den, refine, broadcast_max_shingles
+    )
+
+
+def _minhash_pairs(
+    sh: DataFrame,
+    key: str,
+    num_hashes: int,
+    band_rows: int,
+    par: int,
+    tau_num: int,
+    tau_den: int,
+    refine: str,
+    broadcast_max_shingles: int,
+) -> DataFrame:
+    """The MinHash/LSH core both variants share: over the cached
+    hashed-shingle frame ``sh`` (``id``, base hash ``h`` in [0, P), and
+    the refine key column ``key``), one signature aggregate, the band
+    self-join for candidates, and the exact-Jaccard refine."""
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(P)).alias(f"mh{j}")
         for j, (a, b) in enumerate(seeds(num_hashes))
@@ -225,15 +249,11 @@ def minhash_near_dup_pairs(
         .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
         .distinct()
     )
-    # exact-Jaccard refinement on candidates only. Intersections use the
-    # 60-bit md5-prefix hash of each shingle (long compares ~10x faster
-    # than strings; collision odds ~|vocab|^2 / 2^61 — negligible, and
-    # equal for Spark and the SQL oracle since both compare exact sets
-    # up to that hash).
-    # NOT pre-deduped: the broadcast refine dedupes via collect_set for
-    # free and the counting refine dedupes after its semi-join prune —
-    # a full (id, k) dropDuplicates exchange here would be pure overhead
-    keyed = sh.select("id", "k")
+    # exact-Jaccard refinement on candidates only, NOT pre-deduped: the
+    # broadcast refine dedupes via collect_set for free and the counting
+    # refine dedupes after its semi-join prune — a full (id, k)
+    # dropDuplicates exchange here would be pure overhead
+    keyed = sh.select("id", F.col(key).alias("k"))
     # sizes count distinct shingle STRINGS (what the SQL oracle counts)
     # = the per-doc row count the signature aggregate already computed
     sizes = sig.select("id", "sz")
@@ -602,42 +622,9 @@ def minhash_near_dup_pairs_fast(
         .select("id", F.pmod(F.xxhash64("s"), F.lit(P)).alias("h"))
         .cache()
     )
-    aggs = [
-        F.min((F.lit(a) * F.col("h") + F.lit(b)) % F.lit(P)).alias(f"mh{j}")
-        for j, (a, b) in enumerate(seeds(num_hashes))
-    ] + [F.count(F.lit(1)).alias("sz")]
-    # same round-7 restructure as the md5 variant: checkpoint the tiny
-    # per-doc signature table once instead of re-aggregating the shingle
-    # cache per (band x join-side) consumer; sizes ride along on sig
-    sig = sh.groupBy("id").agg(*aggs).localCheckpoint()
-    n_bands = num_hashes // band_rows
-    bandarr = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "_", *[F.col(f"mh{b * band_rows + r}") for r in range(band_rows)]
-                ).alias("v"),
-            )
-            for b in range(n_bands)
-        ]
+    return _minhash_pairs(
+        sh, "h", num_hashes, band_rows, par, tau_num, tau_den, refine, broadcast_max_shingles
     )
-    bands = sig.select("id", F.explode(bandarr).alias("_bv")).select(
-        "id", F.col("_bv.band").alias("band"), F.col("_bv.v").alias("v")
-    )
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), on=["band", "v"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .distinct()
-    )
-    keyed = sh.select("id", F.col("h").alias("k"))  # refine dedupes (see md5 variant)
-    sizes = sig.select("id", "sz")
-    if refine == "auto":
-        n_shingles = sig.agg(F.sum("sz")).first()[0] or 0
-        refine = "broadcast" if n_shingles <= broadcast_max_shingles else "counting"
-    return _exact_jaccard_refine(cand, keyed, sizes, par, tau_num, tau_den, refine)
 
 
 def collapse_near_dup_clusters(

@@ -227,13 +227,30 @@ def test_partition_invariance(spark):
         assert got == want
 
 
-def test_spatial_join_salted_parity(spark):
-    """salt>1 must not change the result set (skew path correctness)."""
+def test_spatial_join_salted_parity(spark, monkeypatch):
+    """salt>1 must not change the result set (skew path correctness).
+    The auto SHUFFLE_HASH gate sizes the build side it hashes: the
+    right side replicated ``salt`` times, so a budget that fits the raw
+    right side at salt 1 withholds the hint at salt 4."""
+    import importlib
+
+    J = importlib.import_module("geo_index_spark.operators.join")
     boxes = data1_boxes()
     df = data1_df(spark)
     want = _duckdb_join_oracle(boxes)
     got = {(r.left_id, r.right_id) for r in spatial_join(df, df, grid_level=4, salt=4).collect()}
     assert got == want
+
+    monkeypatch.setattr(J, "_auto_broadcast_threshold", lambda spark: 0)
+    rsz = J._plan_size_bytes(df)
+    monkeypatch.setattr(J, "SHUFFLE_HASH_BUILD_BUDGET", 2.0 * rsz / J._shuffle_partitions(spark))
+    pairs = {}
+    for salt in (1, 4):
+        out = spatial_join(df, df, grid_level=4, salt=salt)
+        hinted = "shuffle_hash" in out._jdf.queryExecution().optimizedPlan().toString()
+        assert hinted == (salt == 1), salt
+        pairs[salt] = {(r.left_id, r.right_id) for r in out.collect()}
+    assert pairs[1] == pairs[4] == want
 
 
 def test_distance_join_oracle(spark):
@@ -963,13 +980,17 @@ def test_knn_join_disjoint_supports(spark):
     assert got == sorted(brute)
 
 
-def test_knn_join_tail_certified_single_round(spark):
+def test_knn_join_tail_certified_single_round(spark, caplog):
     """A small euclidean join is answered in one pass by the index
-    probe — max_rounds=1 pins that no candidate round is needed. Covers
-    the plain case, inclusive max_distance capping, and fewer-than-k
-    rights (every right of the table per left)."""
+    probe — no round_plan record, so no candidate join ran. Covers the
+    plain case, inclusive max_distance capping, and fewer-than-k rights
+    (every right of the table per left)."""
+    import logging
+
     import numpy as np
     from geo_index_spark.operators.knn import knn_join
+
+    caplog.set_level(logging.INFO, logger="geo_index_spark.operators.knn")
 
     rng = np.random.default_rng(43)
     blob = np.column_stack([rng.uniform(0, 1, 300), rng.uniform(0, 1, 300)])
@@ -990,19 +1011,19 @@ def test_knn_join_tail_certified_single_round(spark):
 
     got = sorted(
         (r.left_id, r.right_id, round(r.dist, 6))
-        for r in knn_join(ldf, rdf, 3, max_rounds=1).collect()
+        for r in knn_join(ldf, rdf, 3).collect()
     )
     assert got == brute()
     got_md = sorted(
         (r.left_id, r.right_id, round(r.dist, 6))
-        for r in knn_join(ldf, rdf, 3, max_rounds=1, max_distance=5.0).collect()
+        for r in knn_join(ldf, rdf, 3, max_distance=5.0).collect()
     )
     assert got_md == brute(max_d=5.0)
-    # fewer than k rights in the whole table -> full-cover certify, one round
+    # fewer than k rights in the whole table -> every right for every left
     tiny = spark.createDataFrame(rpts[:2], "row_id long, x double, y double")
     got_tiny = sorted(
         (r.left_id, r.right_id, round(r.dist, 6))
-        for r in knn_join(ldf, tiny, 3, max_rounds=1).collect()
+        for r in knn_join(ldf, tiny, 3).collect()
     )
     brute_tiny = sorted(
         (lid, rid, round(float(np.hypot(rx - lx, ry - ly)), 6))
@@ -1010,6 +1031,8 @@ def test_knn_join_tail_certified_single_round(spark):
         for rid, rx, ry in rpts[:2]
     )
     assert got_tiny == brute_tiny
+    decisions = [getattr(r, "knn_decision", "") for r in caplog.records]
+    assert decisions.count("probe") == 3 and "round_plan" not in decisions
 
 
 def test_knn_join_haversine_tail_prefilter_dateline(spark, monkeypatch):
@@ -1077,14 +1100,18 @@ def test_knn_join_haversine_tail_prefilter_dateline(spark, monkeypatch):
     assert any(rpts[j][1] < 0 for _, j, _ in got)
 
 
-def test_knn_join_certified_upfront_one_round_16m_shape(spark):
+def test_knn_join_certified_upfront_one_round_16m_shape(spark, caplog):
     """A mid-size left side (above the old 5,000-left tail threshold,
     below CERT_UPFRONT_MAX_LEFTS) in the 16M bench's shape — skewed city
     clusters + uniform spread + deep voids — goes to the index probe in
-    one pass: max_rounds=1. Euclidean AND haversine (wrap-aware
+    one pass: no round_plan record. Euclidean AND haversine (wrap-aware
     Flatbush box bound)."""
+    import logging
+
     import numpy as np
     from geo_index_spark.operators.knn import knn_join
+
+    caplog.set_level(logging.INFO, logger="geo_index_spark.operators.knn")
 
     rng = np.random.default_rng(47)
     # 16M-bench shape at pytest scale: 80% on city clusters, 20% uniform
@@ -1126,19 +1153,22 @@ def test_knn_join_certified_upfront_one_round_16m_shape(spark):
     for metric in ("euclidean", "haversine"):
         got = sorted(
             (r.left_id, r.right_id, round(r.dist, 6))
-            for r in knn_join(ldf, rdf, 3, metric=metric, max_rounds=1).collect()
+            for r in knn_join(ldf, rdf, 3, metric=metric).collect()
         )
         assert got == brute(metric), metric
+    decisions = [getattr(r, "knn_decision", "") for r in caplog.records]
+    assert decisions.count("probe") == 2 and "round_plan" not in decisions
 
 
-def test_knn_join_two_phase_certified_max_two_rounds(spark, monkeypatch, caplog):
-    """Round-5 rework, big-left path (forced by dropping the up-front
-    threshold): round 0 runs density radii, every survivor then gets a
-    CERTIFIED radius — kth-candidate distance when k candidates exist,
-    prefix-sum ring bound for voids — so round 1 certifies everyone.
-    max_rounds=2 pins that no third round can exist, on the adversarial
-    shapes: skewed density, disjoint supports (all-void round 0),
-    max_distance starvation, haversine incl. dateline wrap. Every shape
+def test_knn_join_big_left_round_then_probe(spark, monkeypatch, caplog):
+    """The big-left path (forced by lowering the small-left threshold to
+    8 lefts): one density round — exactly one round_plan record per
+    call — then every uncertified left goes to the index probe, in
+    chunks of at most 8 lefts, over the rights of the coarse cells its
+    ring-bound box touches. Adversarial shapes: skewed density,
+    disjoint supports (with a tiny init_radius all 25 lefts survive:
+    4 probe chunks), max_distance starvation, haversine incl. dateline
+    wrap. Every shape
     runs through both candidate strategies — the broadcast multilevel
     join, and the partitioned join (forced by a zero broadcast-lefts
     cap) — and the round-plan records show which one ran."""
@@ -1166,13 +1196,13 @@ def test_knn_join_two_phase_certified_max_two_rounds(spark, monkeypatch, caplog)
             out.extend((lid, rid, d) for d, rid in ds[:k])
         return sorted(out)
 
-    # disjoint supports: EVERY left fails round 0 with zero candidates
+    # disjoint supports: the lefts sit in a void, away from every right
     far_lpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(
         np.column_stack([rng.uniform(0, 4, 25), rng.uniform(0, 4, 25)])
     )]
     far_l = spark.createDataFrame(far_lpts, "row_id long, x double, y double")
     far_r = spark.createDataFrame(rpts[300:], "row_id long, x double, y double")
-    # haversine incl. dateline wrap: same two-round guarantee
+    # haversine incl. dateline wrap
     lon = np.concatenate([rng.uniform(178.5, 180.0, 40), rng.uniform(-180.0, -178.5, 40)])
     lat = rng.uniform(50.0, 60.0, 80)
     gpts = [(i, float(x), float(y)) for i, (x, y) in enumerate(np.column_stack([lon, lat]))]
@@ -1193,10 +1223,13 @@ def test_knn_join_two_phase_certified_max_two_rounds(spark, monkeypatch, caplog)
     def run(l_df, r_df, k, **kw):
         return sorted(
             (r.left_id, r.right_id, round(r.dist, 6))
-            for r in K.knn_join(l_df, r_df, k, max_rounds=2, **kw).collect()
+            for r in K.knn_join(l_df, r_df, k, **kw).collect()
         )
 
-    monkeypatch.setattr(K, "CERT_UPFRONT_MAX_LEFTS", 0)  # force the big-left path
+    def records(decision):
+        return [r.knn_inputs for r in caplog.records if getattr(r, "knn_decision", "") == decision]
+
+    monkeypatch.setattr(K, "CERT_UPFRONT_MAX_LEFTS", 8)  # force the big-left path
     caplog.set_level(logging.INFO, logger=K.__name__)
     for strategy, bcast_max in (("broadcast", K.BCAST_MAX_LEFTS), ("partitioned", 0)):
         monkeypatch.setattr(K, "BCAST_MAX_LEFTS", bcast_max)
@@ -1207,13 +1240,21 @@ def test_knn_join_two_phase_certified_max_two_rounds(spark, monkeypatch, caplog)
             lpts, rpts, 3, max_d=6.0
         ), strategy
         assert run(far_l, far_r, 4) == brute_euc(far_lpts, rpts[300:], 4), strategy
+        # a tiny init_radius fails every far left in the density round:
+        # the probe takes all 25 in chunks of <= 8
+        assert run(far_l, far_r, 4, init_radius=1e-9) == brute_euc(
+            far_lpts, rpts[300:], 4
+        ), strategy
+        assert records("survivors")[-1]["survivors"] == 25, strategy
+        assert {k: records("probe")[-1][k] for k in ("lefts", "chunks")} == {"lefts": 25, "chunks": 4}
         got_h = run(gdf, gdf, 3, metric="haversine")
         assert got_h == sorted(brute_h), strategy
         assert any((gpts[a][1] > 0) != (gpts[b][1] > 0) for a, b, _ in got_h)
 
-        plans = [r.knn_inputs for r in caplog.records if getattr(r, "knn_decision", "") == "round_plan"]
-        first = plans[0]  # round 0 of the first call: every left, bucketed by level
-        assert first["round"] == 0 and sum(c for _, c, _ in first["buckets"]) == len(lpts)
+        plans = records("round_plan")
+        assert len(plans) == 5, strategy  # one density round per call
+        first = plans[0]  # the first call: every left, bucketed by level
+        assert sum(c for _, c, _ in first["buckets"]) == len(lpts)
         assert "elapsed_s" in first and first["remap"].keys() <= {lvl for lvl, *_ in first["buckets"]}
         if strategy == "broadcast":
             assert all(p["bcast_levels"] and not p["part_levels"] for p in plans)
@@ -1272,6 +1313,13 @@ def test_knn_candidates_levels_and_hints(spark):
                 pairs = [(r.left_id, r.right_id) for r in rows]
                 want = {p for p in exact if p[0] % 3 == 1} if len(levels) == 1 else exact
                 assert len(pairs) == len(set(pairs)) and set(pairs) == want, (metric, hint, levels)
+                # integer cells at one level and at several: no long/double/long
+                # cast of the cell, no not-null filter re-evaluating it on the right
+                opt = cand._jdf.queryExecution().optimizedPlan().toString()
+                assert "as bigint" not in opt, (metric, levels, opt)
+                assert not any(
+                    "isnotnull" in ln and "FLOOR" in ln and "qx" in ln for ln in opt.splitlines()
+                ), (metric, levels, opt)
                 if metric == "euclidean":  # candidates come from cells at the left's OWN level
                     for c in cand.select("left_id", "right_id").collect():
                         _, x, y, r, lvl = lefts[c.left_id]
@@ -1288,6 +1336,77 @@ def test_knn_candidates_levels_and_hints(spark):
             assert op in plan, (hint, plan)
             # one literal level keeps integer cell arithmetic (no per-row casts)
             assert metric != "euclidean" or " as double" not in plan, plan
+
+
+def test_ring_certified_radii_bounds_kth_nn():
+    """Spark-free: every ring-bound radius the probe's cellset is built
+    from bounds the left's brute-force kth-NN distance — clustered,
+    uniform and void rights, euclidean and haversine, lefts at lon +-180
+    and |lat| near 90. The one exception is the cover radius the bound
+    is clipped to: a euclidean left whose kth neighbor sits across a
+    void diagonal may lie farther than ``cover_r`` (the domain extent),
+    and its +-cover_r box still covers the whole domain. A grid holding
+    fewer than k rights gives every left ``cover_r``."""
+    import importlib
+
+    from geo_index_spark.localindex.flatbush import haversine
+
+    K = importlib.import_module("geo_index_spark.operators.knn")
+    rng = np.random.default_rng(71)
+    k, nc = 3, 16
+
+    def prefix(rx, ry, bounds, cell):
+        cx = np.clip(np.floor((rx - bounds[0]) / cell), 0, nc - 1).astype(np.int64)
+        cy = np.clip(np.floor((ry - bounds[1]) / cell), 0, nc - 1).astype(np.int64)
+        G = np.zeros((nc, nc), np.int64)
+        np.add.at(G, (cx, cy), 1)
+        P = np.zeros((nc + 1, nc + 1), np.int64)
+        P[1:, 1:] = G.cumsum(axis=0).cumsum(axis=1)
+        return P
+
+    for metric, bounds, cover_r in (
+        ("euclidean", (0.0, 0.0, 100.0, 100.0), 100.0),
+        ("haversine", (-180.0, -90.0, 180.0, 90.0), np.pi * K.EARTH_RADIUS_M),
+    ):
+        lox, loy, hix, hiy = bounds
+        ext = max(hix - lox, hiy - loy)
+        cell = ext / nc
+        w, h = hix - lox, hiy - loy
+        centers = np.column_stack([rng.uniform(lox, hix, 5), rng.uniform(loy, hiy, 5)])
+        clustered = centers[rng.integers(0, 5, 600)] + rng.normal(0, 0.01 * w, (600, 2))
+        rights = {
+            "clustered": clustered,
+            "uniform": np.column_stack([rng.uniform(lox, hix, 600), rng.uniform(loy, hiy, 600)]),
+            # everything in one corner: most lefts look across a void
+            "void": np.column_stack(
+                [rng.uniform(hix - 0.05 * w, hix, 40), rng.uniform(hiy - 0.05 * h, hiy, 40)]
+            ),
+            "fewer_than_k": np.array([[lox + 0.3 * w, loy + 0.3 * h], [lox + 0.6 * w, loy + 0.2 * h]]),
+        }
+        lefts = np.vstack(
+            [
+                np.column_stack([rng.uniform(lox, hix, 300), rng.uniform(loy, hiy, 300)]),
+                [[lox, loy], [hix, hiy], [lox, hiy], [hix, loy]],
+                [[lox, hiy - 0.001 * h], [hix, loy + 0.001 * h], [0.5 * (lox + hix), hiy - 0.001 * h]],
+            ]
+        )
+        for name, rxy in rights.items():
+            rxy = np.clip(rxy, [lox, loy], [hix, hiy])
+            P = prefix(rxy[:, 0], rxy[:, 1], bounds, cell)
+            r = K._ring_certified_radii(
+                P, nc, cell, bounds, lefts[:, 0], lefts[:, 1], k, metric, cover_r, cover_r / (1 << 20)
+            )
+            if len(rxy) < k:
+                assert np.all(r == cover_r), (metric, name)
+                continue
+            if metric == "euclidean":
+                d = np.hypot(lefts[:, :1] - rxy[:, 0], lefts[:, 1:] - rxy[:, 1])
+            else:
+                d = haversine(lefts[:, :1], lefts[:, 1:], rxy[:, 0], rxy[:, 1])
+            kth = np.sort(d, axis=1)[:, k - 1]
+            assert np.all((r >= kth) | (r == cover_r)), (metric, name, np.flatnonzero(r < kth))
+            if metric == "haversine":  # pi * R is the largest haversine distance
+                assert np.all(r >= kth), (metric, name)
 
 
 def test_box_cells_matches_loop():
