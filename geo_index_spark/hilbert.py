@@ -11,7 +11,7 @@ and against the flatbush-JS golden buffer):
 
 * :func:`hilbert_u32`   — vectorized numpy (used inside local index
   kernels and for goldens).
-* :func:`hilbert_col`   — a Catalyst ``Column`` expression over longs.
+* :func:`with_hilbert_key` — staged Catalyst projections over longs.
   This is the hot path at 100 TB: the key is computed JVM-side inside
   whole-stage codegen, so Hilbert partitioning of a trillion rows never
   touches Python.
@@ -228,87 +228,6 @@ def with_hilbert_key(df, gx: str, gy: str, out: str = "hilbert"):
     return df.drop(*drop)
 
 
-def hilbert_col(x: Column, y: Column) -> Column:
-    """Single-Column Catalyst expression equal to :func:`hilbert_u32`.
-
-    ``x``/``y`` must be LongType columns holding values in [0, 65535].
-    All intermediates stay in u32 range, represented in non-negative
-    longs, so Java long bit ops reproduce the u32 semantics exactly.
-
-    WARNING: only for tiny fixture plans — inlining duplicates subtrees
-    exponentially (see module note). Production paths must use
-    :func:`with_hilbert_key`.
-    """
-    lit = F.lit
-    m16 = lit(0xFFFF)
-
-    a1 = x.bitwiseXOR(y)
-    b1 = m16.bitwiseXOR(a1)
-    c1 = m16.bitwiseXOR(x.bitwiseOR(y))
-    d1 = x.bitwiseAND(y.bitwiseXOR(m16))
-
-    a2 = a1.bitwiseOR(F.shiftright(b1, 1))
-    b2 = F.shiftright(a1, 1).bitwiseXOR(a1)
-    c2 = F.shiftright(c1, 1).bitwiseXOR(b1.bitwiseAND(F.shiftright(d1, 1))).bitwiseXOR(c1)
-    d2 = a1.bitwiseAND(F.shiftright(c1, 1)).bitwiseXOR(F.shiftright(d1, 1)).bitwiseXOR(d1)
-
-    a1, b1, c1, d1 = a2, b2, c2, d2
-    a2 = a1.bitwiseAND(F.shiftright(a1, 2)).bitwiseXOR(b1.bitwiseAND(F.shiftright(b1, 2)))
-    b2 = a1.bitwiseAND(F.shiftright(b1, 2)).bitwiseXOR(
-        b1.bitwiseAND(F.shiftright(a1.bitwiseXOR(b1), 2))
-    )
-    c2 = c2.bitwiseXOR(
-        a1.bitwiseAND(F.shiftright(c1, 2)).bitwiseXOR(b1.bitwiseAND(F.shiftright(d1, 2)))
-    )
-    d2 = d2.bitwiseXOR(
-        b1.bitwiseAND(F.shiftright(c1, 2)).bitwiseXOR(
-            a1.bitwiseXOR(b1).bitwiseAND(F.shiftright(d1, 2))
-        )
-    )
-
-    a1, b1, c1, d1 = a2, b2, c2, d2
-    a2 = a1.bitwiseAND(F.shiftright(a1, 4)).bitwiseXOR(b1.bitwiseAND(F.shiftright(b1, 4)))
-    b2 = a1.bitwiseAND(F.shiftright(b1, 4)).bitwiseXOR(
-        b1.bitwiseAND(F.shiftright(a1.bitwiseXOR(b1), 4))
-    )
-    c2 = c2.bitwiseXOR(
-        a1.bitwiseAND(F.shiftright(c1, 4)).bitwiseXOR(b1.bitwiseAND(F.shiftright(d1, 4)))
-    )
-    d2 = d2.bitwiseXOR(
-        b1.bitwiseAND(F.shiftright(c1, 4)).bitwiseXOR(
-            a1.bitwiseXOR(b1).bitwiseAND(F.shiftright(d1, 4))
-        )
-    )
-
-    a1, b1, c1, d1 = a2, b2, c2, d2
-    c2 = c2.bitwiseXOR(
-        a1.bitwiseAND(F.shiftright(c1, 8)).bitwiseXOR(b1.bitwiseAND(F.shiftright(d1, 8)))
-    )
-    d2 = d2.bitwiseXOR(
-        b1.bitwiseAND(F.shiftright(c1, 8)).bitwiseXOR(
-            a1.bitwiseXOR(b1).bitwiseAND(F.shiftright(d1, 8))
-        )
-    )
-
-    a1 = c2.bitwiseXOR(F.shiftright(c2, 1))
-    b1 = d2.bitwiseXOR(F.shiftright(d2, 1))
-
-    i0 = x.bitwiseXOR(y)
-    i1 = b1.bitwiseOR(m16.bitwiseXOR(i0.bitwiseOR(a1)))
-
-    i0 = _u32(i0.bitwiseOR(F.shiftleft(i0, 8))).bitwiseAND(lit(0x00FF00FF))
-    i0 = _u32(i0.bitwiseOR(F.shiftleft(i0, 4))).bitwiseAND(lit(0x0F0F0F0F))
-    i0 = _u32(i0.bitwiseOR(F.shiftleft(i0, 2))).bitwiseAND(lit(0x33333333))
-    i0 = _u32(i0.bitwiseOR(F.shiftleft(i0, 1))).bitwiseAND(lit(0x55555555))
-
-    i1 = _u32(i1.bitwiseOR(F.shiftleft(i1, 8))).bitwiseAND(lit(0x00FF00FF))
-    i1 = _u32(i1.bitwiseOR(F.shiftleft(i1, 4))).bitwiseAND(lit(0x0F0F0F0F))
-    i1 = _u32(i1.bitwiseOR(F.shiftleft(i1, 2))).bitwiseAND(lit(0x33333333))
-    i1 = _u32(i1.bitwiseOR(F.shiftleft(i1, 1))).bitwiseAND(lit(0x55555555))
-
-    return _u32(F.shiftleft(i1, 1)).bitwiseOR(i0)
-
-
 def grid_coord_col(v: Column, lo: Column | float, extent: Column | float) -> Column:
     """Catalyst version of :func:`grid_coord` → LongType in [0, 65535]."""
     lo = lo if isinstance(lo, Column) else F.lit(float(lo))
@@ -319,19 +238,3 @@ def grid_coord_col(v: Column, lo: Column | float, extent: Column | float) -> Col
     )
     return g.cast("long")
 
-
-def hilbert_box_col(
-    minx: Column,
-    miny: Column,
-    maxx: Column,
-    maxy: Column,
-    bounds: tuple[float, float, float, float],
-) -> Column:
-    """Hilbert key of a box center over fixed global bounds, as a pure
-    Catalyst expression (no Python in the 100 TB path)."""
-    lo_x, lo_y, hi_x, hi_y = (float(b) for b in bounds)
-    cx = (minx + maxx) / F.lit(2.0)
-    cy = (miny + maxy) / F.lit(2.0)
-    gx = grid_coord_col(cx, lo_x, hi_x - lo_x)
-    gy = grid_coord_col(cy, lo_y, hi_y - lo_y)
-    return hilbert_col(gx, gy)

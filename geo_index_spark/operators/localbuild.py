@@ -96,6 +96,15 @@ def partition_prune(
     return lb, radius
 
 
+def _check_index_args(cols: tuple[str, ...], tree_type: str, sort_method: str) -> None:
+    if tree_type not in ("rtree", "kdtree"):
+        raise ValueError(f"tree_type must be rtree|kdtree, got {tree_type!r}")
+    if sort_method not in ("hilbert", "str"):
+        raise ValueError(f"sort_method must be hilbert|str, got {sort_method!r}")
+    if tree_type == "kdtree" and len(cols) != 2:
+        raise ValueError("kdtree blobs index point tables; pass cols=(x, y)")
+
+
 def build_partition_indexes(
     df: DataFrame,
     num_partitions: int,
@@ -106,8 +115,36 @@ def build_partition_indexes(
     tree_type: str = "rtree",
     sort_method: str = "hilbert",
 ) -> DataFrame:
-    """Hilbert-partition ``df`` and build one serialized local index per
-    partition. Returns the index table (one row per non-empty partition).
+    """Hilbert-partition ``df`` (``hilbert_partition``), then build one
+    serialized local index per partition (:func:`index_partitions`).
+    Returns the index table (one row per non-empty partition). A caller
+    that already holds a Hilbert-clustered frame, and uses it for more
+    than the index, calls :func:`index_partitions` on it directly and
+    saves the second bounds pass, range sample and shuffle."""
+    _check_index_args(cols, tree_type, sort_method)  # before the bounds job
+    return index_partitions(
+        hilbert_partition(df, num_partitions, bounds=bounds, cols=cols),
+        cols,
+        id_col,
+        node_size,
+        tree_type,
+        sort_method,
+    )
+
+
+def index_partitions(
+    df: DataFrame,
+    cols: tuple[str, str, str, str] = ("minx", "miny", "maxx", "maxy"),
+    id_col: str = "row_id",
+    node_size: int = DEFAULT_NODE_SIZE,
+    tree_type: str = "rtree",
+    sort_method: str = "hilbert",
+) -> DataFrame:
+    """Build one serialized local index per existing partition of
+    ``df``, inside ``mapInArrow``. Returns the index table (one row per
+    non-empty partition); pruning by a partition's box only helps when
+    the partitions are spatially coherent, e.g. ``hilbert_partition``
+    output.
 
     ``tree_type="rtree"`` emits flatbush-v3 blobs (boxes or points);
     ``tree_type="kdtree"`` emits kdbush-v1 blobs — point tables only,
@@ -123,16 +160,8 @@ def build_partition_indexes(
     blob layout and probe path are identical either way (leaf order is
     a build-time choice, not a format change), so STR blobs flow
     through the same search/within/knn probes."""
-    if tree_type not in ("rtree", "kdtree"):
-        raise ValueError(f"tree_type must be rtree|kdtree, got {tree_type!r}")
-    if sort_method not in ("hilbert", "str"):
-        raise ValueError(f"sort_method must be hilbert|str, got {sort_method!r}")
+    _check_index_args(cols, tree_type, sort_method)
     point_mode = len(cols) == 2
-    if tree_type == "kdtree" and not point_mode:
-        raise ValueError("kdtree blobs index point tables; pass cols=(x, y)")
-    hp = hilbert_partition(df, num_partitions, bounds=bounds, cols=cols)
-    sel = [id_col, *cols] if len(cols) == 4 else [id_col, cols[0], cols[1]]
-    hp = hp.select(*sel)
 
     def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         tbl = pa.Table.from_batches(list(batches)) if batches else None
@@ -169,7 +198,7 @@ def build_partition_indexes(
             }
         )
 
-    return hp.mapInArrow(build, INDEX_SCHEMA)
+    return df.select(id_col, *cols).mapInArrow(build, INDEX_SCHEMA)
 
 
 def _probe_blob_bbox(tree: bytes, min_x, min_y, max_x, max_y) -> np.ndarray:

@@ -53,7 +53,7 @@ def with_hilbert(
     out: str = "hilbert",
 ) -> DataFrame:
     """Add the u32 Hilbert key of each row's box center as a LongType
-    column — pure Catalyst expression, JVM-side (see hilbert.hilbert_col)."""
+    column — pure Catalyst expression, JVM-side (see hilbert.with_hilbert_key)."""
     if bounds is None:
         bounds = global_bounds(df, cols)
     lox, loy, hix, hiy = (float(b) for b in bounds)

@@ -88,13 +88,6 @@ SELECT {keep_out}, (((i1_4 << 1) & {M32}) | i0_4)::BIGINT AS hilbert FROM _h{8 +
     return s
 
 
-def grid_coord_sql(v: str, lo: float, extent: float) -> str:
-    """Mirror of hilbert.grid_coord_col (16-bit grid mapping)."""
-    if extent <= 0:
-        return "0"
-    return f"greatest(0, least(65535, floor(65535.0 * (({v}) - ({lo!r})) / ({extent!r}))))::BIGINT"
-
-
 def morton_expand_sql(v: str) -> str:
     out = v
     for sh, mask in ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555)):

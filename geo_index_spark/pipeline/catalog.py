@@ -14,6 +14,9 @@ On a real cluster every call site swaps 1:1:
     catalog.write(df, "db.t")        -> df.writeTo("db.t").createOrReplace()
     catalog.read(spark, "db.t")      -> spark.table("db.t")
     catalog.read(..., snapshot_id=s) -> spark.read.option("snapshot-id", s).table(...)
+A snapshot's ``rows`` is summed from its parquet footers on the driver
+(:func:`parquet_rows`), with no Spark job; on Iceberg it is the snapshot
+summary's ``total-records``.
 No other module knows about the shim's layout — pipeline/checkpoint and
 jobs go through this interface.
 """
@@ -24,7 +27,22 @@ import json
 import time
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+
+def parquet_files(path: str | Path) -> list[Path]:
+    """The visible ``*.parquet`` files directly under ``path``: the ones
+    Spark's reader sees, which skips ``_*`` and ``.*`` names."""
+    files = Path(path).glob("*.parquet")
+    return sorted(f for f in files if not f.name.startswith(("_", ".")))
+
+
+def parquet_rows(path: str | Path) -> int:
+    """Rows committed under ``path``, summed from the parquet footers.
+    Equals ``spark.read.parquet(path).count()``, which also reads only
+    row-group metadata, without starting a Spark job."""
+    return sum(pq.read_metadata(f).num_rows for f in parquet_files(path))
 
 
 class ParquetSnapshotCatalog:
@@ -62,7 +80,7 @@ class ParquetSnapshotCatalog:
             prev = self.read(df.sparkSession, table)
             df = prev.unionByName(df)
         df.write.mode("overwrite").parquet(str(data_dir))
-        rows = df.sparkSession.read.parquet(str(data_dir)).count()
+        rows = parquet_rows(data_dir)
         meta = {
             "snapshot_id": snap_id,
             "sequence": seq,

@@ -4,9 +4,19 @@ North rule: "every stage checkpoints per-partition lineage and metrics
 to Iceberg so runs resume mid-job". This sandbox has no Iceberg jars,
 so tables are Parquet directories with Iceberg-compatible layout
 (one directory per table, bucket-partitioned data files, plus an
-append-only `_lineage` parquet log). Swapping the `_write`/`_read`
-pair for `.writeTo(catalog.table)` / `spark.table` is the only change
-needed on a real cluster (documented in README).
+append-only `_lineage` parquet log).
+
+All commit bookkeeping runs on the driver, with no Spark job: a
+bucket's committed rows are summed from its parquet footers
+(``catalog.parquet_rows``), and its lineage row is one pyarrow file
+written hidden and renamed into place, so a reader sees the whole
+commit or none of it. Resume reads the visible lineage files with
+pyarrow too. Only the bucket data itself is a Spark write. On Iceberg
+a bucket's commit is one ``writeTo(table).append()`` snapshot that
+carries the bucket as a ``snapshot-property.bucket`` write option; the
+snapshot summary's ``added-records`` replaces the footer count, and
+resume reads the committed buckets from the snapshot log instead of
+the lineage files.
 
 Resume model: a stage's input is split into ``n_buckets`` deterministic
 buckets (hash of a stable key — e.g. url — so bucket membership is
@@ -19,19 +29,27 @@ granularity) keeps the contract stable under repartitioning/AQE.
 
 from __future__ import annotations
 
-import json
-import warnings
 import time
 import uuid
+import warnings
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from geo_index_spark.pipeline.catalog import parquet_files, parquet_rows
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, bucket int, status string, rows long,"
     " started double, finished double, attempt int"
+)
+# the same schema as the arrow types the driver writes
+_ARROW_TYPES = {"string": pa.string(), "int": pa.int32(), "long": pa.int64(), "double": pa.float64()}
+_LINEAGE_ARROW = pa.schema(
+    [(name, _ARROW_TYPES[t]) for name, t in (f.split() for f in LINEAGE_SCHEMA.split(","))]
 )
 
 
@@ -59,44 +77,52 @@ class CheckpointedPipeline:
 
     def _committed_buckets(self, stage: str) -> set[int]:
         d = self._lineage_dir(stage)
-        if not any(d.glob("*.parquet")):
-            return set()
-        # a crash DURING a lineage commit can leave a torn parquet file;
-        # resume semantics only need the commits that finished, so skip
-        # unreadable files instead of failing the whole resume (the torn
-        # bucket simply isn't COMMITTED and reruns — round-5 verdict #8)
-        df = self.spark.read.option("ignoreCorruptFiles", "true").parquet(str(d))
-        rows = (
-            df.filter(F.col("status") == "COMMITTED")
-            .select("bucket")
-            .distinct()
-            .collect()
-        )
-        # ignoreCorruptFiles would also silently drop a COMMITTED entry
-        # whose file corrupted AFTER the fact (idempotent rerun, so safe
-        # — but persistent storage corruption must be observable, ADVICE
-        # r5): surface the readable-vs-on-disk delta instead of hiding it
-        n_disk = len(list(d.glob("*.parquet")))
-        n_readable = df.select(F.input_file_name()).distinct().count()
-        if n_readable < n_disk:
+        files = parquet_files(d)
+        done: set[int] = set()
+        torn = 0
+        for f in files:
+            # a torn lineage file (storage corruption, or a crash in a
+            # log written before commits were renamed into place) is
+            # skipped, not fatal: resume only needs the commits that
+            # finished, and the torn bucket simply isn't COMMITTED and
+            # reruns (round-5 verdict #8)
+            try:
+                t = pq.read_table(f, columns=["bucket", "status"])
+            except (OSError, pa.ArrowException):
+                torn += 1
+                continue
+            done.update(
+                b
+                for b, s in zip(t["bucket"].to_pylist(), t["status"].to_pylist())
+                if s == "COMMITTED"
+            )
+        # skipping would also silently drop a COMMITTED entry whose file
+        # corrupted AFTER the fact (idempotent rerun, so safe — but
+        # persistent storage corruption must be observable, ADVICE r5)
+        if torn:
             warnings.warn(
-                f"checkpoint lineage {d}: {n_disk - n_readable} of {n_disk} "
+                f"checkpoint lineage {d}: {torn} of {len(files)} "
                 "parquet files unreadable (skipped for resume; affected "
                 "buckets rerun idempotently). Repeated corruption here "
                 "means the storage layer needs attention.",
                 stacklevel=2,
             )
-        return {r.bucket for r in rows}
+        return done
 
     def _log(self, stage: str, bucket: int, status: str, rows: int, t0: float, attempt: int):
         d = self._lineage_dir(stage)
         d.mkdir(parents=True, exist_ok=True)
-        rec = [(self.run_id, stage, bucket, status, rows, t0, time.time(), attempt)]
-        # one tiny parquet file per commit — append-only, atomic enough
-        # for resume semantics (a partial write simply isn't COMMITTED)
-        self.spark.createDataFrame(rec, LINEAGE_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(d))
+        rec = dict(
+            run_id=self.run_id, stage=stage, bucket=bucket, status=status,
+            rows=rows, started=t0, finished=time.time(), attempt=attempt,
+        )
+        # one tiny parquet file per commit, append-only; it is written
+        # hidden (readers skip dot files) and renamed into place, so a
+        # crash mid-write leaves no visible file and the bucket reruns
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = d / f".{name}.tmp"
+        pq.write_table(pa.Table.from_pylist([rec], _LINEAGE_ARROW), tmp)
+        tmp.rename(d / name)  # atomic commit point
 
     # -- stage runner ----------------------------------------------------------
 
@@ -124,8 +150,8 @@ class CheckpointedPipeline:
             part = bucketed.filter(F.col("_bucket") == b).drop("_bucket")
             out = transform(part)
             attempt = 1
-            (out.write.mode("overwrite").parquet(str(out_dir / f"bucket={b}")))
-            rows = self.spark.read.parquet(str(out_dir / f"bucket={b}")).count()
+            out.write.mode("overwrite").parquet(str(out_dir / f"bucket={b}"))
+            rows = parquet_rows(out_dir / f"bucket={b}")
             self._log(stage, b, "COMMITTED", rows, t0, attempt)
             run += 1
             written += rows

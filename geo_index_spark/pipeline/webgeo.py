@@ -17,7 +17,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from geo_index_spark.operators.localbuild import build_partition_indexes
+from geo_index_spark.operators.localbuild import index_partitions
 from geo_index_spark.operators.partitioning import hilbert_partition
 from geo_index_spark.operators.tiling import quad_cell_col
 from geo_index_spark.pipeline.catalog import ParquetSnapshotCatalog
@@ -71,33 +71,35 @@ def run_webgeo_pipeline(
     cp.run_stage("extract", pages, extract, bucket_key="url")
     extracted = cp.read_stage("extract")
 
-    # stage 2: geotagged points, Hilbert-clustered, committed as snapshot
+    # stage 2: geotagged points, Hilbert-clustered once and committed as
+    # a snapshot; stages 3 and 4 read the same cached clustering
     pts = extracted.filter(F.col("x").isNotNull() & F.col("y").isNotNull()).select(
         F.xxhash64("url").alias("row_id"), "url", "x", "y"
     )
-    clustered = hilbert_partition(pts, num_partitions, cols=("x", "y"))
-    snap_pts = cat.write(clustered, "points")
+    clustered = hilbert_partition(pts, num_partitions, cols=("x", "y")).persist()
+    try:
+        snap_pts = cat.write(clustered, "points")
 
-    # stage 3: per-partition packed indexes (index-as-buffer table)
-    pts_back = cat.read(spark, "points")
-    idx = build_partition_indexes(
-        pts_back.select("row_id", "x", "y"), num_partitions, cols=("x", "y")
-    )
-    cat.write(idx, "point_index")
+        # stage 3: one packed index per Hilbert partition of the snapshot
+        # (index-as-buffer table), with no second bounds pass or shuffle
+        idx = index_partitions(clustered.select("row_id", "x", "y"), cols=("x", "y"))
+        cat.write(idx, "point_index")
 
-    # stage 4: tile rollup snapshot
-    tiles = (
-        pts_back.groupBy(
-            quad_cell_col(F.col("x"), F.col("y"), tile_level).alias("cell_id")
+        # stage 4: tile rollup snapshot
+        tiles = (
+            clustered.groupBy(
+                quad_cell_col(F.col("x"), F.col("y"), tile_level).alias("cell_id")
+            )
+            .agg(F.count(F.lit(1)).alias("n_pages"))
         )
-        .agg(F.count(F.lit(1)).alias("n_pages"))
-    )
-    snap_tiles = cat.write(tiles, "tiles")
+        snap_tiles = cat.write(tiles, "tiles")
+    finally:
+        clustered.unpersist()
 
     return PipelineResult(
         pages=pages.count(),
-        points=pts_back.count(),
+        points=cat.snapshots("points")[-1]["rows"],
         points_snapshot=snap_pts,
-        index_partitions=cat.read(spark, "point_index").count(),
+        index_partitions=cat.snapshots("point_index")[-1]["rows"],
         tile_snapshot=snap_tiles,
     )

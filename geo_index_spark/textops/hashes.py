@@ -35,10 +35,6 @@ def h32_col(s: Column) -> Column:
     return F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long")
 
 
-def hp_col(s: Column) -> Column:
-    return h32_col(s) % F.lit(P)
-
-
 def h32_sql(expr: str) -> str:
     """DuckDB H32 of a SQL expression."""
     return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
