@@ -426,14 +426,15 @@ def _box_cells(boxes, lox: float, loy: float, cell: float, nc: int):
 
 def _pair_dist_col(metric: str) -> Column:
     """Distance between left (px, py) and right (qx, qy) columns — the
-    one expression every knn_join path emits and ranks by."""
+    one expression every knn_join path emits and ranks by. The
+    euclidean one is parsed from SQL: built from Column operators it
+    took ~170 py4j calls, a third of a one-left knn_partition_indexes
+    plan; the parsed tree is the same."""
     from geo_index_spark.operators.join import haversine_pair_col
 
     if metric == "haversine":
         return haversine_pair_col(F.col("px"), F.col("py"), F.col("qx"), F.col("qy"))
-    dx = F.col("px") - F.col("qx")
-    dy = F.col("py") - F.col("qy")
-    return F.sqrt(dx * dx + dy * dy)
+    return F.expr("sqrt((px - qx) * (px - qx) + (py - qy) * (py - qy))")
 
 
 def _knn_candidates(
@@ -556,132 +557,40 @@ def _knn_probe(
     t0: float,
 ) -> DataFrame:
     """Exact kNN of driver-resident lefts (``lid, px, py``, Spark schema
-    ``lschema``) over ``rpts`` (``rid, qx, qy``), one pass per chunk —
-    geo-index's partition boxes plus a best-first ``neighbors`` per tree
-    (src/rtree/trait.rs:238-302). The rights are Hilbert-range
-    partitioned into ``n_slices`` slices (knn_join passes
-    ``spark.sql.shuffle.partitions``) and checkpointed; the driver
-    collects each slice's box and count and runs the exact partition
-    prune of :func:`~geo_index_spark.operators.localbuild.partition_prune`
-    for every left. The lefts ride broadcasts of at most
-    ``CERT_UPFRONT_MAX_LEFTS`` lefts each, with each slice's left list;
-    every chunk is one ``mapInArrow`` over the same slices.
-    Each slice task builds one Flatbush and returns, per listed left,
-    every right within the slice's kth Flatbush distance grown by the
-    numpy/Catalyst headroom — not a box search, whose box around a far
-    slice's kth distance holds most of the slice — so ties at the kth
-    distance and last-bit differences stay in. The emitted ``dist`` is
-    the Catalyst expression of the candidate join (Flatbush ranks by
-    ``np.hypot``, which differs in the last bit), and one ``row_number``
-    per left by (dist, right_id) over every chunk keeps the top k. One
-    ``probe`` record (:func:`_record`, since ``t0``) gives the lefts,
-    chunks, slices, rights indexed and mean slices kept per left."""
-    import pyarrow as pa
+    ``lschema``) over ``rpts`` (``rid, qx, qy``): the rights become
+    ``n_slices`` Hilbert slices of one flatbush blob each (knn_join
+    passes ``spark.sql.shuffle.partitions``), checkpointed; the one kNN
+    probe of :mod:`~geo_index_spark.operators.localbuild` yields the
+    candidate pairs; one ``row_number`` per left by (dist, right_id)
+    keeps the top k. Integral right ids pass through the int64 blob ids
+    and are cast back; other types index a long surrogate, mapped back
+    before the ranking. Logs one ``probe`` record (:func:`_record`)."""
     from pyspark.sql import Window
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import IntegralType, StructType
 
-    from geo_index_spark.localindex.flatbush import Flatbush
-    from geo_index_spark.operators.localbuild import grow, partition_prune
-    from geo_index_spark.operators.partitioning import hilbert_partition
+    from geo_index_spark.operators.localbuild import build_partition_indexes, knn_probe
 
-    spark = rpts.sparkSession
-    slices = (
-        hilbert_partition(rpts, n_slices, bounds=bounds, cols=("qx", "qy"))
-        .select("rid", "qx", "qy", F.spark_partition_id().alias("_s"))
-        .localCheckpoint()
-    )
-    stats = (
-        slices.groupBy("_s")
-        .agg(F.min("qx"), F.min("qy"), F.max("qx"), F.max("qy"), F.count(F.lit(1)))
-        .collect()
-    )
-    boxes = np.array([r[1:5] for r in stats], np.float64)
-    counts = np.array([r[5] for r in stats], np.int64)
-    px = lefts["px"].to_numpy(np.float64)
-    py = lefts["py"].to_numpy(np.float64)
-    lt = pa.Table.from_pandas(lefts[["lid", "px", "py"]], preserve_index=False)
-    cap = None if max_distance is None else float(grow(max_distance))
-    names = ("left_id", "px", "py", "right_id", "qx", "qy")
-    fields = [lschema[c] for c in ("lid", "px", "py")] + [
-        rpts.schema[c] for c in ("rid", "qx", "qy")
-    ]
-    schema = StructType([StructField(n, f.dataType) for n, f in zip(names, fields)])
-
-    def probe_fn(bc):  # binds each chunk's broadcast: the plans run after the loop
-        def probe(batches):
-            batches = list(batches)
-            if not batches:
-                return
-            lt_, sel_ = bc.value
-            lx = lt_.column("px").to_numpy()
-            ly = lt_.column("py").to_numpy()
-            tbl = pa.Table.from_batches(batches)
-            s_all = tbl.column("_s").to_numpy()
-            for s in np.unique(s_all):
-                part = tbl.filter(pa.array(s_all == s))
-                x = part.column("qx").to_numpy().astype(np.float64)
-                y = part.column("qy").to_numpy().astype(np.float64)
-                fb = Flatbush(np.stack([x, y, x, y], axis=1))
-                li: list[np.ndarray] = []
-                ri: list[np.ndarray] = []
-                for i in sel_.get(int(s), ()):
-                    ids, d = fb.neighbors(
-                        lx[i], ly[i], max_results=k + 1, max_distance=cap, metric=metric
-                    )
-                    if len(ids) > k:
-                        # a (k+1)th right inside the grown kth distance: fetch
-                        # every right within it (ties), else the first k
-                        b = float(grow(d[k - 1]))
-                        ids = ids[:k] if d[k] > b else fb.neighbors(
-                            lx[i], ly[i], max_distance=b, metric=metric
-                        )[0]
-                    li.append(np.full(len(ids), i))
-                    ri.append(ids)
-                if li:
-                    left = lt_.take(np.concatenate(li))
-                    right = part.take(np.concatenate(ri))
-                    cols = [*left.columns, *(right.column(c) for c in ("rid", "qx", "qy"))]
-                    yield pa.RecordBatch.from_arrays(
-                        [c.combine_chunks() for c in cols], names=list(names)
-                    )
-
-        return probe
-
-    pairs = None
-    n_kept = 0
-    starts = range(0, max(len(px), 1), CERT_UPFRONT_MAX_LEFTS)
-    for c0 in starts:
-        cx = px[c0 : c0 + CERT_UPFRONT_MAX_LEFTS]
-        cy = py[c0 : c0 + CERT_UPFRONT_MAX_LEFTS]
-        sel: dict[int, np.ndarray] = {}
-        if stats and len(cx):
-            keep = []
-            for i in range(0, len(cx), 4096):  # bounds the (lefts, slices) arrays
-                lb, radius = partition_prune(
-                    boxes, counts, cx[i : i + 4096], cy[i : i + 4096], k, metric, max_distance
-                )
-                keep.append(lb <= radius[:, None])
-            keep = np.concatenate(keep)
-            n_kept += int(keep.sum())
-            sel = {int(r[0]): np.flatnonzero(keep[:, j]) for j, r in enumerate(stats)}
-        bc = spark.sparkContext.broadcast((lt.slice(c0, CERT_UPFRONT_MAX_LEFTS), sel))
-        chunk = slices.mapInArrow(probe_fn(bc), schema)
-        pairs = chunk if pairs is None else pairs.unionAll(chunk)
-    _record(
-        "probe",
-        t0,
-        lefts=len(px),
-        chunks=len(starts),
-        slices=len(stats),
-        rights_indexed=int(counts.sum()),
-        mean_slices_per_left=round(n_kept / max(len(px), 1), 3),
-    )
-    scored = pairs.select("left_id", "right_id", _pair_dist_col(metric).alias("dist"))
-    if max_distance is not None:
-        scored = scored.filter(F.col("dist") <= F.lit(float(max_distance)))
+    rid_type = rpts.schema["rid"].dataType
+    src = rpts
+    if not isinstance(rid_type, IntegralType):
+        keyed = rpts.withColumn("_sid", F.monotonically_increasing_id()).localCheckpoint()
+        src = keyed.select(F.col("_sid").alias("rid"), "qx", "qy")
+    index = build_partition_indexes(
+        src, n_slices, cols=("qx", "qy"), id_col="rid", bounds=bounds
+    ).localCheckpoint()
+    lschema = StructType([lschema[c] for c in ("lid", "px", "py")])
+    pairs, stats = knn_probe(index, lefts, lschema, k, metric, max_distance)
+    _record("probe", t0, lefts=len(lefts), **stats)
+    if src is rpts:
+        pairs = pairs.withColumn("right_id", F.col("right_id").cast(rid_type))
+    else:
+        pairs = pairs.join(
+            keyed.select(F.col("_sid").alias("right_id"), "rid"), "right_id"
+        ).select("lid", F.col("rid").alias("right_id"), "dist")
     w = Window.partitionBy("left_id").orderBy(F.col("dist").asc(), F.col("right_id").asc())
     return (
-        scored.withColumn("rn", F.row_number().over(w))
+        pairs.select(F.col("lid").alias("left_id"), "right_id", "dist")
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= F.lit(int(k)))
         .drop("rn")
     )
@@ -716,12 +625,16 @@ def knn_join(
     Every left is answered by one of two executors, and the choice is
     the partition-or-not cost decision of *To Partition, or Not to
     Partition* (SIGMOD 2021) made explicit: a few lefts cannot amortize
-    a candidate join, many lefts can. :func:`_knn_probe` partitions and
-    indexes the rights once; each left probes a Flatbush in only the
-    slices the exact partition prune keeps, and a row_number per left
-    takes the top k — exact in one pass, no radius needed. A SMALL left
-    side (<= ``CERT_UPFRONT_MAX_LEFTS`` rows, found by one bounded LIMIT
-    probe before any density work) goes straight to it.
+    a candidate join, many lefts can. :func:`_knn_probe` indexes the
+    rights once as an index table of Hilbert slices and runs the
+    package's one kNN probe
+    (:func:`~geo_index_spark.operators.localbuild.knn_probe`): each
+    left searches the flatbush blob of only the slices the exact
+    partition prune keeps, and a row_number per left by (dist,
+    right_id) takes the top k — exact in one pass, ties included, no
+    radius needed. A SMALL left side (<= ``CERT_UPFRONT_MAX_LEFTS``
+    rows, found by one bounded LIMIT probe before the left bounds pass
+    and any density work) goes straight to it.
 
     A LARGE left side runs two fixed steps. (1) One density round, the
     Simba/Sedona candidate join in pure Catalyst: each left carries its
@@ -858,18 +771,34 @@ def knn_join(
         if n_right == 0:
             # k nearest of nothing is nothing — every left yields zero rows
             return _empty_result()
-        if bounds is None:
-            lagg = lpts.agg(
-                F.min("px"), F.min("py"), F.max("px"), F.max("py")
-            ).first()
-            if lagg[0] is None:  # empty left table
+    if init_radius is None:
+        # bounded probe instead of a full lpts.count() (ADVICE r5): a
+        # LIMIT of threshold+1 rows decides the branch, and when the
+        # left IS small the probe already holds every row. It runs
+        # before the left bounds pass: the index probe slices only the
+        # rights, so a small left side needs no left min/max.
+        probe_pdf = lpts.limit(CERT_UPFRONT_MAX_LEFTS + 1).toPandas()
+        if len(probe_pdf) <= CERT_UPFRONT_MAX_LEFTS:
+            # small left side: one exact index-probe pass — no density
+            # counts, no ring radii, no rounds
+            if probe_pdf.empty:
                 return _empty_result()
-            bounds = (
-                min(ragg[0], lagg[0]),
-                min(ragg[1], lagg[1]),
-                max(ragg[2], lagg[2]),
-                max(ragg[3], lagg[3]),
+            out = _knn_probe(
+                probe_pdf, lpts.schema, rpts, n_shuffle, bounds or tuple(ragg[:4]),
+                k, metric, max_distance, t0,
             )
+            rpts.unpersist(blocking=False)
+            return out
+    if bounds is None:
+        lagg = lpts.agg(F.min("px"), F.min("py"), F.max("px"), F.max("py")).first()
+        if lagg[0] is None:  # empty left table
+            return _empty_result()
+        bounds = (
+            min(ragg[0], lagg[0]),
+            min(ragg[1], lagg[1]),
+            max(ragg[2], lagg[2]),
+            max(ragg[3], lagg[3]),
+        )
     bounds = tuple(float(b) for b in bounds)
     ext = max(bounds[2] - bounds[0], bounds[3] - bounds[1], 1e-12)
 
@@ -916,172 +845,158 @@ def knn_join(
         P[pdf["ccx"].to_numpy() + 1, pdf["ccy"].to_numpy() + 1] = pdf["cnt"].to_numpy()
         return P.cumsum(axis=0).cumsum(axis=1)
 
-    # the index probe's arguments after (lefts, their schema, rights)
-    probe_args = (n_shuffle, bounds, k, metric, max_distance, t0)
     if init_radius is not None:
         r0 = F.lit(min(max(float(init_radius), r_floor), cover_r))
         remaining = lpts.select("lid", "px", "py", r0.alias("r"))
     else:
-        # bounded probe instead of a full lpts.count() (ADVICE r5): a
-        # LIMIT of threshold+1 rows decides the branch, and when the
-        # left IS small the probe already holds every row — reuse it
-        # and skip the second collect entirely.
-        probe_pdf = lpts.limit(CERT_UPFRONT_MAX_LEFTS + 1).toPandas()
-        if len(probe_pdf) <= CERT_UPFRONT_MAX_LEFTS:
-            # small left side: one exact index-probe pass — no density
-            # counts, no ring radii, no rounds
-            out = _knn_probe(probe_pdf, lpts.schema, rpts, *probe_args)
-            rpts.unpersist(blocking=False)
-            return out
-        else:
-            # per-cell right counts, materialized once (reused by the max
-            # agg AND the neighborhood dilation — one pass over right, and
-            # the table is bounded by 4^12 cells regardless of |right|)
-            C = C_df = _coarse_counts().localCheckpoint()
-            # ONE tiny job on checkpointed C serves both the max-count
-            # (densest-cell radius scale) and the dense-cell count that
-            # previously ran as a second job
-            crow = C.agg(
-                F.max("cnt").alias("mx"),
-                F.sum((F.col("cnt") >= 512).cast("long")).alias("nd"),
-            ).first()
-            mx = crow["mx"] or 1
-            n_dense = int(crow["nd"] or 0)
-            dense_r = cell_d * math.sqrt(float(k) / max(float(mx), 1.0)) * unit
-            # 3x3-neighborhood sum: dilate C by the 9 offsets, re-aggregate,
-            # then each left looks up its OWN cell — lefts stay un-exploded
-            offs = F.array(
-                *[
-                    F.struct(
-                        (F.col("ccx") + F.lit(dx)).alias("ncx"),
-                        (F.col("ccy") + F.lit(dy)).alias("ncy"),
-                    )
-                    for dx in (-1, 0, 1)
-                    for dy in (-1, 0, 1)
-                ]
-            )
-            N = (
-                C.select("cnt", F.explode(offs).alias("_o"))
-                .groupBy(F.col("_o.ncx").alias("ncx"), F.col("_o.ncy").alias("ncy"))
-                .agg(F.sum("cnt").alias("S"))
-            )
-            if nc_d <= 1024:
-                # <= (1026)^2 dilated cells = a few MB — broadcast so the
-                # per-left density lookup below never shuffles the lefts
-                # (the planner has no row estimate for a post-explode
-                # aggregate and falls back to a sort-merge join)
-                N = F.broadcast(N)
-            # FINE refinement: the coarse estimate dilutes clusters much
-            # smaller than a coarse cell (a 0.2-degree city inside a
-            # 1.4-degree cell reads ~20x too sparse -> radii ~20x too big ->
-            # ~400x candidate blow-up, measured). A second count at the
-            # fine level sized for the densest region fixes exactly that
-            # case: when the left's OWN fine cell holds enough points the
-            # fine-scale estimate wins; otherwise the dilated coarse
-            # neighborhood estimate stands.
-            f_level = choose_grid_level(bounds, 2 * dense_r / unit, 2 * dense_r / unit)
-            nc_f = 1 << f_level
-            cell_f = ext / nc_f
-            _fine_cell = _grid_cell(nc_f, cell_f)
-
-            # only DENSE coarse cells feed the fine count: elsewhere the
-            # fine grid (sized for the densest region) holds ~0-1 points
-            # per cell, and aggregating those would shuffle one near-
-            # singleton group per right row (~13M groups at 64M, measured
-            # as the dominant pre-loop cost and a poorly-scaling one). A
-            # coarse cell averaging 64 rows by construction, 512+ marks a
-            # genuine cluster; the mildly-dense cells this skips lose only
-            # a mildly-diluted coarse estimate (a few more survivors for
-            # the probe at worst).
-            dense_cells = C.filter(F.col("cnt") >= 512).select("ccx", "ccy")
-            if n_dense <= 500_000:
-                dense_cells = F.broadcast(dense_cells)
-            Cf = None
-            # the fine count is a density HINT only (radius sizing —
-            # certification never reads it), so at large |right| an
-            # eighth-rate deterministic sample with counts scaled back
-            # up gives the same radii to within a few percent while the
-            # fine-count aggregation hashes 8x fewer rows (the dense
-            # regions are >= 512 rows/coarse cell by construction, so a
-            # trusted fine cell still samples >= ~100 rows). Small
-            # rights keep exact counts — fixture-scale estimates would
-            # otherwise be noise.
-            cf_rate = 0.125 if n_right >= 4_000_000 else 1.0
-            cf_src = rpts if cf_rate >= 1.0 else rpts.sample(
-                fraction=cf_rate, seed=7
-            )
-            _record(
-                "density_grid",
-                t0,
-                n_right=n_right,
-                level=gd,
-                cell=cell_d,
-                max_cell_rights=mx,
-                dense_cells=n_dense,
-                dense_r=dense_r,
-                fine_level=f_level,
-                fine_sample=cf_rate,
-            )
-            if n_dense:  # no dense cells -> skip the fine pass entirely
-                Cf = (
-                    cf_src.join(
-                        dense_cells,
-                        (_coarse_cell(F.col("qx"), bounds[0]) == F.col("ccx"))
-                        & (_coarse_cell(F.col("qy"), bounds[1]) == F.col("ccy")),
-                        "left_semi",
-                    )
-                    .groupBy(
-                        (
-                            _fine_cell(F.col("qx"), bounds[0]) * F.lit(nc_f)
-                            + _fine_cell(F.col("qy"), bounds[1])
-                        ).alias("fcell")
-                    )
-                    .agg((F.count(F.lit(1)) / F.lit(cf_rate)).alias("fcnt"))
+        # per-cell right counts, materialized once (reused by the max
+        # agg AND the neighborhood dilation — one pass over right, and
+        # the table is bounded by 4^12 cells regardless of |right|)
+        C = C_df = _coarse_counts().localCheckpoint()
+        # ONE tiny job on checkpointed C serves both the max-count
+        # (densest-cell radius scale) and the dense-cell count that
+        # previously ran as a second job
+        crow = C.agg(
+            F.max("cnt").alias("mx"),
+            F.sum((F.col("cnt") >= 512).cast("long")).alias("nd"),
+        ).first()
+        mx = crow["mx"] or 1
+        n_dense = int(crow["nd"] or 0)
+        dense_r = cell_d * math.sqrt(float(k) / max(float(mx), 1.0)) * unit
+        # 3x3-neighborhood sum: dilate C by the 9 offsets, re-aggregate,
+        # then each left looks up its OWN cell — lefts stay un-exploded
+        offs = F.array(
+            *[
+                F.struct(
+                    (F.col("ccx") + F.lit(dx)).alias("ncx"),
+                    (F.col("ccy") + F.lit(dy)).alias("ncy"),
                 )
-            lcell = lpts.select(
-                "lid",
-                "px",
-                "py",
-                _coarse_cell(F.col("px"), bounds[0]).alias("_lcx"),
-                _coarse_cell(F.col("py"), bounds[1]).alias("_lcy"),
-                (
-                    _fine_cell(F.col("px"), bounds[0]) * F.lit(nc_f)
-                    + _fine_cell(F.col("py"), bounds[1])
-                ).alias("_lfc"),
+                for dx in (-1, 0, 1)
+                for dy in (-1, 0, 1)
+            ]
+        )
+        N = (
+            C.select("cnt", F.explode(offs).alias("_o"))
+            .groupBy(F.col("_o.ncx").alias("ncx"), F.col("_o.ncy").alias("ncy"))
+            .agg(F.sum("cnt").alias("S"))
+        )
+        if nc_d <= 1024:
+            # <= (1026)^2 dilated cells = a few MB — broadcast so the
+            # per-left density lookup below never shuffles the lefts
+            # (the planner has no row estimate for a post-explode
+            # aggregate and falls back to a sort-merge join)
+            N = F.broadcast(N)
+        # FINE refinement: the coarse estimate dilutes clusters much
+        # smaller than a coarse cell (a 0.2-degree city inside a
+        # 1.4-degree cell reads ~20x too sparse -> radii ~20x too big ->
+        # ~400x candidate blow-up, measured). A second count at the
+        # fine level sized for the densest region fixes exactly that
+        # case: when the left's OWN fine cell holds enough points the
+        # fine-scale estimate wins; otherwise the dilated coarse
+        # neighborhood estimate stands.
+        f_level = choose_grid_level(bounds, 2 * dense_r / unit, 2 * dense_r / unit)
+        nc_f = 1 << f_level
+        cell_f = ext / nc_f
+        _fine_cell = _grid_cell(nc_f, cell_f)
+
+        # only DENSE coarse cells feed the fine count: elsewhere the
+        # fine grid (sized for the densest region) holds ~0-1 points
+        # per cell, and aggregating those would shuffle one near-
+        # singleton group per right row (~13M groups at 64M, measured
+        # as the dominant pre-loop cost and a poorly-scaling one). A
+        # coarse cell averaging 64 rows by construction, 512+ marks a
+        # genuine cluster; the mildly-dense cells this skips lose only
+        # a mildly-diluted coarse estimate (a few more survivors for
+        # the probe at worst).
+        dense_cells = C.filter(F.col("cnt") >= 512).select("ccx", "ccy")
+        if n_dense <= 500_000:
+            dense_cells = F.broadcast(dense_cells)
+        Cf = None
+        # the fine count is a density HINT only (radius sizing —
+        # certification never reads it), so at large |right| an
+        # eighth-rate deterministic sample with counts scaled back
+        # up gives the same radii to within a few percent while the
+        # fine-count aggregation hashes 8x fewer rows (the dense
+        # regions are >= 512 rows/coarse cell by construction, so a
+        # trusted fine cell still samples >= ~100 rows). Small
+        # rights keep exact counts — fixture-scale estimates would
+        # otherwise be noise.
+        cf_rate = 0.125 if n_right >= 4_000_000 else 1.0
+        cf_src = rpts if cf_rate >= 1.0 else rpts.sample(
+            fraction=cf_rate, seed=7
+        )
+        _record(
+            "density_grid",
+            t0,
+            n_right=n_right,
+            level=gd,
+            cell=cell_d,
+            max_cell_rights=mx,
+            dense_cells=n_dense,
+            dense_r=dense_r,
+            fine_level=f_level,
+            fine_sample=cf_rate,
+        )
+        if n_dense:  # no dense cells -> skip the fine pass entirely
+            Cf = (
+                cf_src.join(
+                    dense_cells,
+                    (_coarse_cell(F.col("qx"), bounds[0]) == F.col("ccx"))
+                    & (_coarse_cell(F.col("qy"), bounds[1]) == F.col("ccy")),
+                    "left_semi",
+                )
+                .groupBy(
+                    (
+                        _fine_cell(F.col("qx"), bounds[0]) * F.lit(nc_f)
+                        + _fine_cell(F.col("qy"), bounds[1])
+                    ).alias("fcell")
+                )
+                .agg((F.count(F.lit(1)) / F.lit(cf_rate)).alias("fcnt"))
             )
-            joined = lcell.join(
-                N,
-                (F.col("_lcx") == F.col("ncx")) & (F.col("_lcy") == F.col("ncy")),
-                "left",
-            )
-            if Cf is not None:
-                joined = joined.join(Cf, F.col("_lfc") == F.col("fcell"), "left")
-            else:
-                joined = joined.withColumn("fcnt", F.lit(None).cast("long"))
-            # sizing math (Poisson): a radius r has expected ball count
-            # m = rho*pi*r^2; certifying needs >= k in the ball, so aim for
-            # m ~ pi*k (P(<k) < 1% at k=3) while keeping box candidates
-            # (4/pi*m per left) small. fine: r = cell_f*sqrt(3k/S_f) gives
-            # m = 3*pi*k (~28 at k=3, certifies, ~36 candidates/left).
-            # coarse (S = 3x3 neighborhood sum, rho = S/(9*cell^2)):
-            # r = cell*sqrt(9k/S) gives m = pi*k — the earlier sqrt(3k/S)
-            # read m = pi*k/3 ~ 3 and FAILED ~60% of uniform lefts.
-            s = F.coalesce(F.col("S"), F.lit(0)).cast("double")
-            sf = F.coalesce(F.col("fcnt"), F.lit(0)).cast("double")
-            three_k = F.lit(3.0 * float(k))
-            r0_coarse = F.lit(cell_d) * F.least(
-                F.lit(1.0), F.sqrt(F.lit(9.0 * float(k)) / F.greatest(s, F.lit(1.0)))
-            )
-            # trust the fine cell only from 9k points up: cells in the
-            # 3k..9k band are mostly cluster EDGES, where the cell's count
-            # is real but the left's k-th neighbor lies outside the cluster
-            # — the tiny fine radius then fails the density round (measured)
-            r0_fine = F.lit(cell_f) * F.sqrt(three_k / sf)
-            r0 = F.when(
-                sf >= F.lit(9.0 * float(k)), F.least(r0_fine, r0_coarse)
-            ).otherwise(r0_coarse)
-            r0 = F.least(F.greatest(r0 * F.lit(unit), F.lit(r_floor)), F.lit(cover_r))
-            remaining = joined.select("lid", "px", "py", r0.alias("r"))
+        lcell = lpts.select(
+            "lid",
+            "px",
+            "py",
+            _coarse_cell(F.col("px"), bounds[0]).alias("_lcx"),
+            _coarse_cell(F.col("py"), bounds[1]).alias("_lcy"),
+            (
+                _fine_cell(F.col("px"), bounds[0]) * F.lit(nc_f)
+                + _fine_cell(F.col("py"), bounds[1])
+            ).alias("_lfc"),
+        )
+        joined = lcell.join(
+            N,
+            (F.col("_lcx") == F.col("ncx")) & (F.col("_lcy") == F.col("ncy")),
+            "left",
+        )
+        if Cf is not None:
+            joined = joined.join(Cf, F.col("_lfc") == F.col("fcell"), "left")
+        else:
+            joined = joined.withColumn("fcnt", F.lit(None).cast("long"))
+        # sizing math (Poisson): a radius r has expected ball count
+        # m = rho*pi*r^2; certifying needs >= k in the ball, so aim for
+        # m ~ pi*k (P(<k) < 1% at k=3) while keeping box candidates
+        # (4/pi*m per left) small. fine: r = cell_f*sqrt(3k/S_f) gives
+        # m = 3*pi*k (~28 at k=3, certifies, ~36 candidates/left).
+        # coarse (S = 3x3 neighborhood sum, rho = S/(9*cell^2)):
+        # r = cell*sqrt(9k/S) gives m = pi*k — the earlier sqrt(3k/S)
+        # read m = pi*k/3 ~ 3 and FAILED ~60% of uniform lefts.
+        s = F.coalesce(F.col("S"), F.lit(0)).cast("double")
+        sf = F.coalesce(F.col("fcnt"), F.lit(0)).cast("double")
+        three_k = F.lit(3.0 * float(k))
+        r0_coarse = F.lit(cell_d) * F.least(
+            F.lit(1.0), F.sqrt(F.lit(9.0 * float(k)) / F.greatest(s, F.lit(1.0)))
+        )
+        # trust the fine cell only from 9k points up: cells in the
+        # 3k..9k band are mostly cluster EDGES, where the cell's count
+        # is real but the left's k-th neighbor lies outside the cluster
+        # — the tiny fine radius then fails the density round (measured)
+        r0_fine = F.lit(cell_f) * F.sqrt(three_k / sf)
+        r0 = F.when(
+            sf >= F.lit(9.0 * float(k)), F.least(r0_fine, r0_coarse)
+        ).otherwise(r0_coarse)
+        r0 = F.least(F.greatest(r0 * F.lit(unit), F.lit(r_floor)), F.lit(cover_r))
+        remaining = joined.select("lid", "px", "py", r0.alias("r"))
     # lazy checkpoint: the bucket-stats job below materializes it, so
     # init costs ONE barrier (checkpoint+stats fused), not two.
     # The skinny (lid, px, py, r) frame is coalesced to the scheduler's
@@ -1251,7 +1166,11 @@ def knn_join(
                 rpts_src = rpts.join(
                     F.broadcast(cells_df), ccell == F.col("ccell"), "left_semi"
                 )
-            out = out.unionAll(_knn_probe(tail, lpts.schema, rpts_src, *probe_args))
+            out = out.unionAll(
+                _knn_probe(
+                    tail, lpts.schema, rpts_src, n_shuffle, bounds, k, metric, max_distance, t0
+                )
+            )
     finally:
         rpts.unpersist(blocking=False)
     return out

@@ -14,6 +14,9 @@ Query path: prune blob rows by their partition bbox (a Catalyst filter
 over the tiny index table — the analogue of root-level pruning), then
 probe the surviving trees vectorized. At 100 TB the index table has
 ~1e5 rows of ~MB blobs: queries touch only overlapping partitions.
+:func:`knn_probe` is the package's one kNN probe over such a table:
+``knn_join`` indexes its rights with it, :func:`knn_partition_indexes`
+is its one-left call; both rank by (dist, row id), ties included.
 """
 
 from __future__ import annotations
@@ -21,8 +24,10 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from geo_index_spark.localindex.flatbush import (
     DEFAULT_NODE_SIZE,
@@ -32,6 +37,7 @@ from geo_index_spark.localindex.flatbush import (
 )
 from geo_index_spark.localindex.kdbush import KDBush
 from geo_index_spark.operators.partitioning import hilbert_partition
+from geo_index_spark.operators.search import bbox_search
 
 INDEX_SCHEMA = (
     "num_items long, minx double, miny double, maxx double, maxy double,"
@@ -201,6 +207,22 @@ def index_partitions(
     return df.select(id_col, *cols).mapInArrow(build, INDEX_SCHEMA)
 
 
+def _leaf_points(fb: Flatbush, idx: np.ndarray, caller: str) -> tuple[np.ndarray, np.ndarray]:
+    """(x, y) of items ``idx`` (insertion indexes) of a flatbush point
+    blob, read from its leaf nodes, which hold the items' exact boxes in
+    sort order; a blob over real boxes (minx != maxx) raises."""
+    n = fb.num_items
+    pos = np.empty(n, dtype=np.int64)
+    pos[fb.indices[:n]] = np.arange(n)
+    lb = fb.nodes[pos[idx]]
+    if (lb[:, 0] != lb[:, 2]).any() or (lb[:, 1] != lb[:, 3]).any():
+        raise ValueError(
+            f"{caller} requires point-mode blobs (cols=(x, y)); this flatbush "
+            "blob holds real boxes"
+        )
+    return lb[:, 0], lb[:, 1]
+
+
 def _probe_blob_bbox(tree: bytes, min_x, min_y, max_x, max_y) -> np.ndarray:
     """Inclusive bbox probe of one serialized blob, dispatched on the
     magic byte: 0xfb -> flatbush search, 0xdb -> kdbush range."""
@@ -220,8 +242,6 @@ def search_partition_indexes(
     pruning first (the exchange-free root level), then vectorized local
     tree searches (flatbush or kdbush, by blob magic). Returns row_id
     rows (set contract, Q1/Q7)."""
-    from geo_index_spark.operators.search import bbox_search
-
     pruned = bbox_search(index_df, min_x, min_y, max_x, max_y)
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -268,22 +288,8 @@ def within_partition_indexes(
                     fb = Flatbush.from_bytes(tree)
                     idx = fb.search(qx - r, qy - r, qx + r, qy + r)
                     if idx.size:
-                        # leaf nodes hold boxes in sort order; invert the
-                        # insertion-index permutation to look them up
-                        n = fb.num_items
-                        pos = np.empty(n, dtype=np.int64)
-                        pos[fb.indices[:n]] = np.arange(n)
-                        lb = fb.nodes[pos[idx]]
-                        if (lb[:, 0] != lb[:, 2]).any() or (lb[:, 1] != lb[:, 3]).any():
-                            raise ValueError(
-                                "within_partition_indexes requires point-mode "
-                                "blobs (cols=(x, y)); this flatbush blob holds "
-                                "real boxes — point-distance refine would "
-                                "silently compute center-within-r"
-                            )
-                        cx = (lb[:, 0] + lb[:, 2]) / 2.0
-                        cy = (lb[:, 1] + lb[:, 3]) / 2.0
-                        idx = idx[(cx - qx) ** 2 + (cy - qy) ** 2 <= r * r]
+                        x, y = _leaf_points(fb, idx, "within_partition_indexes")
+                        idx = idx[(x - qx) ** 2 + (y - qy) ** 2 <= r * r]
                 if idx.size:
                     hits.append(np.frombuffer(ids, dtype=np.int64)[idx])
             out = np.concatenate(hits) if hits else np.empty(0, np.int64)
@@ -342,18 +348,9 @@ def within_geo_partition_indexes(
             c = kd.coords[pos[idx]]
             return idx, c[:, 0], c[:, 1]
         fb = Flatbush.from_bytes(tree)
-        n = fb.num_items
-        pos = np.empty(n, dtype=np.int64)
-        pos[fb.indices[:n]] = np.arange(n)
         idx = [fb.search(lo, lat_lo, hi, lat_hi) for lo, hi in segs]
         idx = np.concatenate(idx) if idx else np.empty(0, np.int64)
-        lb = fb.nodes[pos[idx]]
-        if idx.size and ((lb[:, 0] != lb[:, 2]).any() or (lb[:, 1] != lb[:, 3]).any()):
-            raise ValueError(
-                "within_geo_partition_indexes requires point-mode blobs "
-                "(cols=(lon, lat)); this flatbush blob holds real boxes"
-            )
-        return idx, lb[:, 0], lb[:, 1]
+        return (idx, *_leaf_points(fb, idx, "within_geo_partition_indexes"))
 
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -372,71 +369,145 @@ def within_geo_partition_indexes(
     return pruned.mapInArrow(probe, "row_id long")
 
 
+def knn_probe(
+    index_df: DataFrame,
+    lefts: pd.DataFrame,
+    lschema: StructType,
+    k: int,
+    metric: str,
+    max_distance: float | None,
+) -> tuple[DataFrame, dict]:
+    """The package's one kNN probe, of driver-resident ``lefts`` (the
+    columns of ``lschema``; query points ``px``, ``py``) over an index
+    table of flatbush point blobs — geo-index's partition boxes plus one
+    best-first ``neighbors`` per tree (src/rtree/trait.rs:238-302).
+
+    One narrow collect reads each row's count, box and blob magic (kd
+    blobs raise ``ValueError`` before any probe job), and the exact
+    :func:`partition_prune` gives each left its radius. The lefts ride
+    one ``mapInArrow`` per chunk of ``CERT_UPFRONT_MAX_LEFTS``; a
+    euclidean chunk first drops, in Catalyst, the rows outside the union
+    of its lefts' radius boxes. Each row probes the lefts whose radius
+    reaches its box: ``neighbors`` for k + 1 rights, and when the
+    (k+1)th lies within the kth distance grown by :func:`grow`, every
+    right within that distance — so ties at the kth distance stay in.
+    The right points come from the leaf nodes (exact f64 boxes), and
+    ``dist`` is the Catalyst expression ``knn._pair_dist_col``, capped
+    inclusively by ``max_distance``.
+
+    Returns ``(pairs, stats)``: ``pairs`` has the lefts' other columns,
+    ``right_id`` (the blobs' int64 ids) and ``dist``, a superset of each
+    left's top k for the caller to rank by (dist, right_id); ``stats``
+    the chunks, rows (slices), rights indexed and mean rows kept per left."""
+    from pyspark.sql import functions as F
+
+    from geo_index_spark.operators.knn import CERT_UPFRONT_MAX_LEFTS, _pair_dist_col
+
+    box = ["minx", "miny", "maxx", "maxy"]
+    rows = index_df.selectExpr("num_items", *box, "substring(tree, 1, 1) AS magic").collect()
+    if any(bytes(r.magic) != b"\xfb" for r in rows):
+        raise ValueError("the kNN probe reads flatbush blobs; this index holds kdbush blobs")
+    boxes = np.array([[r[c] for c in box] for r in rows], np.float64).reshape(-1, 4)
+    counts = np.array([r.num_items for r in rows], np.int64)
+    px = lefts["px"].to_numpy(np.float64)
+    py = lefts["py"].to_numpy(np.float64)
+    radius = np.full(len(px), np.inf)
+    n_kept = 0
+    for i in range(0, len(px) if rows else 0, 4096):  # bounds the (lefts, rows) arrays
+        lb, radius[i : i + 4096] = partition_prune(
+            boxes, counts, px[i : i + 4096], py[i : i + 4096], k, metric, max_distance
+        )
+        n_kept += int((lb <= radius[i : i + 4096, None]).sum())
+    lt = pa.Table.from_pandas(lefts[lschema.names], preserve_index=False)
+    cap = None if max_distance is None else float(grow(max_distance))
+    out_cols = [StructField("right_id", LongType())] + [StructField(c, DoubleType()) for c in ("qx", "qy")]
+
+    def probe_fn(lt_: pa.Table, rad: np.ndarray):  # binds one chunk: the plans run after the loop
+        lx = lt_.column("px").to_numpy().astype(np.float64)[:, None]
+        ly = lt_.column("py").to_numpy().astype(np.float64)[:, None]
+
+        def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+            for batch in batches:
+                d = batch.to_pydict()
+                b = np.column_stack([d[c] for c in box])
+                keep = _metric_block(lx, ly, b, metric) <= rad[:, None]  # partition_prune's rule
+                for j, (tree, ids) in enumerate(zip(d["tree"], d["ids"])):
+                    sel = np.flatnonzero(keep[:, j])
+                    if not sel.size:
+                        continue
+                    fb = Flatbush.from_bytes(tree)
+                    li: list[np.ndarray] = []
+                    ri: list[np.ndarray] = []
+                    for i in sel:
+                        got, dist = fb.neighbors(
+                            lx[i, 0], ly[i, 0], max_results=k + 1, max_distance=cap, metric=metric
+                        )
+                        if len(got) > k:
+                            # a (k+1)th right inside the grown kth distance:
+                            # fetch every right within it (ties), else the first k
+                            g = float(grow(dist[k - 1]))
+                            got = got[:k] if dist[k] > g else fb.neighbors(
+                                lx[i, 0], ly[i, 0], max_distance=g, metric=metric
+                            )[0]
+                        li.append(np.full(len(got), i))
+                        ri.append(got)
+                    ri_ = np.concatenate(ri)
+                    if ri_.size:
+                        left = lt_.take(np.concatenate(li))
+                        rid = np.frombuffer(ids, dtype=np.int64)[ri_]
+                        qx, qy = _leaf_points(fb, ri_, "the kNN probe")
+                        yield pa.RecordBatch.from_arrays(
+                            [*(c.combine_chunks() for c in left.columns), *map(pa.array, (rid, qx, qy))],
+                            names=[*lt_.column_names, "right_id", "qx", "qy"],
+                        )
+
+        return probe
+
+    pairs = None
+    starts = range(0, max(len(px), 1), CERT_UPFRONT_MAX_LEFTS)
+    for c0 in starts:
+        c = slice(c0, c0 + CERT_UPFRONT_MAX_LEFTS)
+        chunk, r = index_df, radius[c]
+        if metric == "euclidean" and len(r) and np.isfinite(r).all():
+            # the prune as one Catalyst box, so blobs no left of the chunk
+            # can use never leave the scan; padded by grow's headroom over
+            # rounding, the probe's own test above decides
+            lo = np.array([(px[c] - r).min(), (py[c] - r).min()])
+            hi = np.array([(px[c] + r).max(), (py[c] + r).max()])
+            pad = 1e-9 * float(np.abs(np.concatenate([lo, hi])).max())
+            chunk = bbox_search(chunk, *(lo - pad), *(hi + pad))
+        part = chunk.mapInArrow(
+            probe_fn(lt.slice(c0, CERT_UPFRONT_MAX_LEFTS), r), StructType(lschema.fields + out_cols)
+        )
+        pairs = part if pairs is None else pairs.unionAll(part)
+    keys = [c for c in lschema.names if c not in ("px", "py")]
+    out = pairs.select(*keys, "right_id", _pair_dist_col(metric).alias("dist"))
+    if max_distance is not None:
+        out = out.filter(F.col("dist") <= F.lit(float(max_distance)))
+    return out, {
+        "chunks": len(starts),
+        "slices": len(rows),
+        "rights_indexed": int(counts.sum()),
+        "mean_slices_per_left": round(n_kept / max(len(px), 1), 3),
+    }
+
+
 def knn_partition_indexes(
     index_df: DataFrame,
     qx: float,
     qy: float,
     k: int,
     metric: str = "euclidean",
-    prune: bool = True,
     max_distance: float | None = None,
 ) -> DataFrame:
-    """Two-phase kNN over the index table: prune partitions whose bbox
-    cannot contain a top-k answer, then per-partition best-first local
-    top-k inside mapInArrow, then the global TakeOrdered merge — the
-    reference heap search distributed (src/rtree/trait.rs:238-302).
-
-    ``max_distance`` prunes inclusively at every level, matching the
-    reference's ``neighbors`` (src/rtree/trait.rs:261): it caps the
-    partition-prune radius, the local heap search, and hence the merge.
-
-    Pruning (exact): sort partitions by lower-bound distance to their
-    bbox; take partitions until the cumulative item count reaches k;
-    the worst case for those is their max upper-bound distance
-    (farthest bbox corner); any partition with lower bound beyond that
-    cannot contribute. The index table is tiny (one row per partition),
-    so this is a driver-side collect of partition boxes only."""
-    from pyspark.sql import functions as F
-
-    radius = np.inf if max_distance is None else float(grow(max_distance))
-    if prune:
-        rows = index_df.select(
-            "num_items", "minx", "miny", "maxx", "maxy"
-        ).collect()
-        if rows:
-            b = np.array([[r.minx, r.miny, r.maxx, r.maxy] for r in rows])
-            cnt = np.array([r.num_items for r in rows])
-            radius = float(partition_prune(b, cnt, qx, qy, k, metric, max_distance)[1][0])
-    if metric == "euclidean" and np.isfinite(radius):
-        # the prune as a Catalyst predicate, so pruned blobs never leave
-        # the scan; haversine partitions are pruned in the probe below
-        index_df = index_df.filter(_lb_col(qx, qy) <= F.lit(radius))
-
-    def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            d = batch.to_pydict()
-            all_ids: list[np.ndarray] = []
-            all_d: list[np.ndarray] = []
-            boxes = np.column_stack([d[c] for c in ("minx", "miny", "maxx", "maxy")])
-            keep = _metric_block(qx, qy, boxes, metric) <= radius
-            for tree, ids, kept in zip(d["tree"], d["ids"], keep):
-                if not kept:
-                    continue
-                fb = Flatbush.from_bytes(tree)
-                lids, ldist = fb.neighbors(
-                    qx, qy, max_results=k, max_distance=max_distance, metric=metric
-                )
-                if lids.size:
-                    all_ids.append(np.frombuffer(ids, dtype=np.int64)[lids])
-                    all_d.append(ldist)
-            ids_out = np.concatenate(all_ids) if all_ids else np.empty(0, np.int64)
-            d_out = np.concatenate(all_d) if all_d else np.empty(0, np.float64)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "row_id": pa.array(ids_out, pa.int64()),
-                    "dist": pa.array(d_out, pa.float64()),
-                }
-            )
-
-    local = index_df.mapInArrow(probe, "row_id long, dist double")
-    return local.orderBy(F.col("dist").asc(), F.col("row_id").asc()).limit(int(k))
+    """The ``k`` nearest indexed points to (qx, qy) by (dist, row_id),
+    ties at the kth distance to the smaller row id as in ``knn.knn``:
+    the one-left call of :func:`knn_probe` over the caller's index table
+    (flatbush point blobs), then the global TakeOrdered merge.
+    ``max_distance`` prunes inclusively at every level, like the
+    reference's ``neighbors`` (src/rtree/trait.rs:261): the partition
+    prune, the local search and the merge."""
+    lefts = pd.DataFrame({"px": [float(qx)], "py": [float(qy)]})
+    lschema = StructType([StructField(c, DoubleType()) for c in ("px", "py")])
+    pairs, _ = knn_probe(index_df, lefts, lschema, k, metric, max_distance)
+    return pairs.withColumnRenamed("right_id", "row_id").orderBy("dist", "row_id").limit(int(k))

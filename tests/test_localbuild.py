@@ -79,33 +79,32 @@ def test_f64_box_to_f32_contains():
 
 
 def test_indexed_knn_pruned_matches_unpruned(spark):
+    """The partition-pruned indexed kNN over 6 blobs equals the
+    unpruned answer, the flat scan of every row."""
     df = kdbush_df(spark)
     idx = build_partition_indexes(df, 6, cols=("x", "y")).cache()
     for q, k in [((50, 50), 10), ((0, 0), 3), ((120, -5), 7)]:
         pruned = [(r.row_id, round(r.dist, 9)) for r in knn_partition_indexes(idx, *q, k).collect()]
-        full = [(r.row_id, round(r.dist, 9)) for r in knn_partition_indexes(idx, *q, k, prune=False).collect()]
+        full = [(r.row_id, round(r.dist, 9)) for r in knn(df, *q, k).collect()]
         assert pruned == full, f"q={q} k={k}"
     idx.unpersist()
 
 
 def test_indexed_knn_max_distance(spark):
     """max_distance threads through partition prune + local heap +
-    merge; pruned == unpruned == plain knn (reference
-    src/rtree/trait.rs:261 inclusive semantics)."""
+    merge; indexed == plain knn (reference src/rtree/trait.rs:261
+    inclusive semantics)."""
     df = kdbush_df(spark)
     idx = build_partition_indexes(df, 4, cols=("x", "y"))
     want = [
         (r.row_id, round(r.dist, 9))
         for r in knn(df, 50.0, 50.0, 20, max_distance=15.0, cols=("x", "y")).collect()
     ]
-    for prune in (True, False):
-        got = [
-            (r.row_id, round(r.dist, 9))
-            for r in knn_partition_indexes(
-                idx, 50.0, 50.0, 20, max_distance=15.0, prune=prune
-            ).collect()
-        ]
-        assert got == want
+    got = [
+        (r.row_id, round(r.dist, 9))
+        for r in knn_partition_indexes(idx, 50.0, 50.0, 20, max_distance=15.0).collect()
+    ]
+    assert got == want
     assert 0 < len(want) <= 20
     assert all(d <= 15.0 for _, d in want)
 
@@ -258,7 +257,7 @@ def test_indexed_knn_haversine_dateline_prune(spark):
     """Haversine knn_partition_indexes on a +-180 cluster split into
     several partitions: the partition prune uses the wrap-aware box
     bound, so a query on one side of the line still reaches the
-    partitions on the other side, and pruned == unpruned == brute
+    partitions on the other side, and the result equals numpy brute
     force (ids exact, distances to 1e-6 m)."""
     from geo_index_spark.localindex.flatbush import haversine
 
@@ -272,9 +271,47 @@ def test_indexed_knn_haversine_dateline_prune(spark):
     for qx, qy, k in [(179.99, 70.0, 8), (-179.99, 61.0, 5), (180.0, 80.0, 12)]:
         d = haversine(qx, qy, lon, lat)
         want_ids = list(np.lexsort((np.arange(len(d)), d))[:k])
-        for prune in (True, False):
-            got = knn_partition_indexes(idx, qx, qy, k, metric="haversine", prune=prune).collect()
-            assert [r.row_id for r in got] == want_ids, (qx, qy, prune)
-            assert np.allclose([r.dist for r in got], d[want_ids], rtol=0, atol=1e-6)
+        got = knn_partition_indexes(idx, qx, qy, k, metric="haversine").collect()
+        assert [r.row_id for r in got] == want_ids, (qx, qy)
+        assert np.allclose([r.dist for r in got], d[want_ids], rtol=0, atol=1e-6)
         assert any(lon[i] < 0 for i in want_ids) and any(lon[i] > 0 for i in want_ids)
     idx.unpersist()
+
+
+def test_indexed_knn_ties_match_flat_knn(spark):
+    """Ties at the kth distance go to the smaller row id, as in the
+    flat scan: a unit lattice whose ids run against insertion order,
+    queried at lattice points and cell centres (up to 8 rights at the
+    kth distance), over hilbert and STR point blobs in 1 and 4
+    partitions. A probe that cut ties by in-blob position would return
+    a larger id."""
+    pts = [(999 - (20 * i + j), float(i), float(j)) for i in range(20) for j in range(20)]
+    df = spark.createDataFrame(pts, "row_id long, x double, y double")
+    queries = [(5.0, 5.0, 2), (5.0, 5.0, 4), (5.5, 5.5, 3), (10.5, 3.5, 4), (0.0, 0.0, 2), (19.5, 0.5, 1), (12.0, 7.0, 7)]
+    want = {
+        q: [(r.row_id, r.dist) for r in knn(df, q[0], q[1], q[2]).collect()] for q in queries
+    }
+    for sort_method in ("hilbert", "str"):
+        for p in (1, 4):
+            idx = build_partition_indexes(df, p, cols=("x", "y"), sort_method=sort_method).cache()
+            for q in queries:
+                got = [(r.row_id, r.dist) for r in knn_partition_indexes(idx, *q).collect()]
+                assert got == want[q], (sort_method, p, q)
+            idx.unpersist()
+
+
+def test_indexed_knn_rejects_kd_blobs_on_driver(spark):
+    """kd blobs hold no flatbush tree: the probe's stats collect reads
+    the magic byte and raises ValueError before any probe job runs."""
+    sc = spark.sparkContext
+    idx = build_partition_indexes(kdbush_df(spark), 4, cols=("x", "y"), tree_type="kdtree")
+    idx = idx.localCheckpoint()
+    group = "test_indexed_knn_rejects_kd_blobs_on_driver"
+    sc.setJobGroup(group, "kNN probe over kd blobs")
+    try:
+        with pytest.raises(ValueError, match="kdbush blobs"):
+            knn_partition_indexes(idx, 50.0, 50.0, 5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1  # the stats collect only

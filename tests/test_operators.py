@@ -861,7 +861,7 @@ def _brute_knn_join(lpts, rpts, k, metric="euclidean", max_d=None):
         order = np.lexsort((rid[0], d[i]))
         if max_d is not None:
             order = order[d[i][order] <= max_d]
-        out.extend((int(lid[i, 0]), int(rid[0, j]), round(float(d[i, j]), 6)) for j in order[:k])
+        out.extend((int(lid[i, 0]), rid[0, j].item(), round(float(d[i, j]), 6)) for j in order[:k])
     return sorted(out)
 
 
@@ -897,30 +897,33 @@ def test_knn_join_probe_edge_cases_both_callers(spark, monkeypatch, case):
     forced by a tiny init_radius (round 0 certifies nobody, round 1
     probes the survivors with their certified radii). A zero
     max_distance is the cover radius itself, so there every left
-    certifies in round 0 and the tail never reaches the probe."""
+    certifies in round 0 and the tail never reaches the probe. The ties
+    run again with string right ids whose order runs against the
+    numeric one, so the (dist, right_id) cut must rank the strings."""
     from geo_index_spark.operators.knn import knn_join
 
     name, lpts, rpts, k, metric, max_d = case
     ldf = spark.createDataFrame(lpts, "row_id long, x double, y double")
-    rdf = spark.createDataFrame(rpts, "row_id long, x double, y double")
-    want = _brute_knn_join(lpts, rpts, k, metric, max_d)
+    sides = [("long", rpts)]
+    if name == "ties":
+        sides.append(("string", [(f"r{999 - rid:03d}", x, y) for rid, x, y in rpts]))
     calls = _spy_knn_probe(monkeypatch)
-    for init_radius in (None, 1e-9):
-        calls.clear()
-        got = sorted(
-            (r.left_id, r.right_id, round(r.dist, 6))
-            for r in knn_join(
-                ldf, rdf, k, metric=metric, max_distance=max_d, init_radius=init_radius
-            ).collect()
-        )
-        assert got == want, (name, init_radius)
-        routed = [("r" in lefts.columns, len(lefts)) for lefts, _ in calls]
-        if init_radius is None:
-            assert routed == [(False, len(lpts))], name
-        elif max_d == 0.0:
-            assert routed == [], name
-        else:
-            assert len(routed) == 1 and routed[0][0], (name, routed)
+    for id_type, rows in sides:
+        rdf = spark.createDataFrame(rows, f"row_id {id_type}, x double, y double")
+        want = _brute_knn_join(lpts, rows, k, metric, max_d)
+        for init_radius in (None, 1e-9):
+            calls.clear()
+            out = knn_join(ldf, rdf, k, metric=metric, max_distance=max_d, init_radius=init_radius)
+            assert out.schema["right_id"].dataType == rdf.schema["row_id"].dataType
+            got = sorted((r.left_id, r.right_id, round(r.dist, 6)) for r in out.collect())
+            assert got == want, (name, id_type, init_radius)
+            routed = [("r" in lefts.columns, len(lefts)) for lefts, _ in calls]
+            if init_radius is None:
+                assert routed == [(False, len(lpts))], name
+            elif max_d == 0.0:
+                assert routed == [], name
+            else:
+                assert len(routed) == 1 and routed[0][0], (name, routed)
 
 
 def test_knn_join_skewed_density_parity(spark):
@@ -1482,6 +1485,37 @@ def test_knn_join_empty_sides(spark):
         out = knn_join(ldf, rdf, 3)
         assert [f.name for f in out.schema.fields] == ["left_id", "right_id", "dist"]
         assert out.count() == 0
+
+
+# Spark jobs of a small-left knn_join with the result collected: the
+# right bounds, the LIMIT probe of the lefts, the slice index build and
+# its checkpoint, the one stats collect and the ranked result. Taking
+# the left bounds first, and counting the slices in a groupBy job of
+# their own, made 13 jobs and 19 stages here.
+MAX_SMALL_LEFT_KNN_JOBS = 12
+
+
+def test_knn_join_small_left_job_count(spark):
+    sc = spark.sparkContext
+    rng = np.random.default_rng(5)
+    cities = rng.uniform(-60, 60, (20, 2))
+    rxy = cities[rng.integers(0, 20, 20_000)] + rng.normal(0, 0.5, (20_000, 2))
+    lxy = rng.uniform(-60, 60, (200, 2))
+    schema = "row_id long, x double, y double"
+    rdf = spark.createDataFrame([(i, float(x), float(y)) for i, (x, y) in enumerate(rxy)], schema)
+    ldf = spark.createDataFrame([(i, float(x), float(y)) for i, (x, y) in enumerate(lxy)], schema)
+    from geo_index_spark.operators.knn import knn_join
+
+    group = "test_knn_join_small_left_job_count"
+    sc.setJobGroup(group, "knn_join, 200 lefts over 20k rights")
+    try:
+        got = knn_join(ldf, rdf, 3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(got) == 600 and len({r.left_id for r in got}) == 200
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= MAX_SMALL_LEFT_KNN_JOBS, len(jobs)
 
 
 def test_knn_join_right_count_hint(spark):
